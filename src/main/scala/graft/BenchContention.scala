@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Multi-writer contention bench (verdict r18 #3): measure the claim
@@ -32,18 +31,9 @@ import org.apache.spark.sql.functions._
 object BenchContention {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val writers = sys.env.getOrElse("SPARK_GRAFT_WRITERS", "4").toInt
-    val gensPer = sys.env.getOrElse("SPARK_GRAFT_GENS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // driver-side partition-dir listing on local fs (r21, see Bench)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_PAR_THRESHOLD", "10000"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val writers = 4
+    val gensPer = 3
+    val spark = GraftSession(sfDir)
 
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id").as("id"), col("embedding").as("vector"))

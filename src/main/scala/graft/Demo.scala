@@ -2,8 +2,6 @@ package graft
 
 import scala.util.Random
 
-import org.apache.spark.sql.SparkSession
-
 import graft.api.Vicinity
 import graft.core.{Backend, BackendArgs, Metric}
 
@@ -13,11 +11,8 @@ import graft.core.{Backend, BackendArgs, Metric}
   */
 object Demo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // every file the walkthrough reads or writes is local
+    val spark = GraftSession(sys.props("java.io.tmpdir"))
 
     val rnd = new Random(42)
     val n = 2000; val dim = 16

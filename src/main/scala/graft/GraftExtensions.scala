@@ -8,13 +8,12 @@ import graft.functions._
   * as SQL functions at session build time —
   *
   * {{{
-  * SparkSession.builder()
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
-  *   ...
+  * spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * after which `SELECT cosine_distance(a.embedding, b.embedding) ...` works
-  * in plain SQL on any session, no imperative registration call needed.
+  * in the session's conf, after which
+  * `SELECT cosine_distance(a.embedding, b.embedding) ...` works in plain
+  * SQL on any session, no imperative registration call needed.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {

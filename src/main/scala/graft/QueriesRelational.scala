@@ -424,9 +424,10 @@ object QueriesRelational {
       // partitions, so the 4×-amplified melt + register hashing ran
       // near-serial; every aggregate here is order-free (long counts,
       // exact distinct, register max), so the parallelism floor is safe
-      // project the 4 profiled columns BEFORE the widen exchange (guide
-      // §2.3: the r20 shape repartitioned all 16 lineitem columns only to
-      // stack 4 of them — the exchange carried 4× the bytes it needed)
+      // the 4 profiled columns are projected before the widen exchange;
+      // Catalyst's column pruning already did this for the r20 shape
+      // (plans/r21/q_data_profile_sketch_{before,after}.txt differ only in
+      // expression ids), so the explicit select is insurance, not a win
       val melted = Queries.widen(t(s, dir, "lineitem")
         .select(cols.map(col): _*)).selectExpr(
         "stack(4, " + cols.map(c => s"'$c', cast($c as string)")

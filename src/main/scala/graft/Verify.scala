@@ -1,28 +1,34 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for a DuckDB oracle compare.
+  *
+  * Usage: runMain graft.Verify <sfDir> <outDir> [q_a,q_b,...]
+  * then:  python3 tools/check_oracle.py <sfDir> <outDir>
+  *
+  * The optional third argument runs only the named queries — the fast
+  * iteration loop when one oracle is under repair (a full correctness
+  * run passes exactly two args). A filtered run keeps the outDir
+  * self-consistent (advice r8): dumps left by an earlier run with a
+  * different filter are deleted, so check_oracle.py only ever sees dumps
+  * whose SQL is in the fresh oracle_sql.json. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    // optional 3rd arg: comma-separated query-name filter (local dev
-    // loop — run ONE query + its oracle instead of the full surface;
-    // the driver always passes exactly two args)
     val (sfDir, outDir, only) = args match {
       case Array(a, b)    => (a, b, None)
       case Array(a, b, c) => (a, b, Some(c.split(",").toSet))
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // driver-side partition-dir listing on local fs (r21, see Bench)
-      .config("spark.sql.sources.parallelPartitionDiscovery.threshold",
-        sys.env.getOrElse("SPARK_GRAFT_LIST_PAR_THRESHOLD", "10000"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    only.foreach(names => require(names.forall(SparkEntry.queries.contains),
+      s"unknown queries: ${names.filterNot(SparkEntry.queries.contains).mkString(",")}"))
+    val spark = GraftSession(sfDir)
+    val out = new java.io.File(outDir)
+    out.mkdirs()
+    // Only reclaim directories that are recognizably prior dumps (named
+    // after a declared query); unrelated content in a shared outDir is
+    // left alone (advice r9).
+    only.foreach(names => Option(out.listFiles()).getOrElse(Array.empty)
+      .filter(f => f.isDirectory && !names(f.getName) &&
+        SparkEntry.queries.contains(f.getName))
+      .foreach(VerifyIO.deleteRec))
     val selected = only.fold(SparkEntry.queries)(names =>
       SparkEntry.queries.filter(kv => names(kv._1)))
     selected.foreach { case (name, fn) =>

@@ -1,7 +1,7 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Shared plumbing for the correctness dumpers ([[Verify]], [[VerifyOne]]):
-  * one JSON escape + oracle_sql.json writer (advice r8 — two drifting copies
+/** Shared plumbing for the harness ([[Verify]], [[Bench]]): one JSON
+  * escape + oracle_sql.json writer (advice r8 — two drifting copies
   * before) and recursive dump deletion. */
 private[graft] object VerifyIO {
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)

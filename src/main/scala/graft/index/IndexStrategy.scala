@@ -137,11 +137,12 @@ object IndexStrategy {
   * (`basic.py:168`); `true` serves FAISS `flat`, whose `range_search` path
   * filters with strict `<` (`faiss.py:180-183`). Both ignore `max_k`
   * (`basic.py:163-172` never reads it; range search is uncapped).
-  */
-/** `annThreshold = true` serves a backend whose reference threshold path is
+  *
+  * `annThreshold = true` serves a backend whose reference threshold path is
   * "top-max_k then strict `<` mask" (the HNSW-family shape, e.g.
   * `usearch.py:131-139`) with the exact kernel — used where a metric has no
-  * LSH family but the backend's semantics are the ANN ones. */
+  * LSH family but the backend's semantics are the ANN ones.
+  */
 case class ExactStrategy(metric: Metric, strictThreshold: Boolean = false,
     annThreshold: Boolean = false)
   extends IndexStrategy {

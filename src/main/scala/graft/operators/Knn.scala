@@ -20,16 +20,14 @@ import graft.functions.{TopK, VectorFunctions}
   */
 object Knn {
 
-  /** Broadcast-join each query against the full store and compute distance.
-    * `store` must have (`id`, `vecCol`); `queries` must have (`query_id`,
-    * `qvecCol`). Output: query_id, id, dist (clipped ≥ 0 per
-    * `vicinity.py:135`).
-    */
-  /** Raw pair distances. For metrics that are mathematically >= 0 the
-    * clip-to-zero is applied here as fp-noise canonicalization (stabilizes
-    * tie order); for InnerProduct the distance is genuinely signed, so
-    * selection must rank the RAW value — the reference clips only the
-    * final, already-sorted output (`vicinity.py:135`). */
+  /** Broadcast-join each query against the full store and compute the raw
+    * pair distances. `store` must have (`id`, `vecCol`); `queries` must
+    * have (`query_id`, `qvecCol`). Output: query_id, id, dist. For metrics
+    * that are mathematically >= 0 the clip-to-zero is applied here as
+    * fp-noise canonicalization (stabilizes tie order); for InnerProduct
+    * the distance is genuinely signed, so selection must rank the RAW
+    * value — the reference clips only the final, already-sorted output
+    * (`vicinity.py:135`). */
   private def pairDistances(store: DataFrame, queries: DataFrame,
       metric: Metric, vecCol: String, qvecCol: String): DataFrame = {
     val raw = VectorFunctions.distance(metric)(col(vecCol), col(qvecCol))

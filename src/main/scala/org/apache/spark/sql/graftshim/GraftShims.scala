@@ -1,5 +1,6 @@
 package org.apache.spark.sql.graftshim
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.classic.ExpressionUtils
@@ -7,7 +8,8 @@ import org.apache.spark.sql.classic.ExpressionUtils
 /** Minimal bridge to `private[sql]` Spark internals — the standard pattern
   * for Spark extension libraries that define custom Catalyst expressions
   * (Column <-> Expression conversion and session function registration are
-  * not exposed publicly in Spark 4.x).
+  * not exposed publicly in Spark 4.x) — and to the `private[spark]`
+  * listener bus.
   */
 object GraftShims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -18,4 +20,7 @@ object GraftShims {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
   }
+
+  /** Blocks until every listener has seen every event posted so far. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

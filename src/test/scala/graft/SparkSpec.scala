@@ -6,15 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Shared local SparkSession for all suites. */
 object SparkSpec {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "4g")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    // the suites read the testdata and write under the temp dir, both local
+    val s = GraftSession(sys.props("java.io.tmpdir"))
     graft.functions.VectorFunctions.register(s)
     s
   }
