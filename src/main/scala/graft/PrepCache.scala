@@ -13,33 +13,17 @@ import graft.prep.{Dedup, TextFunctions => TF}
   * would re-shingle and re-band the corpus each time; a real pipeline
   * materializes them once per corpus snapshot. Everything cached is
   * deterministic (seeded signatures), so results equal a fresh computation.
-  *
-  * Sessions are held in a WeakHashMap keyed by the session OBJECT (not its
-  * identity hash): when a SparkSession is garbage-collected, its cached
-  * frames drop out of the registry instead of pinning executor storage for
-  * the JVM's lifetime — and a recycled identity hash can never serve one
-  * session a DataFrame bound to another.
+  * Entries live in [[SessionCache]]s, so they die with their session.
   */
 object PrepCache {
 
-  private val perSession =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, DataFrame]]()
-
-  private def cacheOf(s: SparkSession) = perSession.synchronized {
-    var m = perSession.get(s)
-    if (m == null) {
-      m = scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-      perSession.put(s, m)
-    }
-    m
-  }
+  private val frames = new SessionCache[DataFrame]
 
   /** documents shingled once per (session, dir): (doc_id, shingles) with
     * distinct word-3-grams, cached and shared by every near-dup operator */
   def shingledDocs(s: SparkSession, dir: String): DataFrame =
-    cacheOf(s).getOrElseUpdate(s"shingled/$dir", {
-      val docs = s.read.parquet(s"$dir/documents.parquet")
+    frames(s).getOrElseUpdate(s"shingled/$dir", {
+      val docs = Queries.table(s, dir, "documents")
         .withColumn("_words", TF.words(col("text")))
         .select(col("doc_id"), TF.shinglesOfWords(col("_words"), 3).as("shingles"))
         .cache()
@@ -49,7 +33,7 @@ object PrepCache {
 
   /** exact-verified word-3-gram Jaccard >= 0.7 pairs (i, j, jaccard) */
   def minhashPairs(s: SparkSession, dir: String): DataFrame =
-    cacheOf(s).getOrElseUpdate(s"pairs/$dir", {
+    frames(s).getOrElseUpdate(s"pairs/$dir", {
       val pairs = Dedup.minhashDedup(shingledDocs(s, dir), "doc_id", "shingles",
         threshold = 0.7).cache()
       pairs.count()
@@ -63,7 +47,7 @@ object PrepCache {
     * or an iterative propagation, so per-query recomputation is the same
     * waste the pair-set cache exists to avoid */
   def components(s: SparkSession, dir: String): DataFrame =
-    cacheOf(s).getOrElseUpdate(s"components/$dir", {
+    frames(s).getOrElseUpdate(s"components/$dir", {
       val labels = Dedup.connectedComponents(
         minhashPairs(s, dir).select("i", "j")).cache()
       labels.count()
@@ -74,7 +58,7 @@ object PrepCache {
     * doc_ids stand in for "today's batch" (is_new ⇔ doc_id·5 ≥ 4·n —
     * integer arithmetic so the DuckDB oracle derives the identical flag) */
   def flaggedShingledDocs(s: SparkSession, dir: String): DataFrame =
-    cacheOf(s).getOrElseUpdate(s"shingled_flagged/$dir", {
+    frames(s).getOrElseUpdate(s"shingled_flagged/$dir", {
       val docs = shingledDocs(s, dir)
       val n = docs.agg(count(lit(1)).as("_n"))
       val f = docs.crossJoin(org.apache.spark.sql.functions.broadcast(n))
@@ -102,8 +86,8 @@ object PrepCache {
     * the driver-checked configs keep the k = 8 the DuckDB oracle's
     * replayed Lloyd iteration pins. */
   def kmeansClusters(s: SparkSession, dir: String): DataFrame =
-    cacheOf(s).getOrElseUpdate(s"kmeans/$dir", {
-      val emb = s.read.parquet(s"$dir/embeddings.parquet")
+    frames(s).getOrElseUpdate(s"kmeans/$dir", {
+      val emb = Queries.table(s, dir, "embeddings")
       val k = math.max(8L, emb.count() / 8192L).toInt
       val a = graft.prep.Clustering.kmeansAssign(
         emb, "vec_id", "embedding", k = k, iters = 2).cache()
@@ -118,7 +102,7 @@ object PrepCache {
     * corpus²), then exact-Jaccard-verified at >= 0.7 and filtered to
     * cross (bench, corpus) pairs */
   def fuzzyContaminationPairs(s: SparkSession, dir: String): DataFrame =
-    cacheOf(s).getOrElseUpdate(s"fuzzycontam/$dir", {
+    frames(s).getOrElseUpdate(s"fuzzycontam/$dir", {
       val flagged = shingledDocs(s, dir)
         .withColumn("is_bench", col("doc_id") < 20)
         .cache()
@@ -134,7 +118,7 @@ object PrepCache {
   /** exact-verified incremental pair set: Jaccard >= 0.7 pairs with at
     * least one new member — history is never paired against itself */
   def incrementalPairs(s: SparkSession, dir: String): DataFrame =
-    cacheOf(s).getOrElseUpdate(s"incrpairs/$dir", {
+    frames(s).getOrElseUpdate(s"incrpairs/$dir", {
       val pairs = Dedup.incrementalMinhashDedup(flaggedShingledDocs(s, dir),
         "doc_id", "shingles", "is_new", threshold = 0.7).cache()
       pairs.count()
@@ -145,38 +129,30 @@ object PrepCache {
     * production snapshot artifact ([[Dedup.saveSignatureTable]]): written
     * once per (session, dir) to a temp directory and READ BACK, so every
     * consumer downstream provably works from the persisted form, not the
-    * in-memory lineage. */
-  private val sigPaths =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, String]]()
+    * in-memory lineage. Each entry is (loaded table, path it was written
+    * to). */
+  private val sigTables = new SessionCache[(DataFrame, String)]
 
-  /** where [[persistedHistorySignatures]] wrote its snapshot for this
-    * (session, dir) — the doctor query fscks the REAL persisted store,
-    * not a fresh one (zero extra build; either caller materializes it) */
-  def persistedSignaturePath(s: SparkSession, dir: String): String = {
-    persistedHistorySignatures(s, dir) // ensure written
-    sigPaths.synchronized(sigPaths.get(s))(s"sigtable/$dir")
-  }
-
-  def persistedHistorySignatures(s: SparkSession, dir: String): DataFrame =
-    cacheOf(s).getOrElseUpdate(s"sigtable/$dir", {
+  private def sigTable(s: SparkSession, dir: String): (DataFrame, String) =
+    sigTables(s).getOrElseUpdate(dir, {
       val hist = flaggedShingledDocs(s, dir).where(!col("is_new"))
       // session-scoped scratch artifact, reclaimed at JVM exit (the
       // scratchDir hook) so repeated bench/verify runs don't accumulate
       val path = VerifyIO.scratchDir("graft_sigs").toString
       Dedup.saveSignatureTable(hist, "doc_id", "shingles", path)
-      sigPaths.synchronized {
-        var m = sigPaths.get(s)
-        if (m == null) {
-          m = scala.collection.concurrent.TrieMap.empty[String, String]
-          sigPaths.put(s, m)
-        }
-        m.put(s"sigtable/$dir", path)
-      }
       val loaded = Dedup.loadSignatureTable(s, path).cache()
       loaded.count()
-      loaded
+      (loaded, path)
     })
+
+  /** where [[persistedHistorySignatures]] wrote its snapshot for this
+    * (session, dir) — the doctor query fscks the REAL persisted store,
+    * not a fresh one (zero extra build; either caller materializes it) */
+  def persistedSignaturePath(s: SparkSession, dir: String): String =
+    sigTable(s, dir)._2
+
+  def persistedHistorySignatures(s: SparkSession, dir: String): DataFrame =
+    sigTable(s, dir)._1
 
   /** [[incrementalPairs]] computed the fully-incremental way: history's
     * bucket keys come from [[persistedHistorySignatures]] (no re-shingle,
@@ -184,7 +160,7 @@ object PrepCache {
     * Same deterministic output as [[incrementalPairs]] — same hash family,
     * same banding — which is exactly the property the oracle checks. */
   def incrementalPairsPersisted(s: SparkSession, dir: String): DataFrame =
-    cacheOf(s).getOrElseUpdate(s"incrpairs_persisted/$dir", {
+    frames(s).getOrElseUpdate(s"incrpairs_persisted/$dir", {
       val flagged = flaggedShingledDocs(s, dir)
       val pairs = Dedup.incrementalMinhashDedupPersisted(
         flagged.where(col("is_new")),

@@ -15,6 +15,11 @@ import graft.operators.Knn
   *    number of decimals in BOTH the Spark plan and the oracle SQL;
   *  - every ranking is canonicalized with tie-break on the row id;
   *  - count-like columns are long in both engines.
+  *
+  * Library conventions for query bodies:
+  *  - a plain exact kNN goes through [[graft.operators.Knn.query]];
+  *  - a top-n by descending score goes through [[graft.functions.TopK.topNByScore]];
+  *  - a session-scoped cache is a [[SessionCache]].
   */
 object Queries {
 
@@ -22,7 +27,8 @@ object Queries {
       fn: (SparkSession, String) => DataFrame,
       oracle: Option[String])
 
-  private def table(s: SparkSession, dir: String, name: String): DataFrame =
+  /** a base table of the data dir, read through [[readTable]] */
+  private[graft] def table(s: SparkSession, dir: String, name: String): DataFrame =
     readTable(s, s"$dir/$name.parquet")
 
   /** Base-table read with a per-(session, path) SCHEMA cache (r21):
@@ -47,25 +53,14 @@ object Queries {
     * every consumer the shape [[eventsTable]] documents regardless of
     * which query reads events first. */
   private val schemaCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        org.apache.spark.sql.types.StructType]]()
+    new SessionCache[org.apache.spark.sql.types.StructType]
 
   private[graft] def readTable(s: SparkSession, path: String): DataFrame = {
     if (path.endsWith("/events.parquet")) {
       s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
     }
-    val cache = schemaCache.synchronized {
-      var m = schemaCache.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent
-          .TrieMap.empty[String, org.apache.spark.sql.types.StructType]
-        schemaCache.put(s, m)
-      }
-      m
-    }
-    val sch = cache.getOrElseUpdate(path, s.read.parquet(path).schema)
+    val sch = schemaCache(s).getOrElseUpdate(path, s.read.parquet(path).schema)
     s.read.schema(sch).parquet(path)
   }
 
@@ -114,11 +109,12 @@ object Queries {
   }
 
   /** embeddings as an (id, vector) store */
-  private def store(s: SparkSession, dir: String): DataFrame =
+  private[graft] def store(s: SparkSession, dir: String): DataFrame =
     table(s, dir, "embeddings")
       .select(col("vec_id").as("id"), col("embedding").as("vector"))
 
-  private def queriesDf(s: SparkSession, dir: String, n: Int): DataFrame =
+  /** the first `n` embeddings as (query_id, qvector) */
+  private[graft] def queriesDf(s: SparkSession, dir: String, n: Int): DataFrame =
     table(s, dir, "embeddings").where(col("vec_id") < n)
       .select(col("vec_id").as("query_id"), col("embedding").as("qvector"))
 
@@ -205,6 +201,7 @@ object Queries {
     * expressions the DataFrame API uses. */
   private val qSqlKnn = Q("q_sql_knn",
     (s, dir) => {
+      // not Knn.query: this query is the SQL surface by design
       table(s, dir, "embeddings").createOrReplaceTempView("emb")
       s.sql("""
         WITH store AS (

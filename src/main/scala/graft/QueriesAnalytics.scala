@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Queries.Q
+import graft.Queries.{Q, table => t}
 import graft.operators.{AsofJoin, RangeJoin}
 
 /** Advanced analytics operators: as-of join, sessionization, pivot,
@@ -12,9 +12,6 @@ import graft.operators.{AsofJoin, RangeJoin}
   * relational core.
   */
 object QueriesAnalytics {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    graft.Queries.readTable(s, s"$dir/$name.parquet")
 
   private def events(s: SparkSession, dir: String): DataFrame =
     Queries.eventsTable(s, dir)

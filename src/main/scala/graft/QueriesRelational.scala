@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Queries.Q
+import graft.Queries.{Q, table => t}
 
 /** Relational data-prep operators over the TPC-H-ish testdata (SURVEY.md
   * §2.4): scans, filters, equi/semi/anti joins, aggregation, windows, set
@@ -12,9 +12,6 @@ import graft.Queries.Q
   * determinism conventions in [[Queries]].
   */
 object QueriesRelational {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    graft.Queries.readTable(s, s"$dir/$name.parquet")
 
   /** events with `ts_s` (exact epoch seconds) and `ts_t` (timestamp) —
     * schema-adaptive across testdata generations, see

@@ -4,16 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.Queries.Q
+import graft.Queries.{Q, table => t}
 import graft.prep.{Dedup, TextFunctions => TF}
 
 /** Text-analysis + dedup operators over the documents table (the
   * training-data-pipeline surface from BASELINE.json's north star).
   */
 object QueriesText {
-
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    graft.Queries.readTable(s, s"$dir/$name.parquet")
 
   /** DuckDB literal list of [[TF.stopwords]] — shared with
     * [[QueriesPipeline]]'s oracles so there is exactly one rendering */
@@ -1163,29 +1160,17 @@ object QueriesText {
     * + hash agg per round; the argmax is a TakeOrdered 1-row driver pull
     * per round (bounded like token-budget's histogram pulls); the merge
     * rewrite is a row-local [[TF.bpeMergeFold]], no join, no window. */
-  /** learned-merge registry, mirroring PrepCache's weak-map pattern:
-    * q_bpe_merges and q_bpe_apply both need the trained merge list (a
-    * production pipeline materializes the tokenizer-training output
-    * once); keyed per session so a GC'd session drops its entry.
-    * Deterministic (argmax with a total tie-order), so a cache hit
-    * equals a fresh training run. */
-  private val bpeMergeCache =
-    new java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String,
-        Seq[(Long, String, String, Long)]]]()
+  /** learned-merge registry: q_bpe_merges and q_bpe_apply both need the
+    * trained merge list (a production pipeline materializes the
+    * tokenizer-training output once); keyed per session so a GC'd session
+    * drops its entry. Deterministic (argmax with a total tie-order), so a
+    * cache hit equals a fresh training run. */
+  private val bpeMergeCache = new SessionCache[Seq[(Long, String, String, Long)]]
 
   private def cachedBpeMerges(s: SparkSession, dir: String, rounds: Int)
-      : Seq[(Long, String, String, Long)] = {
-    val m = bpeMergeCache.synchronized {
-      var c = bpeMergeCache.get(s)
-      if (c == null) {
-        c = scala.collection.concurrent.TrieMap.empty
-        bpeMergeCache.put(s, c)
-      }
-      c
-    }
-    m.getOrElseUpdate(s"$dir/$rounds", learnBpeMerges(s, dir, rounds))
-  }
+      : Seq[(Long, String, String, Long)] =
+    bpeMergeCache(s).getOrElseUpdate(s"$dir/$rounds",
+      learnBpeMerges(s, dir, rounds))
 
   private def learnBpeMerges(s: SparkSession, dir: String, rounds: Int)
       : Seq[(Long, String, String, Long)] = {

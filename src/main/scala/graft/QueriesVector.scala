@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Queries.Q
+import graft.Queries.{Q, queriesDf, store, table => t}
 import graft.core.Metric
 import graft.functions.VectorFunctions._
 import graft.index.{BqStrategy, HnswStrategy, IvfPqStrategy, IvfSq8Strategy, IvfStrategy, LshStrategy, NnDescentStrategy, OpqStrategy, PqStrategy, Sq8Strategy}
@@ -16,13 +16,6 @@ import graft.operators.Knn
   */
 object QueriesVector {
 
-  private def t(s: SparkSession, dir: String, name: String): DataFrame =
-    graft.Queries.readTable(s, s"$dir/$name.parquet")
-
-  private def store(s: SparkSession, dir: String): DataFrame =
-    t(s, dir, "embeddings")
-      .select(col("vec_id").as("id"), col("embedding").as("vector"))
-
   /** Id bound for the EXACT all-pairs anchor queries (q_knn_selfjoin,
     * q_knn_outliers, q_embed_neardup — verdict r18 #2): an exact
     * self-join is O(n²) by contract, so its bench entry must measure a
@@ -33,10 +26,6 @@ object QueriesVector {
     * is the ANN router (q_knn_selfjoin_ivf / Knn.selfJoinAuto). */
   private val exactAnchorIds = 2000
 
-  private def queriesDf(s: SparkSession, dir: String, n: Int): DataFrame =
-    t(s, dir, "embeddings").where(col("vec_id") < n)
-      .select(col("vec_id").as("query_id"), col("embedding").as("qvector"))
-
   /** Build-once-query-many index registry: an ANN index is built ONCE per
     * (session, sf-dir, config) and every query against that config reuses
     * the trained strategy + cached prepared frame — the realistic engine
@@ -44,29 +33,14 @@ object QueriesVector {
     * query from it; retraining per query would be the unrealistic plan).
     * Everything cached is deterministic (seeded KMeans/Lloyd's/planes), so
     * results are identical to a fresh build. */
-  // WeakHashMap keyed by the session OBJECT: caches die with their session
-  // (no executor storage pinned for the JVM lifetime, no identity-hash
-  // recycling serving one session a frame bound to a stopped one)
-  private val storeCaches = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, DataFrame]]()
-  private val indexCaches = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, (graft.index.IndexStrategy, DataFrame)]]()
-
-  private def mapOf[T](holder: java.util.WeakHashMap[SparkSession,
-      scala.collection.concurrent.TrieMap[String, T]], s: SparkSession) =
-    holder.synchronized {
-      var m = holder.get(s)
-      if (m == null) {
-        m = scala.collection.concurrent.TrieMap.empty[String, T]
-        holder.put(s, m)
-      }
-      m
-    }
+  private val storeCaches = new SessionCache[DataFrame]
+  private val indexCaches =
+    new SessionCache[(graft.index.IndexStrategy, DataFrame)]
 
   /** one cached store scan per (session, sf dir), shared by every index
     * build — each strategy's prepare runs count/dim/sample jobs against it */
   private def cachedStore(s: SparkSession, dir: String): DataFrame =
-    mapOf(storeCaches, s).getOrElseUpdate(dir, {
+    storeCaches(s).getOrElseUpdate(dir, {
       val df = store(s, dir)
         .withColumn("vector", col("vector").cast("array<double>")).cache()
       df.count()
@@ -75,22 +49,21 @@ object QueriesVector {
 
   private def preparedIndex(s: SparkSession, dir: String, key: String)(
       mk: => graft.index.IndexStrategy): (graft.index.IndexStrategy, DataFrame) =
-    mapOf(indexCaches, s).getOrElseUpdate(s"$dir/$key", {
+    indexCaches(s).getOrElseUpdate(s"$dir/$key", {
       val strat = mk
       val prepared = strat.prepare(cachedStore(s, dir)).cache()
       prepared.count()
       (strat, prepared)
     })
 
-  private val gtCaches = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, DataFrame]]()
+  private val gtCaches = new SessionCache[DataFrame]
 
   /** exact cosine top-k, computed ONCE per (session, dir, n, k) and shared:
     * `q_knn_cosine` serves its output from here and `q_evaluate` grades
     * every ANN strategy against the same frame — the verdict-r2 trim (the
     * ground-truth pass was the single most expensive piece of evaluate).
     * Cached frames are never explicitly unpersisted (advice r3): the
-    * WeakHashMap drops them with the session, and the bench/verify
+    * [[SessionCache]] drops them with the session, and the bench/verify
     * harnesses touch ONE sf dir per session with a handful of (n, k)
     * pairs, so the pinned storage is bounded at a few k·n rows. A
     * long-lived multi-dir session should call `spark.catalog.clearCache()`
@@ -102,7 +75,7 @@ object QueriesVector {
     * q_knn_cosine / cosine-evaluate sharing survives the r8 metric grid */
   private[graft] def exactTopK(s: SparkSession, dir: String, n: Int,
       k: Int, metric: Metric): DataFrame =
-    mapOf(gtCaches, s).getOrElseUpdate(
+    gtCaches(s).getOrElseUpdate(
       if (metric == Metric.Cosine) s"$dir/$n/$k"
       else s"$dir/$n/$k/${metric.name}", {
       val df = Knn.query(cachedStore(s, dir),
@@ -528,7 +501,7 @@ object QueriesVector {
     val (strat, prepared) = preparedIndex(s, dir, "lsh32x5")(
       LshStrategy(Metric.Cosine, nTables = 32, nBits = 5))
     val lsh = strat.asInstanceOf[LshStrategy]
-    mapOf(diskIndexCaches, s)
+    diskIndexCaches(s)
       .getOrElseUpdate(s"$dir/lsh32x5/appended", {
         val p = VerifyIO.scratchDir("graft_lsh_app")
           .resolve("index").toString
@@ -611,7 +584,7 @@ object QueriesVector {
     * the oracle is a complete 34-row literal at every scale. */
   val qFsckFleet = Q("q_fsck_fleet",
     (s, dir) => {
-      val root = mapOf(diskIndexCaches, s).getOrElseUpdate(
+      val root = diskIndexCaches(s).getOrElseUpdate(
         s"$dir/fleetroot", {
           val r = VerifyIO.scratchDir("graft_fleet")
             .toString
@@ -684,7 +657,7 @@ object QueriesVector {
       val (strat, prepared) = preparedIndex(s, dir, "lsh32x5")(
         LshStrategy(Metric.Cosine, nTables = 32, nBits = 5))
       val lsh = strat.asInstanceOf[LshStrategy]
-      val path = mapOf(diskIndexCaches, s)
+      val path = diskIndexCaches(s)
         .getOrElseUpdate(s"$dir/lsh32x5/deleted", {
           val p = VerifyIO.scratchDir("graft_lsh_del")
             .resolve("index").toString
@@ -714,7 +687,7 @@ object QueriesVector {
       val (strat, prepared) = preparedIndex(s, dir, "lsh32x5")(
         LshStrategy(Metric.Cosine, nTables = 32, nBits = 5))
       val lsh = strat.asInstanceOf[LshStrategy]
-      val path = mapOf(diskIndexCaches, s)
+      val path = diskIndexCaches(s)
         .getOrElseUpdate(s"$dir/lsh32x5/compacted", {
           val p = VerifyIO.scratchDir("graft_lsh_cmp")
             .resolve("index").toString
@@ -780,7 +753,7 @@ object QueriesVector {
       rerankFactor: Int = 4): IvfPqStrategy = {
     val st = IvfPqStrategy(metric, nlist = 16, nprobe = nprobe,
       m = 8, nbits = 8, rerank = true, rerankFactor = rerankFactor)
-    mapOf(indexCaches, s).get(s"$dir/ivf16x8${metricSfx(metric)}")
+    indexCaches(s).get(s"$dir/ivf16x8${metricSfx(metric)}")
       .map(_._1.asInstanceOf[IvfStrategy])
       .filter(_.isTrained)
       .foreach(i => st.adoptCentroids(i.centroidArray))
@@ -794,7 +767,7 @@ object QueriesVector {
       nprobe: Int = 8, rerankFactor: Int = 4): graft.index.IvfBqStrategy = {
     val st = graft.index.IvfBqStrategy(metric, nlist = 16, nprobe = nprobe,
       rerankFactor = rerankFactor)
-    val m = mapOf(indexCaches, s)
+    val m = indexCaches(s)
     Seq(s"ivf16x8${metricSfx(metric)}", s"ivf16x16${metricSfx(metric)}")
       .flatMap(k => m.get(s"$dir/$k")).map(_._1)
       .collectFirst { case i: IvfStrategy if i.isTrained => i }
@@ -805,7 +778,7 @@ object QueriesVector {
   private def mkIvfSq8(s: SparkSession, dir: String, metric: Metric,
       nprobe: Int = 8): IvfSq8Strategy = {
     val st = IvfSq8Strategy(metric, nlist = 16, nprobe = nprobe)
-    val m = mapOf(indexCaches, s)
+    val m = indexCaches(s)
     Seq(s"ivf16x8${metricSfx(metric)}", s"ivf16x16${metricSfx(metric)}")
       .flatMap(k => m.get(s"$dir/$k")).map(_._1)
       .collectFirst { case i: IvfStrategy if i.isTrained => i }
@@ -1183,7 +1156,7 @@ object QueriesVector {
       val (strat, prepared) = preparedIndex(s, dir, "ivfsq8x16-euclidean")(
         mkIvfSq8(s, dir, Metric.Euclidean, nprobe = 16))
       val sq = strat.asInstanceOf[IvfSq8Strategy]
-      val path = mapOf(diskIndexCaches, s)
+      val path = diskIndexCaches(s)
         .getOrElseUpdate(s"$dir/ivfsq8x16-euclidean/deleted", {
           val p = VerifyIO.scratchDir("graft_sq8del")
             .resolve("index").toString
@@ -1217,7 +1190,7 @@ object QueriesVector {
   val qIvfAppendedKnn = Q("q_ivf_appended_knn",
     (s, dir) => {
       val key = s"$dir/ivf16x16app"
-      val (strat, _) = mapOf(indexCaches, s).getOrElseUpdate(key, {
+      val (strat, _) = indexCaches(s).getOrElseUpdate(key, {
         val st = IvfStrategy(Metric.Cosine, nlist = 16, nprobe = 16)
         val prep = st.prepare(
           cachedStore(s, dir).where(col("id") % 10 < 8)).cache()
@@ -1225,10 +1198,10 @@ object QueriesVector {
         (st, prep)
       })
       val ivf = strat.asInstanceOf[IvfStrategy]
-      val path = mapOf(diskIndexCaches, s).getOrElseUpdate(s"$key/appended", {
+      val path = diskIndexCaches(s).getOrElseUpdate(s"$key/appended", {
         val p = VerifyIO.scratchDir("graft_ivfapp")
           .resolve("index").toString
-        val prep = mapOf(indexCaches, s)(key)._2
+        val prep = indexCaches(s)(key)._2
         ivf.writeServingIndex(prep, p)
         ivf.appendToServing(s, p, prep,
           cachedStore(s, dir).where(col("id") % 10 >= 8))
@@ -1258,7 +1231,7 @@ object QueriesVector {
   val qIvfConcurrentAppend = Q("q_ivf_concurrent_append",
     (s, dir) => {
       val key = s"$dir/ivf16x16conc"
-      val (strat, _) = mapOf(indexCaches, s).getOrElseUpdate(key, {
+      val (strat, _) = indexCaches(s).getOrElseUpdate(key, {
         val st = IvfStrategy(Metric.Cosine, nlist = 16, nprobe = 16)
         val prep = st.prepare(
           cachedStore(s, dir).where(col("id") % 10 < 8)).cache()
@@ -1266,10 +1239,10 @@ object QueriesVector {
         (st, prep)
       })
       val ivf = strat.asInstanceOf[IvfStrategy]
-      val path = mapOf(diskIndexCaches, s).getOrElseUpdate(s"$key/conc", {
+      val path = diskIndexCaches(s).getOrElseUpdate(s"$key/conc", {
         val p = VerifyIO.scratchDir("graft_ivfconc")
           .resolve("index").toString
-        val prep = mapOf(indexCaches, s)(key)._2
+        val prep = indexCaches(s)(key)._2
         ivf.writeServingIndex(prep, p)
         val grownA = ivf.appendToServing(s, p, prep,
           cachedStore(s, dir).where(col("id") % 10 === 8), "writer-A")
@@ -1306,7 +1279,7 @@ object QueriesVector {
   val qIvfFencedMaintenance = Q("q_ivf_fenced_maintenance",
     (s, dir) => {
       val key = s"$dir/ivf16x16fence"
-      val (strat, _) = mapOf(indexCaches, s).getOrElseUpdate(key, {
+      val (strat, _) = indexCaches(s).getOrElseUpdate(key, {
         val st = IvfStrategy(Metric.Cosine, nlist = 16, nprobe = 16)
         val prep = st.prepare(
           cachedStore(s, dir).where(col("id") % 10 < 8)).cache()
@@ -1314,10 +1287,10 @@ object QueriesVector {
         (st, prep)
       })
       val ivf = strat.asInstanceOf[IvfStrategy]
-      val path = mapOf(diskIndexCaches, s).getOrElseUpdate(s"$key/fenced", {
+      val path = diskIndexCaches(s).getOrElseUpdate(s"$key/fenced", {
         val p = VerifyIO.scratchDir("graft_ivffence")
           .resolve("index").toString
-        val prep = mapOf(indexCaches, s)(key)._2
+        val prep = indexCaches(s)(key)._2
         ivf.writeServingIndex(prep, p)
         val grown = ivf.appendToServing(s, p, prep,
           cachedStore(s, dir).where(col("id") % 10 === 8), "fence-writer")
@@ -1375,7 +1348,7 @@ object QueriesVector {
   val qIvfRebuiltKnn = Q("q_ivf_rebuilt_knn",
     (s, dir) => {
       val key = s"$dir/ivf16x16rebuilt"
-      val (strat, _) = mapOf(indexCaches, s).getOrElseUpdate(key, {
+      val (strat, _) = indexCaches(s).getOrElseUpdate(key, {
         val st = IvfStrategy(Metric.Cosine, nlist = 16, nprobe = 16)
         val prep80 = st.prepare(
           cachedStore(s, dir).where(col("id") % 10 < 8)).cache()
@@ -1393,10 +1366,10 @@ object QueriesVector {
         // frame unevaluable for any later reuse (advice r16). The store
         // is small (the embeddings table); keep its blocks alive for as
         // long as the cache entry lives.
-        mapOf(diskIndexCaches, s).update(key, p)
+        diskIndexCaches(s).update(key, p)
         (r.strategy, r.prepared)
       })
-      val path = mapOf(diskIndexCaches, s)(key)
+      val path = diskIndexCaches(s)(key)
       strat.asInstanceOf[IvfStrategy].queryFromDisk(s, path,
         queriesDf(s, dir, 5)
           .withColumn("qvector", col("qvector").cast("array<double>")), 10)
@@ -1422,7 +1395,7 @@ object QueriesVector {
   val qOpqRebuiltKnn = Q("q_opq_rebuilt_knn",
     (s, dir) => {
       val key = s"$dir/opq8x8rebuilt"
-      val (strat, _) = mapOf(indexCaches, s).getOrElseUpdate(key, {
+      val (strat, _) = indexCaches(s).getOrElseUpdate(key, {
         val st = OpqStrategy(Metric.Cosine, m = 8, nbits = 8,
           rerank = true, rerankFactor = 200)
         val prep80 = st.prepare(
@@ -1438,10 +1411,10 @@ object QueriesVector {
         // r.store's checkpoint blocks root r.prepared's lineage — keep
         // them alive for the cache entry's lifetime (the advice-r16
         // unpersist lesson from the IVF rebuild rider)
-        mapOf(diskIndexCaches, s).update(key, p)
+        diskIndexCaches(s).update(key, p)
         (r.strategy, r.prepared)
       })
-      val path = mapOf(diskIndexCaches, s)(key)
+      val path = diskIndexCaches(s)(key)
       strat.asInstanceOf[OpqStrategy].queryFromDisk(s, path,
         queriesDf(s, dir, 5), 10)
         .select(col("query_id"), col("id").as("neighbor_id"),
@@ -1535,7 +1508,7 @@ object QueriesVector {
       val (strat, prepared) = preparedIndex(s, dir, "hnsw16")(
         HnswStrategy(Metric.Cosine))
       val h = strat.asInstanceOf[HnswStrategy]
-      val path = mapOf(diskIndexCaches, s).getOrElseUpdate(s"$dir/hnsw16disk", {
+      val path = diskIndexCaches(s).getOrElseUpdate(s"$dir/hnsw16disk", {
         val p = VerifyIO.scratchDir("graft_hnsw_disk")
           .resolve("index").toString
         h.writeGraphIndex(prepared, p)
@@ -1561,7 +1534,7 @@ object QueriesVector {
       val (strat, prepared) = preparedIndex(s, dir, "hnsw16")(
         HnswStrategy(Metric.Cosine))
       val h = strat.asInstanceOf[HnswStrategy]
-      val path = mapOf(diskIndexCaches, s).getOrElseUpdate(s"$dir/hnsw16disk", {
+      val path = diskIndexCaches(s).getOrElseUpdate(s"$dir/hnsw16disk", {
         val p = VerifyIO.scratchDir("graft_hnsw_disk")
           .resolve("index").toString
         h.writeGraphIndex(prepared, p)
@@ -1589,7 +1562,7 @@ object QueriesVector {
       val (strat, prepared) = preparedIndex(s, dir, "hnsw16")(
         HnswStrategy(Metric.Cosine))
       val h = strat.asInstanceOf[HnswStrategy]
-      val path = mapOf(diskIndexCaches, s).getOrElseUpdate(s"$dir/hnsw16disklbl", {
+      val path = diskIndexCaches(s).getOrElseUpdate(s"$dir/hnsw16disklbl", {
         val p = VerifyIO.scratchDir("graft_hnsw_lbl")
           .resolve("index").toString
         // same graph, labels riding along: the build depends on
@@ -1624,7 +1597,7 @@ object QueriesVector {
       val (strat, prepared) = preparedIndex(s, dir, "hnsw16")(
         HnswStrategy(Metric.Cosine))
       val h = strat.asInstanceOf[HnswStrategy]
-      val path = mapOf(diskIndexCaches, s).getOrElseUpdate(s"$dir/hnsw16diskdel", {
+      val path = diskIndexCaches(s).getOrElseUpdate(s"$dir/hnsw16diskdel", {
         val p = VerifyIO.scratchDir("graft_hnsw_del")
           .resolve("index").toString
         h.writeGraphIndex(prepared, p)
@@ -1909,7 +1882,7 @@ object QueriesVector {
     (s, dir) => {
       val (strat, prepared) = preparedIndex(s, dir, "bq")(
         BqStrategy(Metric.Cosine, rerank = false))
-      val path = mapOf(diskIndexCaches, s).getOrElseUpdate(s"$dir/bq_mih8", {
+      val path = diskIndexCaches(s).getOrElseUpdate(s"$dir/bq_mih8", {
         val p = VerifyIO.scratchDir("graft_bq_mih8")
           .resolve("index").toString
         graft.index.BqStrategy.writeMihIndex(prepared, p, chunkBits = 8)
@@ -1948,7 +1921,7 @@ object QueriesVector {
     * layout. */
   val qMatryoshkaDisk = Q("q_matryoshka_disk",
     (s, dir) => {
-      val path = mapOf(diskIndexCaches, s).getOrElseUpdate(s"$dir/mrl16", {
+      val path = diskIndexCaches(s).getOrElseUpdate(s"$dir/mrl16", {
         val p = VerifyIO.scratchDir("graft_mrl16")
           .resolve("index").toString
         Knn.writeMatryoshkaIndex(
@@ -2012,14 +1985,12 @@ object QueriesVector {
       val gt = exactCosineTopK(s, dir, nq, k)
         .select(col("query_id"), col("id"))
       // each GT member's signature Hamming to its query
-      val pairs = sigs.crossJoin(broadcast(qsigs))
-        .select(col("query_id"), col("id"),
-          VectorFunctions.hamming_packed(col("_sig"), col("_qsig")).as("h"))
+      val pairs = BqStrategy.hammingPairs(sigs, qsigs)
       val gtH = pairs.join(broadcast(gt), Seq("query_id", "id"))
-        .select(col("query_id"), col("id").as("gid"), col("h").as("gh"))
+        .select(col("query_id"), col("id").as("gid"), col("dist").as("gh"))
       val cranks = pairs.join(broadcast(gtH), Seq("query_id"))
-        .where(col("h") < col("gh") ||
-          (col("h") === col("gh") && col("id") < col("gid")))
+        .where(col("dist") < col("gh") ||
+          (col("dist") === col("gh") && col("id") < col("gid")))
         .groupBy("query_id", "gid").agg(count(lit(1)).as("smaller"))
       // GT members with NO smaller pair (coarse rank 1) drop out of the
       // count join — restore them via a left join from the GT frame
@@ -2541,8 +2512,7 @@ object QueriesVector {
     },
     Some(exactCosineOracle(5, " AND s.label % 2 = 0")))
 
-  private val diskIndexCaches = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, String]]()
+  private val diskIndexCaches = new SessionCache[String]
 
   /** write the prepared IVF index to its cell-partitioned disk layout ONCE
     * per (session, dir, key); returns the path (the production shape writes
@@ -2553,7 +2523,7 @@ object QueriesVector {
     // the layout KIND is part of the cache key (advice r13): two queries
     // sharing an index key but differing in `serving` must not silently
     // reuse whichever layout was written first
-    mapOf(diskIndexCaches, s).getOrElseUpdate(
+    diskIndexCaches(s).getOrElseUpdate(
       s"$dir/$key/${if (serving) "serving" else "cells"}", {
       val path = VerifyIO.scratchDir(s"graft_$key")
         .resolve("index").toString
@@ -2604,9 +2574,9 @@ object QueriesVector {
   private val qIvfFilteredKnn = Q("q_ivf_filtered_knn",
     (s, dir) => {
       val key = s"$dir/ivf16x16lbl"
-      val (strat, prepared) = mapOf(indexCaches, s).getOrElseUpdate(key, {
+      val (strat, prepared) = indexCaches(s).getOrElseUpdate(key, {
         val st = IvfStrategy(Metric.Cosine, nlist = 16, nprobe = 16)
-        mapOf(indexCaches, s).get(s"$dir/ivf16x16")
+        indexCaches(s).get(s"$dir/ivf16x16")
           .map(_._1.asInstanceOf[IvfStrategy]).filter(_.isTrained)
           .foreach(i => st.adoptCentroids(i.centroidArray))
         val labeled = t(s, dir, "embeddings").select(
@@ -2657,8 +2627,7 @@ object QueriesVector {
 
   /** one facade (store + serving layout) per (session, sf dir) — the
     * build-once-query-many registry shape, at the `Vicinity` API level */
-  private val facadeCaches = new java.util.WeakHashMap[SparkSession,
-    scala.collection.concurrent.TrieMap[String, (graft.api.Vicinity, String)]]()
+  private val facadeCaches = new SessionCache[(graft.api.Vicinity, String)]
 
   /** Disk radius THROUGH THE PUBLIC FACADE (verdict r12 #3 — the strategy
     * layer served radius/filtered/delete from disk but `Vicinity` exposed
@@ -2700,7 +2669,7 @@ object QueriesVector {
     * the facade radius query and the threshold-shape evaluate query */
   private def facadeIvfEuclid(s: SparkSession,
       dir: String): (graft.api.Vicinity, String) =
-    mapOf(facadeCaches, s).getOrElseUpdate(s"$dir/facade-ivf4-euclid", {
+    facadeCaches(s).getOrElseUpdate(s"$dir/facade-ivf4-euclid", {
       val emb = t(s, dir, "embeddings").select(
         col("vec_id").cast("string").as("item"),
         col("embedding").cast("array<double>").as("vector"))
@@ -2767,7 +2736,7 @@ object QueriesVector {
     * dir) — the graph family's public-API serving face, used by the
     * filtered evaluate query below */
   private def facadeHnsw(s: SparkSession, dir: String): (graft.api.Vicinity, String) =
-    mapOf(facadeCaches, s).getOrElseUpdate(s"$dir/facade-hnsw-cosine", {
+    facadeCaches(s).getOrElseUpdate(s"$dir/facade-hnsw-cosine", {
       val emb = t(s, dir, "embeddings").select(
         col("vec_id").cast("string").as("item"),
         col("embedding").cast("array<double>").as("vector"))
@@ -2830,7 +2799,7 @@ object QueriesVector {
     * many at the `Vicinity` API level (verdict r13 #1: the binary family's
     * disk paths existed but the facade could not reach them) */
   private def facadeBq(s: SparkSession, dir: String): (graft.api.Vicinity, String) =
-    mapOf(facadeCaches, s).getOrElseUpdate(s"$dir/facade-bq-cosine", {
+    facadeCaches(s).getOrElseUpdate(s"$dir/facade-bq-cosine", {
       val emb = t(s, dir, "embeddings").select(
         col("vec_id").cast("string").as("item"),
         col("embedding").cast("array<double>").as("vector"))
@@ -2935,7 +2904,7 @@ object QueriesVector {
     * relationally over the exact cosine ranking. */
   private val qMixedItemsKnn = Q("q_mixed_items_knn",
     (s, dir) => {
-      val (vic, _) = mapOf(facadeCaches, s)
+      val (vic, _) = facadeCaches(s)
         .getOrElseUpdate(s"$dir/facade-mixed-items", {
           val emb = t(s, dir, "embeddings").select(
             when(col("vec_id") % 2 === 0,
@@ -2995,7 +2964,7 @@ object QueriesVector {
     * not the oracle key). */
   private val qBqDeletedRadius = Q("q_bq_deleted_radius",
     (s, dir) => {
-      val (vic, path) = mapOf(facadeCaches, s)
+      val (vic, path) = facadeCaches(s)
         .getOrElseUpdate(s"$dir/facade-bq-deleted", {
           val emb = t(s, dir, "embeddings").select(
             col("vec_id").cast("string").as("item"),
@@ -3050,7 +3019,7 @@ object QueriesVector {
     * append ≡ fresh full build, provably). */
   private val qFacadeInsertedKnn = Q("q_facade_inserted_knn",
     (s, dir) => {
-      val (vic, path) = mapOf(facadeCaches, s)
+      val (vic, path) = facadeCaches(s)
         .getOrElseUpdate(s"$dir/facade-bq-inserted", {
           val emb = t(s, dir, "embeddings")
           val base = emb.where(col("vec_id") % 10 < 8).select(
@@ -3125,6 +3094,7 @@ object QueriesVector {
         .select(col("vec_id").as("query_id"),
           col("embedding").as("qvector"), col("label").as("qlabel"))
       val d = cosine_distance(col("vector"), col("qvector"))
+      // not Knn.query: the pair predicate depends on the query row
       val pairs = st.crossJoin(broadcast(q))
         .where(col("label") =!= col("qlabel"))
         .select(col("query_id"), col("id"),
@@ -3156,6 +3126,7 @@ object QueriesVector {
         .select(col("vec_id").as("query_id"),
           col("embedding").as("qvector"), col("label").as("qlabel"))
       val d = cosine_distance(col("vector"), col("qvector"))
+      // not Knn.query: the label predicates depend on the query row
       val pairs = st.crossJoin(broadcast(q))
         .where(col("id") =!= col("query_id"))
         .select(col("query_id"), col("id"), col("label"), col("qlabel"),
@@ -3259,7 +3230,7 @@ object QueriesVector {
       val (strat, prepared) = preparedIndex(s, dir, "nnd15")(
         NnDescentStrategy(Metric.Cosine))
       val nd = strat.asInstanceOf[NnDescentStrategy]
-      val path = mapOf(diskIndexCaches, s)
+      val path = diskIndexCaches(s)
         .getOrElseUpdate(s"$dir/nnd15/deleted", {
           val p = VerifyIO.scratchDir("graft_nnd_del")
             .resolve("index").toString

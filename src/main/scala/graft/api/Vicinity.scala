@@ -784,21 +784,10 @@ class Vicinity private (
     if (!d.supportsDiskHamming) throw new UnsupportedOperationException(
       s"Backend ${backend.name} (${strategy.name}) does not serve " +
         "Hamming-radius queries from disk.")
-    val truth = (q: DataFrame) => {
-      val pairs = store
-        .select(col("id"),
-          graft.functions.VectorFunctions.pack_sign_bits(
-            col("vector").cast("array<double>")).as("_sig"))
-        .crossJoin(broadcast(q.select(col("query_id"),
-          graft.functions.VectorFunctions.pack_sign_bits(
-            col("qvector").cast("array<double>")).as("_qsig"))))
-        .select(col("query_id"), col("id"),
-          graft.functions.VectorFunctions.hamming_packed(
-            col("_sig"), col("_qsig")).cast("double").as("dist"))
-        .where(col("dist") <= bits)
-      graft.functions.TopK.topKPerGroup(pairs, Seq("query_id"), "id",
-        "dist", maxK)
-    }
+    val truth = (q: DataFrame) =>
+      graft.functions.TopK.topKPerGroup(
+        signHammingPairs(q).where(col("dist") <= bits),
+        Seq("query_id"), "id", "dist", maxK)
     evaluateSetImpl(queryVectors, truth,
       q => d.queryHammingFromDisk(spark, path, q, bits, maxK))
   }
@@ -833,6 +822,15 @@ class Vicinity private (
     evaluateImpl(queryVectors, k, epsilon,
       q => d.queryFilteredFromDisk(spark, path, q, k, predicate),
       gtStore = store.where(predicate))
+  }
+
+  /** the brute packed-sign Hamming scan of the store against `q`:
+    * (query_id, id, dist) — the Hamming evaluations' ground truth */
+  private def signHammingPairs(q: DataFrame): DataFrame = {
+    def signs(v: String) = graft.functions.VectorFunctions.pack_sign_bits(
+      col(v).cast("array<double>"))
+    BqStrategy.hammingPairs(store.select(col("id"), signs("vector").as("_sig")),
+      q.select(col("query_id"), signs("qvector").as("_qsig")))
   }
 
   /** uncapped exact strict-`<` radius truth on the facade's metric —
@@ -873,17 +871,7 @@ class Vicinity private (
       s"Backend ${backend.name} (${strategy.name}) does not serve " +
         "Hamming-radius queries from disk.")
     val q = queriesDf(queryVectors)
-    val pairs = store
-      .select(col("id"),
-        graft.functions.VectorFunctions.pack_sign_bits(
-          col("vector").cast("array<double>")).as("_sig"))
-      .crossJoin(broadcast(q.select(col("query_id"),
-        graft.functions.VectorFunctions.pack_sign_bits(
-          col("qvector").cast("array<double>")).as("_qsig"))))
-      .select(col("query_id"), col("id"),
-        graft.functions.VectorFunctions.hamming_packed(
-          col("_sig"), col("_qsig")).cast("double").as("dist"))
-      .where(col("dist") <= bitsGrid.max)
+    val pairs = signHammingPairs(q).where(col("dist") <= bitsGrid.max)
       .cache()
     pairs.count()
     val cnt = org.apache.spark.sql.functions.count(lit(1))

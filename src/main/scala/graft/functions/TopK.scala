@@ -94,4 +94,20 @@ object TopK {
           col("col.dist").as(distCol),
           (col("_pos") + 1).cast("int").as("rank")): _*)
   }
+
+  /** Top-n rows by DESCENDING `scoreCol`, ties on ascending `idCol`, per
+    * group of `groupCols` — or over the whole frame when `groupCols` is
+    * empty. Returns `groupCols ++ (idCol, scoreCol, rank)` with a 1-based
+    * long rank. The heap keeps the n smallest NEGATED scores, so the map
+    * side ships at most n rows per group and partition and no Window is
+    * ever planned; negation is exact, so the score comes back bit for bit.
+    */
+  def topNByScore(df: DataFrame, idCol: String, scoreCol: String, n: Int,
+      groupCols: Seq[String] = Nil): DataFrame = {
+    val negated = df.select(groupCols.map(col) ++
+      Seq(col(idCol), (-col(scoreCol)).as(scoreCol)): _*)
+    topKPerGroup(negated, groupCols, idCol, scoreCol, n)
+      .select(groupCols.map(col) ++ Seq(col(idCol),
+        (-col(scoreCol)).as(scoreCol), col("rank").cast("long").as("rank")): _*)
+  }
 }

@@ -47,17 +47,16 @@ case class BqStrategy(metric: Metric, rerank: Boolean = true,
     maybeNormalize(queries, "qvector")
       .withColumn("_qsig", VectorFunctions.pack_sign_bits(col("qvector")))
 
+  /** every (row, query) signature pair: (query_id, id, dist) */
+  private def signaturePairs(prepared: DataFrame,
+      queries: DataFrame): DataFrame =
+    BqStrategy.hammingPairs(prepared, packedQueries(queries))
+
   /** coarse pass: Hamming over packed signatures, integer-deterministic */
   private def coarseTopK(prepared: DataFrame, queries: DataFrame,
-      k: Int): DataFrame = {
-    val q = packedQueries(queries)
-    val pairs = prepared.select(col("id"), col("_sig"))
-      .crossJoin(broadcast(q.select(col("query_id"), col("_qsig"))))
-      .select(col("query_id"), col("id"),
-        VectorFunctions.hamming_packed(col("_sig"), col("_qsig"))
-          .cast("double").as("dist"))
-    TopK.topKPerGroup(pairs, Seq("query_id"), "id", "dist", k)
-  }
+      k: Int): DataFrame =
+    TopK.topKPerGroup(signaturePairs(prepared, queries),
+      Seq("query_id"), "id", "dist", k)
 
   /** Tie-INCLUSIVE candidate pool: every store row whose Hamming distance
     * is ≤ the pool-boundary value (the `pool`-th smallest). Hamming over
@@ -69,12 +68,7 @@ case class BqStrategy(metric: Metric, rerank: Boolean = true,
     */
   private def coarseCandidates(prepared: DataFrame, queries: DataFrame,
       pool: Int): DataFrame = {
-    val q = packedQueries(queries)
-    def pairs = prepared.select(col("id"), col("_sig"))
-      .crossJoin(broadcast(q.select(col("query_id"), col("_qsig"))))
-      .select(col("query_id"), col("id"),
-        VectorFunctions.hamming_packed(col("_sig"), col("_qsig"))
-          .cast("double").as("dist"))
+    def pairs = signaturePairs(prepared, queries)
     val boundary = TopK.topKPerGroup(pairs, Seq("query_id"), "id", "dist", pool)
       .groupBy("query_id").agg(max(col("dist")).as("_bound"))
     pairs.join(broadcast(boundary), Seq("query_id"))
@@ -118,16 +112,10 @@ case class BqStrategy(metric: Metric, rerank: Boolean = true,
   /** Exact Hamming radius (inclusive `<= bits`, integer semantics) by
     * brute signature scan; tie-canonical (dist, id) rank capped at maxK. */
   def hammingRadius(prepared: DataFrame, queries: DataFrame, bits: Int,
-      maxK: Int): DataFrame = {
-    val q = packedQueries(queries)
-    val pairs = prepared.select(col("id"), col("_sig"))
-      .crossJoin(broadcast(q.select(col("query_id"), col("_qsig"))))
-      .select(col("query_id"), col("id"),
-        VectorFunctions.hamming_packed(col("_sig"), col("_qsig"))
-          .cast("double").as("dist"))
-      .where(col("dist") <= bits)
-    TopK.topKPerGroup(pairs, Seq("query_id"), "id", "dist", maxK)
-  }
+      maxK: Int): DataFrame =
+    TopK.topKPerGroup(
+      signaturePairs(prepared, queries).where(col("dist") <= bits),
+      Seq("query_id"), "id", "dist", maxK)
 
   /** Multi-index-hashing radius search: the same answer as
     * [[hammingRadius]] — provably, not approximately — computed without a
@@ -613,6 +601,17 @@ case class BqStrategy(metric: Metric, rerank: Boolean = true,
 
 object BqStrategy {
 
+  /** The packed-sign Hamming brute scan: every (id, _sig) store row
+    * against every broadcast (query_id, _qsig) query row, as
+    * (query_id, id, dist) with the integer Hamming distance as a double. */
+  private[graft] def hammingPairs(sigs: DataFrame,
+      qsigs: DataFrame): DataFrame =
+    sigs.select(col("id"), col("_sig"))
+      .crossJoin(broadcast(qsigs.select(col("query_id"), col("_qsig"))))
+      .select(col("query_id"), col("id"),
+        VectorFunctions.hamming_packed(col("_sig"), col("_qsig"))
+          .cast("double").as("dist"))
+
   /** MIH candidate-generation + verify core over bare signature tables —
     * `store` is (id, _sig), `queries` is (query_id, _qsig); returns every
     * (query_id, id, dist) pair with Hamming ≤ bits. `numChunks` is the
@@ -631,24 +630,33 @@ object BqStrategy {
     require(ballR <= 2,
       s"MIH: ball radius $ballR > 2 (bits=$bits over $numChunks chunks)" +
         " — narrow chunks or use a brute Hamming scan")
-    val perWord = 64 / chunkBits
-    val mask = (1L << chunkBits) - 1
-
-    def chunkExtract(sig: String) = array((0 until numChunks).map { c =>
-      shiftrightunsigned(element_at(col(sig), c / perWord + 1),
-        (c % perWord) * chunkBits).bitwiseAND(mask)
-    }: _*)
-
     // store side: (id, _sig, chunk_idx, chunk_val), 1 row per chunk — a
     // narrow generate, no shuffle; at scale this layout is written once
     // and bucketed by (chunk_idx, chunk_val)
     val storeChunks = store
-      .withColumn("_chunks", chunkExtract("_sig"))
+      .withColumn("_chunks", sigChunks("_sig", chunkBits, numChunks))
       .select(col("id"), col("_sig"),
         posexplode(col("_chunks")).as(Seq("chunk_idx", "chunk_val")))
+    mihVerify(storeChunks,
+      mihProbeKeys(queries, chunkBits, numChunks, ballR), bits)
+  }
 
-    // query side: every chunk value within ballR bit-flips of the query's
-    // chunk — 1 / 1+B / 1+B+B(B−1)/2 probes per chunk for ballR 0 / 1 / 2
+  /** a packed signature column split into its `numChunks` chunks */
+  private def sigChunks(sig: String, chunkBits: Int, numChunks: Int) = {
+    val perWord = 64 / chunkBits
+    val mask = (1L << chunkBits) - 1
+    array((0 until numChunks).map { c =>
+      shiftrightunsigned(element_at(col(sig), c / perWord + 1),
+        (c % perWord) * chunkBits).bitwiseAND(mask)
+    }: _*)
+  }
+
+  /** MIH probe keys of (query_id, _qsig) queries: every chunk value within
+    * `ballR` bit-flips of each query chunk — 1 / 1+B / 1+B+B(B−1)/2 probes
+    * per chunk for ballR 0 / 1 / 2 — as (query_id, _qsig, chunk_idx,
+    * chunk_val) */
+  private def mihProbeKeys(queries: DataFrame, chunkBits: Int,
+      numChunks: Int, ballR: Int): DataFrame = {
     val ball = udf { (v: Long) =>
       val out = scala.collection.mutable.ArrayBuffer(v)
       if (ballR >= 1)
@@ -658,22 +666,26 @@ object BqStrategy {
           out += (v ^ (1L << i) ^ (1L << j))
       out.toSeq
     }
-    val probeKeys = queries
-      .withColumn("_chunks", chunkExtract("_qsig"))
+    queries
+      .withColumn("_chunks", sigChunks("_qsig", chunkBits, numChunks))
       .select(col("query_id"), col("_qsig"),
         posexplode(col("_chunks")).as(Seq("chunk_idx", "chunk_val")))
       .withColumn("chunk_val", explode(ball(col("chunk_val"))))
+  }
 
-    val candidates = storeChunks
+  /** store chunk rows equi-joined to the probe keys, each candidate pair
+    * verified once by its full signature: (query_id, id, dist) with
+    * Hamming ≤ bits */
+  private def mihVerify(storeChunks: DataFrame, probeKeys: DataFrame,
+      bits: Int): DataFrame =
+    storeChunks
       .join(broadcast(probeKeys), Seq("chunk_idx", "chunk_val"))
       .select(col("query_id"), col("id"), col("_sig"), col("_qsig"))
       .dropDuplicates("query_id", "id")
-
-    candidates.select(col("query_id"), col("id"),
+      .select(col("query_id"), col("id"),
         VectorFunctions.hamming_packed(col("_sig"), col("_qsig"))
           .cast("double").as("dist"))
       .where(col("dist") <= bits)
-  }
 
   /** Disk layout for MIH serving: the chunk-exploded signature table,
     * PARTITIONED by `_pk = chunk_idx·16 + value-bucket` (bucket = the
@@ -705,14 +717,8 @@ object BqStrategy {
     require(chunkBits > 4 && 64 % chunkBits == 0,
       s"MIH layout: chunkBits must divide 64 and exceed 4, got $chunkBits")
     val numChunks = (dim + chunkBits - 1) / chunkBits
-    val perWord = 64 / chunkBits
-    val mask = (1L << chunkBits) - 1
-    val chunks = array((0 until numChunks).map { c =>
-      shiftrightunsigned(element_at(col("_sig"), c / perWord + 1),
-        (c % perWord) * chunkBits).bitwiseAND(mask)
-    }: _*)
     prepared.select(col("id"), col("_sig"))
-      .withColumn("_chunks", chunks)
+      .withColumn("_chunks", sigChunks("_sig", chunkBits, numChunks))
       .select(col("id"), col("_sig"),
         posexplode(col("_chunks")).as(Seq("chunk_idx", "chunk_val")))
       .withColumn("_pk", col("chunk_idx") * 16 +
@@ -750,31 +756,10 @@ object BqStrategy {
     val ballR = bits / numChunks
     require(ballR <= 2,
       s"MIH: ball radius $ballR > 2 (bits=$bits over $numChunks chunks)")
-    val perWord = 64 / chunkBits
-    val mask = (1L << chunkBits) - 1
-
     val q = queries.select(col("query_id"),
-      graft.functions.VectorFunctions.pack_sign_bits(
+      VectorFunctions.pack_sign_bits(
         col("qvector").cast("array<double>")).as("_qsig"))
-    val qChunks = array((0 until numChunks).map { c =>
-      shiftrightunsigned(element_at(col("_qsig"), c / perWord + 1),
-        (c % perWord) * chunkBits).bitwiseAND(mask)
-    }: _*)
-    val ball = udf { (v: Long) =>
-      val out = scala.collection.mutable.ArrayBuffer(v)
-      if (ballR >= 1)
-        for (i <- 0 until chunkBits) out += (v ^ (1L << i))
-      if (ballR >= 2)
-        for (i <- 0 until chunkBits; j <- (i + 1) until chunkBits)
-          out += (v ^ (1L << i) ^ (1L << j))
-      out.toSeq
-    }
-    val probeKeys = q
-      .withColumn("_chunks", qChunks)
-      .select(col("query_id"), col("_qsig"),
-        posexplode(col("_chunks")).as(Seq("chunk_idx", "chunk_val")))
-      .withColumn("chunk_val", explode(ball(col("chunk_val"))))
-      .cache()
+    val probeKeys = mihProbeKeys(q, chunkBits, numChunks, ballR).cache()
     // driver-side probe enumeration: bounded by the QUERY batch
     // (|q| × chunks × ball ≤ a few thousand keys), never by the store
     val probes = probeKeys.select(col("chunk_idx"), col("chunk_val"))
@@ -794,15 +779,8 @@ object BqStrategy {
     val idx = idxGated
       .where(col("_pk").isin(probePks: _*) &&
         col("chunk_val").isin(probeVals: _*))
-    val candidates = idx
-      .join(broadcast(probeKeys), Seq("chunk_idx", "chunk_val"))
-      .select(col("query_id"), col("id"), col("_sig"), col("_qsig"))
-      .dropDuplicates("query_id", "id")
-    val verified = candidates.select(col("query_id"), col("id"),
-        graft.functions.VectorFunctions.hamming_packed(
-          col("_sig"), col("_qsig")).cast("double").as("dist"))
-      .where(col("dist") <= bits)
-    val out = TopK.topKPerGroup(verified, Seq("query_id"), "id", "dist", maxK)
+    val out = TopK.topKPerGroup(mihVerify(idx, probeKeys, bits),
+      Seq("query_id"), "id", "dist", maxK)
     probeKeys.unpersist()
     out
   }

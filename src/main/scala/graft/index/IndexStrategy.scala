@@ -175,6 +175,7 @@ case class ExactStrategy(metric: Metric, strictThreshold: Boolean = false,
     * Clipping before selection would collapse every dot > 1 row to dist 0
     * and pick among them by id. */
   private def rawPairs(prepared: DataFrame, queries: DataFrame): DataFrame = {
+    // not Knn.query's pairs: cosine here is a normalized inner product
     val q = normalizedQueries(queries)
     val raw = dist(metric)(col("vector"), col("qvector"))
     val d = if (metric == Metric.InnerProduct) raw else greatest(raw, lit(0.0))

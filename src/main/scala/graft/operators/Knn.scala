@@ -97,36 +97,24 @@ object Knn {
       pool: Int, k: Int, metric: Metric = Metric.Cosine,
       vecCol: String = "vector", qvecCol: String = "qvector"): DataFrame = {
     require(coarseDims >= 1, s"coarseDims must be >= 1, got $coarseDims")
-    require(pool >= k, s"pool ($pool) must be >= k ($k)")
-    val coarseStore = store.select(col("id"),
-      slice(col(vecCol), 1, coarseDims).as("_cvec"))
-    val coarseQ = queries.select(col("query_id"),
-      slice(col(qvecCol), 1, coarseDims).as("_cq"))
-    val coarsePairs = coarseStore.crossJoin(broadcast(coarseQ))
-      .select(col("query_id"), col("id"),
-        greatest(VectorFunctions.distance(metric)(col("_cvec"), col("_cq")),
-          lit(0.0)).as("dist"))
-    val cands = TopK.topKPerGroup(coarsePairs, Seq("query_id"), "id", "dist",
-      pool).select("query_id", "id")
-    val exact = cands
-      .join(store.select(col("id"), col(vecCol)), Seq("id"))
-      .join(broadcast(queries.select(col("query_id"), col(qvecCol))),
-        Seq("query_id"))
-      .select(col("query_id"), col("id"),
-        greatest(VectorFunctions.distance(metric)(col(vecCol), col(qvecCol)),
-          lit(0.0)).as("dist"))
-    TopK.topKPerGroup(exact, Seq("query_id"), "id", "dist", k)
+    matryoshkaStages(
+      store.select(col("id"), slice(col(vecCol), 1, coarseDims).as("_prefix")),
+      store.select(col("id"), col(vecCol).as("_vec")),
+      queries, coarseDims, pool, k, metric, qvecCol)
   }
 
-  /** Disk layout for [[matryoshkaRerank]]: the prefix materialized as its
-    * own parquet column, so the coarse pass's 4× scan saving is REAL I/O —
-    * the coarse scan's ReadSchema is (id, _prefix) and never touches the
-    * full vectors (plan-asserted in ScaleDesignSpec); the re-rank reads
-    * (id, vector) for candidate rows only. */
+  /** Disk layout for [[matryoshkaRerank]]: (id, _prefix, vector) with the
+    * prefix materialized as its own parquet column, so the coarse pass's
+    * 4× scan saving is REAL I/O — the coarse scan's ReadSchema is
+    * (id, _prefix) and never touches the full vectors (plan-asserted in
+    * ScaleDesignSpec); the re-rank reads (id, vector) for candidate rows
+    * only. The full vector is always written as `vector`, whatever
+    * `vecCol` it came from. */
   def writeMatryoshkaIndex(store: DataFrame, path: String, coarseDims: Int,
       vecCol: String = "vector"): Unit =
     store.select(col("id"),
-        slice(col(vecCol), 1, coarseDims).as("_prefix"), col(vecCol))
+        slice(col(vecCol), 1, coarseDims).as("_prefix"),
+        col(vecCol).as("vector"))
       .write.mode("overwrite").parquet(path)
 
   /** [[matryoshkaRerank]] served from the [[writeMatryoshkaIndex]] layout —
@@ -136,23 +124,33 @@ object Knn {
       path: String, queries: DataFrame, coarseDims: Int, pool: Int, k: Int,
       metric: Metric = Metric.Cosine,
       qvecCol: String = "qvector"): DataFrame = {
-    require(pool >= k, s"pool ($pool) must be >= k ($k)")
     val idx = spark.read.parquet(path)
+    matryoshkaStages(idx.select(col("id"), col("_prefix")),
+      idx.select(col("id"), col("vector").as("_vec")),
+      queries, coarseDims, pool, k, metric, qvecCol)
+  }
+
+  /** The two matryoshka stages over (id, _prefix) and (id, _vec): the
+    * `pool` nearest by prefix distance per query, then the top k of those
+    * by full-vector distance. */
+  private def matryoshkaStages(prefixes: DataFrame, vectors: DataFrame,
+      queries: DataFrame, coarseDims: Int, pool: Int, k: Int, metric: Metric,
+      qvecCol: String): DataFrame = {
+    require(pool >= k, s"pool ($pool) must be >= k ($k)")
     val coarseQ = queries.select(col("query_id"),
       slice(col(qvecCol), 1, coarseDims).as("_cq"))
-    val coarsePairs = idx.select(col("id"), col("_prefix"))
-      .crossJoin(broadcast(coarseQ))
+    val coarsePairs = prefixes.crossJoin(broadcast(coarseQ))
       .select(col("query_id"), col("id"),
         greatest(VectorFunctions.distance(metric)(col("_prefix"), col("_cq")),
           lit(0.0)).as("dist"))
     val cands = TopK.topKPerGroup(coarsePairs, Seq("query_id"), "id", "dist",
       pool).select("query_id", "id")
     val exact = cands
-      .join(idx.select(col("id"), col("vector")), Seq("id"))
+      .join(vectors, Seq("id"))
       .join(broadcast(queries.select(col("query_id"), col(qvecCol))),
         Seq("query_id"))
       .select(col("query_id"), col("id"),
-        greatest(VectorFunctions.distance(metric)(col("vector"), col(qvecCol)),
+        greatest(VectorFunctions.distance(metric)(col("_vec"), col(qvecCol)),
           lit(0.0)).as("dist"))
     TopK.topKPerGroup(exact, Seq("query_id"), "id", "dist", k)
   }

@@ -125,6 +125,21 @@ class BinaryQuantSpec extends SparkSpec {
     assert(got === want)
   }
 
+  test("a matryoshka layout written from a non-default vecCol serves") {
+    val emb = store.withColumnRenamed("vector", "emb")
+    val root = VerifyIO.scratchDir("graft_mrl_vec_col")
+    val path = root.resolve("index").toString
+    Knn.writeMatryoshkaIndex(emb, path, coarseDims = 16, vecCol = "emb")
+    val fromDisk = Knn.matryoshkaFromDisk(spark, path, queries,
+      coarseDims = 16, pool = 40, k = 10)
+      .as[(Long, Long, Double, Int)].collect().toSet
+    val mem = Knn.matryoshkaRerank(emb, queries, 16, 40, 10, vecCol = "emb")
+      .as[(Long, Long, Double, Int)].collect().toSet
+    assert(fromDisk.nonEmpty)
+    assert(fromDisk === mem)
+    VerifyIO.deleteRec(root.toFile)
+  }
+
   test("matryoshka coarse pass at full width degenerates to exact ranking") {
     // coarseDims = dim makes the coarse ranking THE exact ranking, so even
     // a pool of exactly k must reproduce exact knn — any off-by-one in the

@@ -60,6 +60,20 @@ class HarnessSpec extends AnyFunSuite {
     assert(offenders.isEmpty, s"$builder outside GraftSession: $offenders")
   }
 
+  test("query bodies and caches use the one shared implementation") {
+    val constantGroup = "lit(1).as(\"_g\")"
+    val weakRegistry = "new java.util.WeakHashMap[SparkSession"
+    val main = sources("src/main")
+    val groups = main.filter(p => Files.readString(p).contains(constantGroup))
+    assert(groups.isEmpty,
+      s"$constantGroup (use TopK.topNByScore) in: $groups")
+    val registries = main
+      .filterNot(_.getFileName.toString == "SessionCache.scala")
+      .filter(p => Files.readString(p).contains(weakRegistry))
+    assert(registries.isEmpty,
+      s"$weakRegistry (use SessionCache) in: $registries")
+  }
+
   test("removed harness knobs stay removed") {
     val knobs = Seq("LIST_PAR_THRESHOLD", "WARMUP", "WARMUP_PAR",
       "HEAP_PROBE", "PROFILE_JOBS", "WRITERS", "GENS")

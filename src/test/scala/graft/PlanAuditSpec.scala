@@ -153,14 +153,17 @@ class PlanAuditSpec extends SparkSpec {
     }
   }
 
-  test("q_bm25 / q_rrf_fusion rank without any Window operator") {
-    // verdict r7 #2 regression guard: both queries used to rank through an
-    // unpartitioned Window.orderBy — a single-partition sort of every
-    // per-doc score. They now rank through the TopK bounded-heap aggregate
-    // (constant group key, map-side partial), so the physical plan must
-    // contain ZERO Window operators of any kind.
+  test("queries ranked through TopK / Knn.query plan no Window operator") {
+    // verdict r7 #2 regression guard: q_bm25 and q_rrf_fusion used to rank
+    // through an unpartitioned Window.orderBy — a single-partition sort of
+    // every per-doc score — and q_maxsim(_pruned) / q_hash_embed_knn
+    // through a per-query rank Window. They all rank through the TopK
+    // bounded-heap aggregate now (TopK.topNByScore or Knn.query, map-side
+    // partial), so the physical plan must contain ZERO Window operators
+    // of any kind.
     val dir = "/root/testdata/sf0.001"
-    Seq("q_bm25", "q_rrf_fusion").foreach { name =>
+    Seq("q_bm25", "q_rrf_fusion", "q_retrieval_overlap", "q_hybrid_fusion",
+        "q_hash_embed_knn", "q_maxsim", "q_maxsim_pruned").foreach { name =>
       val plan = Queries.queryMap(name)(spark, dir)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("Window"),
