@@ -242,9 +242,18 @@ object Queries {
     QueriesRelational.all ++ QueriesVector.all ++ QueriesText.all ++
     QueriesAnalytics.all ++ QueriesPipeline.all
 
+  /** sessions whose function registry already holds the kernels */
+  private val kernelsRegistered = new SessionCache[Unit]
+
+  /** Every query, with the kernels registered once per session first —
+    * the session may come from a caller that never built it through
+    * [[GraftSession]]; re-registering per query replaced all twelve
+    * functions (one WARN line each) on every call. */
   def queryMap: Map[String, (SparkSession, String) => DataFrame] =
     all.map(q => q.name -> { (s: SparkSession, dir: String) =>
-      VectorFunctions.register(s); q.fn(s, dir)
+      kernelsRegistered(s).getOrElseUpdate("kernels",
+        VectorFunctions.register(s))
+      q.fn(s, dir)
     }).toMap
 
   def oracleMap: Map[String, String] =

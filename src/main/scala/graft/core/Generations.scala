@@ -95,18 +95,25 @@ object Generations {
     * not a missing-path condition, and rethrows the original failure
     * when no fallback exists (a genuinely absent store must stay
     * loud). */
-  def readSwapSafe(spark: SparkSession, path: String): DataFrame = {
+  def readSwapSafe(spark: SparkSession, path: String): DataFrame =
+    readSwapSafeAs(spark, path, spark.read.parquet(_))
+
+  /** [[readSwapSafe]] through a caller-built reader — e.g. one carrying
+    * the schema an earlier read of the same layout inferred, so a
+    * repeated read skips the schema-inference job */
+  private[graft] def readSwapSafeAs(spark: SparkSession, path: String,
+      read: String => DataFrame): DataFrame = {
     def missing(e: Throwable): Boolean = e match {
       case a: org.apache.spark.sql.AnalysisException =>
         a.getMessage.contains("Path does not exist") ||
           Option(a.getCondition).exists(_.contains("PATH_NOT_FOUND"))
       case _ => false
     }
-    try spark.read.parquet(path)
+    try read(path)
     catch {
       case e: Throwable if missing(e) =>
         Thread.sleep(50L)
-        try spark.read.parquet(path)
+        try read(path)
         catch {
           case e2: Throwable if missing(e2) =>
             val old = new Path(path.stripSuffix("/") + "__old")
@@ -117,15 +124,40 @@ object Generations {
             // swap completed — the live path is back, read it (review
             // r18); only a genuinely absent store rethrows
             if (fs.exists(old))
-              try spark.read.parquet(old.toString)
+              try read(old.toString)
               catch {
-                case e3: Throwable if missing(e3) =>
-                  spark.read.parquet(path)
+                case e3: Throwable if missing(e3) => read(path)
               }
             else
-              try spark.read.parquet(path)
+              try read(path)
               catch { case e4: Throwable if missing(e4) => throw e2 }
         }
+    }
+  }
+
+  /** Write a fresh state for `path`: straight into `path` when nothing
+    * lives there yet; otherwise into the `path + suffix` staging sibling
+    * and then [[swapInto]]. The staging dir is cleared first — a crashed
+    * earlier write may have left partitions there that this write does
+    * not touch, and the swap would promote them. A plain overwrite of
+    * the live path is never an option: dynamic partition overwrite keeps
+    * stale partitions, and a pre-delete would pull files out from under
+    * a plan reading the same layout (rewrite-from-own-read is what
+    * compaction does). `write` fills the directory it is given, sidecar
+    * included, so a promoted directory is born complete. `suffix` is
+    * `__staging` for fresh writes and `__compacting` for compaction
+    * folds. */
+  private[graft] def writeStaged(spark: SparkSession, path: String,
+      suffix: String = "__staging")(write: String => Unit): Unit = {
+    val live = new Path(path)
+    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(live)) write(path)
+    else {
+      val staging = path + suffix
+      val st = new Path(staging)
+      if (fs.exists(st)) fs.delete(st, true)
+      write(staging)
+      swapInto(spark, path, staging)
     }
   }
 

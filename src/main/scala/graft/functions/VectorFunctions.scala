@@ -39,26 +39,31 @@ object VectorFunctions {
     case Metric.Tanimoto     => tanimoto_distance(a, b)
   }
 
+  /** The SQL name → expression builder table of every kernel: the ONE
+    * list both [[register]] and `graft.GraftExtensions` read. */
+  private[graft] val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] =
+    Seq(
+      "dot_product" -> (es => DotProduct(es(0), es(1))),
+      "cosine_distance" -> (es => CosineDistance(es(0), es(1))),
+      "euclidean_distance" -> (es => EuclideanDistance(es(0), es(1))),
+      "manhattan_distance" -> (es => ManhattanDistance(es(0), es(1))),
+      "inner_product_distance" -> (es => InnerProductDistance(es(0), es(1))),
+      "l2sq_distance" -> (es => L2SquaredDistance(es(0), es(1))),
+      "hamming_distance" -> (es => HammingDistance(es(0), es(1))),
+      "tanimoto_distance" -> (es => TanimotoDistance(es(0), es(1))),
+      "hamming_packed" -> (es => HammingPacked(es(0), es(1))),
+      "l2_normalize" -> (es => L2Normalize(es.head)),
+      "pack_sign_bits" -> (es => PackSignBits(es.head)),
+      "winnow_md5" -> winnowBuilder)
+
   /** Register all kernels in the session's function registry (idempotent),
     * making them available to SQL: e.g.
     * `SELECT cosine_distance(a.embedding, b.embedding) FROM ...`.
     */
-  def register(spark: SparkSession): Unit = {
-    def reg2(name: String, f: (Expression, Expression) => Expression): Unit =
-      GraftShims.registerFunction(spark, name, es => f(es(0), es(1)))
-    reg2("dot_product", DotProduct)
-    reg2("cosine_distance", CosineDistance)
-    reg2("euclidean_distance", EuclideanDistance)
-    reg2("manhattan_distance", ManhattanDistance)
-    reg2("inner_product_distance", InnerProductDistance)
-    reg2("l2sq_distance", L2SquaredDistance)
-    reg2("hamming_distance", HammingDistance)
-    reg2("tanimoto_distance", TanimotoDistance)
-    reg2("hamming_packed", HammingPacked)
-    GraftShims.registerFunction(spark, "l2_normalize", es => L2Normalize(es.head))
-    GraftShims.registerFunction(spark, "pack_sign_bits", es => PackSignBits(es.head))
-    GraftShims.registerFunction(spark, "winnow_md5", winnowBuilder)
-  }
+  def register(spark: SparkSession): Unit =
+    sqlFunctions.foreach { case (name, builder) =>
+      GraftShims.registerFunction(spark, name, builder)
+    }
 
   /** SQL builder for the winnowing fingerprint: `winnow_md5(text[, width])`
     * — width must be a foldable int literal (it shapes the generated code) */

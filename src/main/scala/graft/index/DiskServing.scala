@@ -2,13 +2,17 @@ package graft.index
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
+import graft.functions.TopK
+
 /** The disk-resident serving contract (verdict r11 #8): every index
   * family that answers TOP-K straight off its partitioned parquet layout
   * implements ONE interface, so a serving tier routes on capability
   * flags instead of per-family reflection. Members: [[IvfStrategy]]
   * (flat cells), [[IvfSq8Strategy]] (scalar-coded cells),
   * [[IvfPqStrategy]] (PQ-coded cells, rerank included),
-  * [[HnswStrategy]] (per-hop graph walk), and [[LshStrategy]]
+  * [[HnswStrategy]] and [[NnDescentStrategy]] (per-hop graph walk — every
+  * graph operation has its one body in [[GraphServing]], over the one
+  * [[GraphLayout]]), [[LshStrategy]]
   * (probe-pruned (table, bucket) postings + id-bucketed rerank
   * vectors), [[BqStrategy]] (id-bucketed signature+vector table for
   * top-k/threshold, plus a nested MIH chunk table behind the
@@ -287,7 +291,7 @@ private[graft] object VectorBuckets {
     * orphan, and dynamic partition overwrite alone would keep its
     * untouched partitions, which the sidecar bump after this write
     * would then resurrect as committed rows (the same class as the
-    * HNSW spent-tombstone leftover, `HnswStrategy.deleteFromDisk`).
+    * graph spent-tombstone leftover, `GraphServing.deleteFromDisk`).
     * Same-batch replays are unaffected: delete-then-rewrite of
     * identical content. Orphans are invisible to readers (`_gen <`
     * committed), so the clear races with no scan. */
@@ -328,22 +332,11 @@ private[graft] object VectorBuckets {
     * own reader fails on the missing sidecar). */
   def writeFreshGeneration(rows: DataFrame, partCol: String,
       sortCol: String, sub: String,
-      withSidecar: String => Unit = _ => ()): Unit = {
-    val spark = rows.sparkSession
-    val live = new org.apache.hadoop.fs.Path(sub)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live)) {
-      writeGeneration(rows, partCol, sortCol, sub, 0)
-      withSidecar(sub)
-    } else {
-      val staging = sub + "__staging"
-      val st = new org.apache.hadoop.fs.Path(staging)
-      if (fs.exists(st)) fs.delete(st, true)
-      writeGeneration(rows, partCol, sortCol, staging, 0)
-      withSidecar(staging)
-      graft.core.Generations.swapInto(spark, sub, staging)
+      withSidecar: String => Unit = _ => ()): Unit =
+    graft.core.Generations.writeStaged(rows.sparkSession, sub) { dir =>
+      writeGeneration(rows, partCol, sortCol, dir, 0)
+      withSidecar(dir)
     }
-  }
 
   /** exact metric scores of (query_id, id) candidates against an
     * id-bucketed vectors frame through the DPP-keyed (_nb, id) join —
@@ -382,24 +375,12 @@ private[graft] object CodesLayout {
     * when the path exists — no window where new codes sit under an old
     * sidecar's trained state */
   def writeServing(keyed: DataFrame, path: String, metaFile: String,
-      metaJson: String): Unit = {
-    val spark = keyed.sparkSession
-    def writeInto(dir: String): Unit = {
+      metaJson: String): Unit =
+    graft.core.Generations.writeStaged(keyed.sparkSession, path) { dir =>
       VectorBuckets.writeGeneration(keyed, "_nb", "id",
         s"$dir/vectors", gen = 0)
       graft.core.FsIO.write(s"$dir/$metaFile", metaJson)
     }
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live)) writeInto(path)
-    else {
-      val staging = path + "__staging"
-      val st = new org.apache.hadoop.fs.Path(staging)
-      if (fs.exists(st)) fs.delete(st, true)
-      writeInto(staging)
-      graft.core.Generations.swapInto(spark, path, staging)
-    }
-  }
 
   /** committed generations of the vectors sub-layout — swap-tolerant
     * (the sub-layout is a compact-and-swap target; readers are
@@ -585,13 +566,22 @@ private[graft] object PartitionRewrite {
     }
 }
 
-/** Shared physical helpers for the GRAPH-shaped serving layouts
-  * ([[HnswStrategy]]'s layered graph, [[NnDescentStrategy]]'s
-  * single-layer k-NN graph): node-bucketed, id-sorted, generation-tagged
-  * parquet subdirs, and the partition-pruned, filter-pushed point read
-  * every walk hop goes through — ONE implementation so the two families'
-  * layouts stay byte-compatible in discipline (r13 lesson: shared
-  * builders over kept-in-sync copies). */
+
+/** The physical layout both GRAPH families serve from ([[HnswStrategy]]'s
+  * layered graph, [[NnDescentStrategy]]'s single-layer k-NN graph):
+  *   vectors/      every prepared column, `_gen=N/_nb=id mod buckets`
+  *                 dirs, id-sorted within files (metadata rides in the
+  *                 layout so filtered serving pushes its predicate into
+  *                 the scan)
+  *   <adjacency>/  (src, dst) per adjacency sub-layout, bucketed by src
+  *                 — `layer_0..L` for HNSW, `graph` for NN-descent
+  *   tombstones/   deleted ids, one `_gen` per committed delete
+  *   the family's sidecar (layout shape, the WRITER's walk config, the
+  *   committed generation count, the entry set) and `_tomb_meta.json`.
+  * This object holds the physical pieces (bucketed generation writes,
+  * the pruned point read, the per-hop reader, the tombstone counter);
+  * every operation over the layout has its one body in [[GraphServing]]
+  * (r13 lesson: shared builders over kept-in-sync copies). */
 private[graft] object GraphLayout {
   import org.apache.spark.sql.functions._
 
@@ -633,9 +623,7 @@ private[graft] object GraphLayout {
     * has none. Tombstones live as their own `_gen` generations under
     * `tombstones/`, bucketed like everything else so a membership check
     * against a bounded candidate set prunes directories; the sidecar
-    * count gates uncommitted generations exactly as for data. ONE
-    * implementation for both graph families (the module's founding
-    * rule), reading the split counter above. */
+    * count gates uncommitted generations exactly as for data. */
   def tombstoneFrame(spark: SparkSession,
       path: String): Option[DataFrame] = {
     val tGens = tombstoneGens(path)
@@ -643,6 +631,24 @@ private[graft] object GraphLayout {
     else Some(graft.core.Generations.readSwapSafe(spark,
         s"$path/tombstones")
       .where(col("_gen") < tGens).select("id").distinct())
+  }
+
+  /** delete the whole `tombstones/` sub-layout, if present */
+  def dropTombstones(spark: SparkSession, path: String): Unit = {
+    val p = new org.apache.hadoop.fs.Path(s"$path/tombstones")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p)) fs.delete(p, true)
+  }
+
+  /** the sidecar's committed generation count; a sidecar without one
+    * (pre-generation layout) gates nothing */
+  def committedGens(meta: com.fasterxml.jackson.databind.JsonNode): Int =
+    Option(meta.get("generations")).map(_.asInt()).getOrElse(Int.MaxValue)
+
+  /** the sidecar's entry set */
+  def entries(meta: com.fasterxml.jackson.databind.JsonNode): Array[Long] = {
+    val arr = meta.get("entries")
+    Array.tabulate(arr.size())(i => arr.get(i).asLong())
   }
 
   /** one `_gen=N` generation of a bucketed subdir — id-sorted within
@@ -663,60 +669,46 @@ private[graft] object GraphLayout {
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("_gen", "_nb").parquet(sub)
+    // a partitioned write of NO rows leaves no data file, and a
+    // sub-layout without one cannot be read (no schema to infer) — e.g.
+    // an upper HNSW layer whose every node a compaction dropped; one
+    // empty, schema-bearing file keeps it readable as empty
+    val genDir = new org.apache.hadoop.fs.Path(s"$sub/_gen=$gen")
+    if (!genDir.getFileSystem(rows.sparkSession.sparkContext
+        .hadoopConfiguration).exists(genDir))
+      rows.limit(0).write.mode("overwrite").parquet(s"$genDir/_nb=0")
   }
 
-  /** Fresh (re)write of a bucketed subdir: a plain generation-0 write on
-    * a virgin path; a staging write + rename swap when the path exists
-    * (review r14) — dynamic partition overwrite alone would keep stale
-    * partitions the rewrite doesn't touch (served forever after), and a
-    * pre-delete would yank live files out from under an input plan
-    * reading the same layout (rewrite-from-own-read is the compaction
-    * idiom). */
+  /** Fresh (re)write of a bucketed subdir as generation 0, staged and
+    * swapped when the path exists ([[graft.core.Generations.writeStaged]]
+    * — review r14: no stale buckets survive a rewrite, and a rewrite
+    * reading the same layout keeps its input files until the swap). */
   def writeFresh(rows: DataFrame, idCol: String, sub: String,
-      buckets: Int): Unit = {
-    val spark = rows.sparkSession
-    val live = new org.apache.hadoop.fs.Path(sub)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live)) writeGeneration(rows, idCol, sub, buckets, gen = 0)
-    else {
-      val staging = sub + "__staging"
-      val st = new org.apache.hadoop.fs.Path(staging)
-      if (fs.exists(st)) fs.delete(st, true)
-      writeGeneration(rows, idCol, staging, buckets, gen = 0)
-      graft.core.Generations.swapInto(spark, sub, staging)
-    }
-  }
+      buckets: Int): Unit =
+    graft.core.Generations.writeStaged(rows.sparkSession, sub)(dir =>
+      writeGeneration(rows, idCol, dir, buckets, gen = 0))
 
-  /** The one disk accessor every hop goes through: bucket IN-list as a
-    * PARTITION filter + node-id IN-list pushed into the scan (row-group
-    * skipping against the id-sorted files). Only COMMITTED generations
-    * are visible (`maxGen` = the sidecar count, so an orphan generation
-    * from a crashed append is ignored); for a key an append touched, the
-    * LATEST generation's rows replace the earlier ones. Pre-generation
-    * layouts (no `_gen` column) read unchanged. */
-  /** The committed-generations base frame of one sub-layout, resolved
-    * swap-safely — split out of [[prunedRead]] (r21) so an ITERATIVE
-    * walk can resolve each sub once per call instead of paying a fresh
-    * relation (schema-inference job + listing) per hop: the hnsw disk
-    * walk measured 11 one-task `parquet at` jobs per 5-query serve, all
-    * re-deriving the same layout schema. A walk holding one base per sub
-    * also reads ONE consistent snapshot of the layout across its hops. */
-  def swapSafeBase(spark: SparkSession, path: String, sub: String,
-      maxGen: Int = Int.MaxValue): DataFrame = {
-    // swap-tolerant: the sub-layout is a compaction swap target
-    val base0 = graft.core.Generations.readSwapSafe(spark, s"$path/$sub")
-    val hasGen = base0.columns.contains("_gen")
-    if (hasGen) base0.where(col("_gen") < maxGen) else base0
-  }
+  /** committed generations only (`maxGen` = the sidecar count, so an
+    * orphan generation from a crashed append is ignored); pre-generation
+    * layouts (no `_gen` column) read unchanged */
+  def committed(base: DataFrame, maxGen: Int): DataFrame =
+    if (base.columns.contains("_gen")) base.where(col("_gen") < maxGen)
+    else base
 
+  /** The pruned point read: bucket IN-list as a PARTITION filter +
+    * node-id IN-list pushed into the scan (row-group skipping against
+    * the id-sorted files), committed generations only, and for a key an
+    * append touched the LATEST generation's rows replace the earlier
+    * ones (the adjacency re-cap writes a full row set per touched src;
+    * vector ids are append-only unique, so the dedup is a no-op there).
+    * Swap-tolerant: the sub-layout is a compaction swap target. */
   def prunedRead(spark: SparkSession, path: String, sub: String,
       idCol: String, ids: Array[Long], buckets: Int, cols: Seq[String],
       maxGen: Int = Int.MaxValue): DataFrame =
-    pruneIds(swapSafeBase(spark, path, sub, maxGen), idCol, ids, buckets,
-      cols, maxGen)
+    pruneIds(committed(graft.core.Generations.readSwapSafe(spark,
+      s"$path/$sub"), maxGen), idCol, ids, buckets, cols, maxGen)
 
-  /** the IN-list prune of [[prunedRead]], applied to a pre-resolved
-    * [[swapSafeBase]] frame */
+  /** the IN-list prune of [[prunedRead]] over a resolved base frame */
   def pruneIds(base: DataFrame, idCol: String, ids: Array[Long],
       buckets: Int, cols: Seq[String],
       maxGen: Int = Int.MaxValue): DataFrame = {
@@ -737,4 +729,427 @@ private[graft] object GraphLayout {
       out.select(cols.map(col): _*)
     }
   }
+
+  /** A walk: the entry set cut to `entryWidth`, then each hop — an
+    * adjacency sub-layout and a width — cuts the beam to its width and
+    * expands once; the served beam is cut to `servedWidth` before the
+    * tombstone filter and the final top-k. */
+  final case class WalkPlan(entryWidth: Int, hops: Seq[(String, Int)],
+      servedWidth: Int)
+
+  /** The reads of ONE walk over a layout. Every read re-resolves its
+    * sub-layout through [[graft.core.Generations.readSwapSafe]] — a base
+    * resolved once for the whole walk lists files that a compaction swap
+    * between hops deletes — reusing the schema the sub-layout's first
+    * read inferred, so only that first read pays a schema-inference job. [[vectorsReplaced]] re-lists
+    * `vectors` and reports whether a file the first read listed is gone:
+    * appends only add files, so a lost file means a compaction or rewrite
+    * replaced the vectors during the walk, and a beam scored before it
+    * may hold rows the new layout dropped. */
+  final class HopReader(spark: SparkSession, path: String, maxGen: Int,
+      buckets: Int) {
+    private val first = scala.collection.mutable.Map.empty[String,
+      (org.apache.spark.sql.types.StructType, Set[String])]
+
+    private def resolve(sub: String): DataFrame = first.get(sub) match {
+      case None =>
+        val raw = graft.core.Generations.readSwapSafe(spark, s"$path/$sub")
+        first(sub) = (raw.schema, raw.inputFiles.toSet)
+        raw
+      case Some((schema, _)) =>
+        graft.core.Generations.readSwapSafeAs(spark, s"$path/$sub",
+          spark.read.schema(schema).parquet(_))
+    }
+
+    def pruned(sub: String, idCol: String, ids: Array[Long],
+        cols: Seq[String]): DataFrame =
+      pruneIds(committed(resolve(sub), maxGen), idCol, ids, buckets, cols,
+        maxGen)
+
+    def vectorsReplaced: Boolean =
+      !first("vectors")._2.subsetOf(resolve("vectors").inputFiles.toSet)
+  }
+}
+
+/** The serving operations of the two GRAPH families, each with ONE body
+  * over the one [[GraphLayout]]: the disk walk ([[queryFromDisk]]), the
+  * live-vector reads behind [[queryExhaustiveFromDisk]] and
+  * [[queryFilteredFromDisk]], [[queryThresholdFromDisk]], the tombstone
+  * [[deleteFromDisk]], the compaction fold ([[doCompactServing]]), the
+  * fresh write ([[writeLayout]]), the rebuild, the maintenance counters
+  * and the doctor. A family supplies only what really differs: its
+  * sidecar (file, required fields, field checks), its adjacency
+  * sub-layout names, its walk plan and entry ranking, and its scoring
+  * kernel. */
+trait GraphServing extends DiskServing { self: IndexStrategy =>
+  import org.apache.spark.sql.functions._
+  import com.fasterxml.jackson.databind.JsonNode
+
+  /** the family's sidecar file at the layout root */
+  protected def metaFile: String
+  /** the sidecar fields the layout doctor requires */
+  protected def metaFields: Seq[String]
+  /** the sidecar, read and field-checked the family's way */
+  protected def readMeta(path: String): JsonNode
+  /** the adjacency sub-layouts of an `nLayers` layout, layer 0 first */
+  protected def adjacencySubs(nLayers: Int): Seq[String]
+  /** the walk the sidecar's (writer's) configuration describes */
+  protected def walkPlan(meta: JsonNode): GraphLayout.WalkPlan
+  /** the entry-set hash rank: entries are the lowest (rank, id) ids */
+  protected def entryRank: Long => Long
+  /** the scoring kernel: query normalization and the candidate join */
+  protected def walkKernel: NnDescentStrategy
+  /** an untrained instance of the same configuration, for the rebuild */
+  protected def untrained: IndexStrategy with DiskServing
+
+  private def nLayers(meta: JsonNode): Int =
+    Option(meta.get("n_layers")).map(_.asInt()).getOrElse(1)
+
+  /** Fresh write of the whole layout: vectors and every adjacency
+    * sub-layout (staged + swapped when the path exists), then the
+    * sidecar, the tombstone-counter reset, and the claims clear — a
+    * REWRITE resets both counters while swapping only the sub-layouts,
+    * so stale claims must go with them. `metaJson` is evaluated after
+    * the data writes. */
+  protected def writeLayout(prepared: DataFrame, path: String,
+      buckets: Int, adjacency: Seq[DataFrame], metaJson: => String): Unit = {
+    GraphLayout.writeFresh(prepared, "id", s"$path/vectors", buckets)
+    adjacencySubs(adjacency.length).zip(adjacency).foreach { case (sub, g) =>
+      GraphLayout.writeFresh(g.select("src", "dst"), "src", s"$path/$sub",
+        buckets)
+    }
+    graft.core.FsIO.write(s"$path/$metaFile", metaJson)
+    GraphLayout.writeTombstoneGens(path, 0) // fresh layout: no tombstones
+    graft.core.Generations.clearClaims(prepared.sparkSession, path)
+  }
+
+  /** The walk served DIRECTLY from the layout, with no resident graph:
+    * stage for stage the in-memory walk, except every adjacency/vector
+    * access is a partition-pruned, filter-pushed read of exactly the
+    * frontier's rows. The walk's state between hops is DRIVER-RESIDENT
+    * (r20, guide §2.6/§5): the beam is ≤ width × batch rows and its ids
+    * are pulled per hop anyway to build the IN-list prune, so each hop
+    * is two jobs (the adjacency pull and the scored top-width), with
+    * distances round-tripping as exact binary doubles — candidates,
+    * scores and tie-breaks are identical to the in-memory walk
+    * (spec-asserted). Tombstoned nodes still ROUTE (hnswlib's
+    * mark-deleted semantics: removing a hub would tear connectivity)
+    * but never serve; the width-wide served beam absorbs the filter.
+    * A compaction or rewrite that replaces the vectors during the walk
+    * restarts it once on the new layout, so a result never mixes a beam
+    * scored before the swap with the layout after it. */
+  override def queryFromDisk(spark: SparkSession, path: String,
+      queries: DataFrame, k: Int): DataFrame =
+    walkFromDisk(spark, path, queries, k)
+
+  /** [[queryFromDisk]] with a test-only hook run before every hop */
+  private[graft] def walkFromDisk(spark: SparkSession, path: String,
+      queries: DataFrame, k: Int,
+      beforeHop: () => Unit = () => ()): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val kn = walkKernel
+    val q = kn.walkQueries(queries)
+    import spark.implicits._
+    type Beam = Array[(Long, Long, Double)]
+    def topK(scored: DataFrame, width: Int): Beam =
+      TopK.topKPerGroup(scored, Seq("query_id"), "id", "dist", width)
+        .select("query_id", "id", "dist")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    def frame(rows: Beam): DataFrame = rows.toSeq.toDF("query_id", "id", "dist")
+    // a per-query (dist, id) re-cut, driver-side
+    def cut(rows: Beam, width: Int): Beam =
+      rows.groupBy(_._1).values.flatMap(g =>
+        g.sortBy(t => (t._3, t._2)).take(width)).toArray
+    def attempt(): Option[DataFrame] = {
+      val meta = readMeta(path)
+      val plan = walkPlan(meta)
+      val read = new GraphLayout.HopReader(spark, path,
+        GraphLayout.committedGens(meta), meta.get("buckets").asInt())
+      def score(cands: DataFrame, ids: Array[Long]): DataFrame =
+        kn.scoreCandidates(read.pruned("vectors", "id", ids,
+          Seq("id", "vector")), q, cands)
+      def hop(wide: Beam, sub: String, width: Int): Beam = {
+        val beam = cut(wide, width)
+        val adj = read.pruned(sub, "src", beam.map(_._2).distinct,
+            Seq("src", "dst"))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).groupBy(_._1)
+        // dedup the frontier against the beam driver-side: a pair already
+        // in the beam would rescore to the identical distance, so dropping
+        // it here spares the hop a per-pair min-aggregate shuffle
+        val beamKeys = beam.map(t => (t._1, t._2)).toSet
+        val frontier = beam.flatMap { case (qid, id, _) =>
+          adj.getOrElse(id, Array.empty[(Long, Long)])
+            .map { case (_, dst) => (qid, dst) }
+        }.distinct.filterNot(beamKeys)
+        topK(frame(beam).unionByName(score(frontier.toSeq.toDF("query_id",
+          "id"), frontier.map(_._2).distinct)), width)
+      }
+      val entries = GraphLayout.entries(meta)
+      val seeded = topK(score(entries.toSeq.toDF("id")
+        .crossJoin(q.select("query_id")), entries), plan.entryWidth)
+      val beam = plan.hops.foldLeft(seeded) { case (b, (sub, width)) =>
+        beforeHop(); hop(b, sub, width)
+      }
+      val served = frame(cut(beam, plan.servedWidth))
+      // tombstones resolve BEFORE the swap check: a compaction that
+      // spends them after this point replaced the vectors too, and the
+      // check below sees it
+      val tomb = GraphLayout.tombstoneFrame(spark, path)
+      if (read.vectorsReplaced) None
+      else Some(TopK.topKPerGroup(
+        tomb.fold(served)(t => served.join(t, Seq("id"), "left_anti")),
+        Seq("query_id"), "id", "dist", k))
+    }
+    attempt().orElse(attempt()).getOrElse(throw new IllegalStateException(
+      s"the graph layout at $path was replaced twice during one walk " +
+        "(compaction or rewrite); re-run the query"))
+  }
+
+  /** the layout's LIVE vector rows: committed generations minus
+    * tombstones — exact semantics (a deleted row is GONE here, unlike
+    * the walk, where it still routes until compaction) */
+  protected def liveVectors(spark: SparkSession, path: String): DataFrame = {
+    val vecs = GraphLayout.committed(graft.core.Generations.readSwapSafe(
+      spark, s"$path/vectors"), GraphLayout.committedGens(readMeta(path)))
+    GraphLayout.tombstoneFrame(spark, path)
+      .fold(vecs)(t => vecs.join(t, Seq("id"), "left_anti"))
+  }
+
+  private def exactTopK(vecs: DataFrame, queries: DataFrame,
+      k: Int): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val q = walkKernel.walkQueries(queries)
+    val v = vecs.select("id", "vector")
+    TopK.topKPerGroup(walkKernel.scoreCandidates(v, q,
+        v.select("id").crossJoin(q.select("query_id"))),
+      Seq("query_id"), "id", "dist", k)
+  }
+
+  /** EXACT mode over the layout — the in-memory `queryExhaustive`'s
+    * full-seed identity (every live vector scored through the same
+    * kernel, tie-break and rank plumbing): the family's oracle anchor
+    * THROUGH the layout. The adjacency round trip is pinned by the
+    * disk ≡ memory walk-equality specs (a diverged edge would divert
+    * the walk). */
+  def queryExhaustiveFromDisk(spark: SparkSession, path: String,
+      queries: DataFrame, k: Int): DataFrame =
+    exactTopK(liveVectors(spark, path), queries, k)
+
+  /** Filtered search with PRE-filter semantics: the exact top-k of the
+    * surviving subset. The graph is deliberately bypassed (an arbitrary
+    * predicate can disconnect any graph, and a walk cannot guarantee k
+    * survivors), so this is one filter-pushed, column-pruned scan of the
+    * live vectors — metadata rides in the vectors layout, so simple
+    * predicates reach the parquet reader as PushedFilters. */
+  override def supportsDiskFiltered: Boolean = true
+  override def queryFilteredFromDisk(spark: SparkSession, path: String,
+      queries: DataFrame, k: Int, predicate: Column): DataFrame =
+    exactTopK(liveVectors(spark, path).where(predicate), queries, k)
+
+  /** ANN threshold semantics (hnsw.py:107-114, pynndescent.py:85-93):
+    * top-max_k, then the strict `<` mask */
+  def queryThreshold(prepared: DataFrame, queries: DataFrame,
+      threshold: Double, maxK: Int): DataFrame =
+    if (maxK <= 0) IndexStrategy.emptyThreshold(queries)
+    else self.query(prepared, queries, maxK)
+      .where(col("dist") < threshold).drop("rank")
+
+  /** the same mask over the [[queryFromDisk]] walk — disk ≡ memory
+    * decision for decision by construction (r15) */
+  override def supportsDiskThreshold: Boolean = true
+  override def queryThresholdFromDisk(spark: SparkSession, path: String,
+      queries: DataFrame, threshold: Double, maxK: Int): DataFrame =
+    if (maxK <= 0) IndexStrategy.emptyThreshold(queries)
+    else queryFromDisk(spark, path, queries, maxK)
+      .where(col("dist") < threshold).drop("rank")
+
+  /** Tombstone DELETE: deleted ids land as one bucketed tombstone
+    * generation — no data rewrite, no graph surgery. Until compaction
+    * the nodes still ROUTE but are excluded from every served result;
+    * compaction then drops their vectors, their adjacency rows and the
+    * edges pointing at them. The existence check is partition-pruned to
+    * the candidates' buckets — I/O proportional to the delete batch.
+    * `rows` needs only `id`, of any integral type. Returns the number
+    * of live rows newly tombstoned. */
+  override def supportsDiskDelete: Boolean = true
+  override def deleteFromDisk(spark: SparkSession, path: String,
+      rows: DataFrame, tag: String): Long = {
+    val meta = readMeta(path)
+    require(meta.get("generations") != null,
+      s"index at $path predates the generation layout")
+    val buckets = meta.get("buckets").asInt()
+    // claim the TOMBSTONE slot before reading the prior tombstone state
+    // (r17 — the delete-side twin of the append claims: two concurrent
+    // deleters would both write tombstones `_gen=T` and dynamic-
+    // overwrite each other, resurrecting deleted rows). Same-tag replay
+    // reclaims; a foreign in-flight claim fails loudly.
+    val tGens = graft.core.Generations.claimAppendGeneration(spark, path,
+      tag, () => GraphLayout.tombstoneGens(path), slot = "tomb")
+    try {
+      // verify against LIVE rows only, pruned to the candidates' buckets.
+      // BOTH counters are re-read AFTER the claim (advice r17): the
+      // tombstone frame so it covers everything committed up to the
+      // claimed slot, and the append-generation count so rows a
+      // concurrent appender committed since this method's entry are
+      // seen as existing
+      val candIds = rows.select(col("id").cast("long").as("id")).distinct()
+        .collect().map(_.getLong(0))
+      val existing = GraphLayout.prunedRead(spark, path, "vectors", "id",
+        candIds, buckets, Seq("id"),
+        GraphLayout.committedGens(readMeta(path)))
+      val fresh = GraphLayout.tombstoneFrame(spark, path).fold(existing)(t =>
+        existing.join(t, Seq("id"), "left_anti")).cache()
+      val n = fresh.count()
+      if (n > 0) {
+        // at tGens == 0 any existing tombstones/ dir is an invisible
+        // leftover from a compaction that crashed between its sidecar
+        // commit and its directory delete — clear it FIRST: the
+        // generation write's dynamic partition overwrite would otherwise
+        // keep the leftover's stale partitions, and the counter bump
+        // would make every reader see those SPENT tombstones again,
+        // silently hiding any id re-inserted since the compaction
+        if (tGens == 0) GraphLayout.dropTombstones(spark, path)
+        GraphLayout.writeGeneration(fresh, "id", s"$path/tombstones",
+          buckets, tGens)
+        // the commit touches ONLY the tombstone counter's own sidecar
+        // (advice r17): rewriting the shared graph meta here could
+        // revert a generation count an appender committed concurrently
+        GraphLayout.writeTombstoneGens(path, tGens + 1)
+      } else {
+        // a no-op delete must not leave an unresolved claim behind
+        graft.core.Generations.releaseClaim(spark, path, tGens, tag,
+          slot = "tomb")
+      }
+      fresh.unpersist()
+      n
+    } catch {
+      case e: Throwable =>
+        graft.core.Generations.releaseClaim(spark, path, tGens, tag,
+          slot = "tomb")
+        throw e
+    }
+  }
+
+  /** Fold the layout back to a single tombstone-free `_gen=0` state.
+    * Vectors union (append-only ids) and adjacency latest-per-src, each
+    * staged and swapped (the staging write finishes reading the live
+    * files before the swap, so rewrite-from-own-read is safe; a crash
+    * before a swap leaves the live layout untouched). Tombstoned nodes
+    * leave PHYSICALLY: their vectors, their adjacency rows, and the
+    * edges POINTING at them (a dangling dst is harmless to the walk but
+    * wasted frontier I/O forever). Layer 0 always folds — it takes the
+    * insert deltas; upper layers only when tombstones must leave them.
+    * The sidecar keeps its walk configuration; the generation count
+    * resets, and dead entry nodes leave the entry list — re-seeded by
+    * the family's entry rank over the highest non-empty upper layer's
+    * survivors, else the surviving vectors, when every entry died
+    * (advice r15: an empty list would serve nothing forever). */
+  override def supportsCompaction: Boolean = true
+  override protected def doCompactServing(spark: SparkSession,
+      path: String): Unit = {
+    val meta = readMeta(path)
+    require(meta.get("generations") != null,
+      s"index at $path predates the generation layout")
+    val gens = meta.get("generations").asInt()
+    val tomb = GraphLayout.tombstoneFrame(spark, path)
+    if (gens <= 1 && tomb.isEmpty) return // already compact
+    val buckets = meta.get("buckets").asInt()
+    def dropDead(rows: DataFrame, idCol: String): DataFrame =
+      tomb.fold(rows)(t => rows.join(t.withColumnRenamed("id", idCol),
+        Seq(idCol), "left_anti"))
+    def fold(sub: String, idCol: String, stripDst: Boolean): Unit = {
+      val rows = spark.read.parquet(s"$path/$sub").where(col("_gen") < gens)
+      val latest = rows.groupBy(idCol).agg(max("_gen").as("_gen"))
+      val live = dropDead(rows.join(latest, Seq(idCol, "_gen"))
+        .drop("_gen", "_nb"), idCol)
+      val state = if (stripDst) dropDead(live, "dst") else live
+      graft.core.Generations.writeStaged(spark, s"$path/$sub",
+        "__compacting")(dir =>
+        GraphLayout.writeGeneration(state, idCol, dir, buckets, gen = 0))
+    }
+    fold("vectors", "id", stripDst = false)
+    val adj = adjacencySubs(nLayers(meta))
+    fold(adj.head, "src", stripDst = true)
+    if (tomb.nonEmpty) adj.tail.foreach(fold(_, "src", stripDst = true))
+    val root = meta.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
+    root.put("generations", 1)
+    if (tomb.nonEmpty) {
+      val entryArr = GraphLayout.entries(meta)
+      // bounded pull: only tombstones hitting the entry list come back,
+      // never the whole delete history
+      val dead = tomb.get
+        .where(col("id").isin(entryArr.map(java.lang.Long.valueOf).toSeq: _*))
+        .collect().map(_.getLong(0)).toSet
+      val kept = entryArr.filterNot(dead)
+      // the folded sub-layouts were just written, so these reads see
+      // exactly the survivors; a store with NO survivors keeps the
+      // honest empty entry list
+      val reseeded = if (kept.nonEmpty) kept else {
+        val rank = udf(entryRank)
+        val pools = adj.tail.reverseIterator.map(sub =>
+            spark.read.parquet(s"$path/$sub").select(col("src").as("id"))
+              .distinct()) ++
+          Iterator(spark.read.parquet(s"$path/vectors").select("id"))
+        pools.find(p => !p.isEmpty).fold(Array.empty[Long])(
+          _.withColumn("_h", rank(col("id"))).orderBy(col("_h"), col("id"))
+            .limit(math.max(entryArr.length, 1)).collect().map(_.getLong(0)))
+      }
+      val arr = root.putArray("entries")
+      reseeded.foreach(arr.add)
+    }
+    // sidecars commit BEFORE the tombstones dir is deleted (advice r12):
+    // at tombstone_generations=0 an orphaned tombstones/ dir is invisible
+    // to every reader, so a crash in this window leaves a servable layout
+    // — the reverse order left a sidecar pointing at a missing directory.
+    // Counter order: the tombstone reset lands FIRST — between the two
+    // writes a reader sees folded data with no tombstones (correct: the
+    // fold already dropped the rows) and a crash there re-runs the fold
+    // idempotently. The leftover tombstones dir is NOT writable-over:
+    // [[deleteFromDisk]] clears it before writing a fresh generation 0.
+    if (tomb.nonEmpty) GraphLayout.writeTombstoneGens(path, 0)
+    graft.core.FsIO.write(s"$path/$metaFile",
+      new com.fasterxml.jackson.databind.ObjectMapper()
+        .writeValueAsString(root))
+    // the spent tombstones dir leaves BEFORE the ledger clears (review
+    // r18): clearClaims also sweeps the maintenance marker, reopening
+    // the layout to writers, and a delete entering between an early
+    // sweep and this directory delete would write a fresh tombstone
+    // generation this trailing delete then wipes
+    if (tomb.nonEmpty) GraphLayout.dropTombstones(spark, path)
+    // the count resets (gen AND tomb slots): spent claims must not
+    // outlive them, or the first post-compact append/delete slot would
+    // read as foreign-claimed forever
+    graft.core.Generations.clearClaims(spark, path)
+  }
+
+  /** Relearn the graph from the LIVE rows (committed generations minus
+    * tombstones) and swap the fresh layout in: tombstoned nodes stop
+    * routing AND the survivors' neighborhoods are relearned — append
+    * deltas learned their edges against the store AS OF their insert, so
+    * a long mutation history erodes recall, which compaction never
+    * repairs. */
+  override def supportsRebuild: Boolean = true
+  override protected def doRebuildServing(spark: SparkSession,
+      path: String): DiskServing.Rebuilt = {
+    // the layout's own partition columns drop: the returned frames are
+    // the caller's in-memory state. localCheckpoint, not cache: the
+    // rewrite below replaces this frame's source files
+    // ([[IvfStrategy.rebuildCells]] argument)
+    val rows = liveVectors(spark, path).drop("_gen", "_nb").localCheckpoint()
+    val fresh = untrained
+    val prepared = fresh.prepare(rows)
+    fresh.writeServingIndex(prepared, path)
+    DiskServing.Rebuilt(fresh, rows, prepared)
+  }
+
+  /** the maintenance fence's committed counters ([[DiskServing]]) */
+  override def committedCounts(spark: SparkSession,
+      path: String): Map[String, Int] = Map(
+    "gen" -> graft.core.Generations.sidecarCount(s"$path/$metaFile",
+      "generations"),
+    "tomb" -> GraphLayout.tombstoneGens(path))
+
+  override def fsckServing(spark: SparkSession, path: String): DataFrame =
+    ServingFsck.graphLayout(spark, path, metaFile, metaFields,
+      adjacencySubs)
 }

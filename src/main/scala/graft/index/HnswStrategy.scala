@@ -57,7 +57,7 @@ import graft.functions.TopK
 case class HnswStrategy(metric: Metric, m: Int = 16,
     efConstruction: Int = 200, efSearch: Int = 64, seed: Long = 42L,
     hops: Int = 2, descentWidth: Int = 4,
-    smallBuildElems: Long = 4L << 20) extends IndexStrategy with DiskServing {
+    smallBuildElems: Long = 4L << 20) extends IndexStrategy with GraphServing {
   require(metric == Metric.Cosine || metric == Metric.Euclidean,
     s"Metric '${metric.name}' is not supported by the HNSW backend.")
   require(m >= 2, s"m must be >= 2, got $m")
@@ -104,9 +104,9 @@ case class HnswStrategy(metric: Metric, m: Int = 16,
   }
 
   /** deterministic hash rank for entry-point capping */
-  private def hashRank = {
+  protected def entryRank: Long => Long = {
     val sd = seed
-    udf((id: Long) => NnDescentStrategy.mix(id, 0x455054L, sd))
+    id => NnDescentStrategy.mix(id, 0x455054L, sd)
   }
 
   private def scoringKernel: NnDescentStrategy = {
@@ -221,7 +221,7 @@ case class HnswStrategy(metric: Metric, m: Int = 16,
 
   private def entryIdsAt(ef: Int): DataFrame =
     layers.last.select(col("src").as("id")).distinct()
-      .withColumn("_h", hashRank(col("id")))
+      .withColumn("_h", udf(entryRank).apply(col("id")))
       .orderBy(col("_h"), col("id")).limit(math.max(ef, deg0))
       .drop("_h")
 
@@ -308,13 +308,9 @@ case class HnswStrategy(metric: Metric, m: Int = 16,
 
   /** the top layer's hash-capped entry set over driver arrays — the same
     * ranking [[entryIdsAt]] declares ((mix(id, EPT), id) ascending, capped) */
-  private def localEntryIds: Array[Long] = localEntryIdsAt(efSearch)
-
   private def localEntryIdsAt(ef: Int): Array[Long] = {
-    val sd = seed
-    localLayers.last._1
-      .sortBy(id => (NnDescentStrategy.mix(id, 0x455054L, sd), id))
-      .take(math.max(ef, deg0))
+    val rank = entryRank
+    localLayers.last._1.sortBy(id => (rank(id), id)).take(math.max(ef, deg0))
   }
 
   /** one query's descent + beam over the retained arrays — stage for stage
@@ -398,18 +394,17 @@ case class HnswStrategy(metric: Metric, m: Int = 16,
 
   // ---------------------------------------------------------- disk serving
 
-  /** DiskANN-style serving layout — the graph family joins the
-    * disk-serving set (flat / scalar / pq / binary / ivf×bq all serve off
-    * partition-pruned parquet; the graph's read pattern is different in
-    * kind: per-HOP random access, not per-cell scans). Vectors and each
-    * layer's adjacency land as parquet partitioned by node bucket
-    * (`_nb = id mod buckets`), and the hash-capped entry set (bounded by
-    * max(efSearch, 2m)) rides in a sidecar. A walk then touches, per hop,
-    * only the directories holding its frontier's buckets and only the row
-    * groups passing the pushed `src IN` / `id IN` filters — I/O
-    * proportional to the frontier (the SSD-DiskANN cost model), never to
-    * the store. */
-  /** the graph family's serving layout IS [[writeGraphIndex]] */
+  /** DiskANN-style serving layout ([[GraphLayout]], served through the
+    * shared [[GraphServing]] operations): vectors and each layer's
+    * adjacency (`layer_0..L`) land as parquet partitioned by node bucket
+    * (`_nb = id mod buckets`), id-sorted within files, and the
+    * hash-capped entry set (bounded by max(efSearch, 2m)) rides in the
+    * sidecar. A walk then touches, per hop, only the directories holding
+    * its frontier's buckets and only the row groups passing the pushed
+    * `src IN` / `id IN` filters — I/O proportional to the frontier (the
+    * SSD-DiskANN cost model), never to the store. EVERY prepared column
+    * is persisted, so filtered serving pushes its predicate into the
+    * scan; the walk's own reads project (id, vector) only. */
   override def writeServingIndex(prepared: DataFrame, path: String): Unit =
     writeGraphIndex(prepared, path)
 
@@ -417,58 +412,23 @@ case class HnswStrategy(metric: Metric, m: Int = 16,
       buckets: Int = 16): Unit = {
     require(layers != null,
       "HnswStrategy.prepare must run before writeGraphIndex")
-    // id-sorted within each bucket's files: row-group min/max stats on the
-    // node id become tight ranges, so the pushed `id IN` / `src IN` lists
-    // skip row groups — the page-level random-access half of the DiskANN
-    // cost model (directory pruning is the other half, and only bites when
-    // a hop's frontier covers fewer buckets than exist). EVERY prepared
-    // column is persisted, not just (id, vector): metadata rides in the
-    // layout so filtered serving ([[queryFilteredFromDisk]]) pushes its
-    // predicate straight into the scan — the walk's own reads still
-    // project (id, vector) only, so they pay nothing for the extras.
-    // writeFresh, not a bare generation write (review r14): rewriting an
-    // existing layout in place must not leave stale buckets behind
-    // (dynamic partition overwrite keeps partitions the rewrite doesn't
-    // touch), and a rewrite whose input reads this same layout must not
-    // have its files deleted mid-plan — the staging + swap handles both.
-    GraphLayout.writeFresh(prepared, "id", s"$path/vectors", buckets)
-    layers.zipWithIndex.foreach { case (g, l) =>
-      GraphLayout.writeFresh(g.select("src", "dst"), "src",
-        s"$path/layer_$l", buckets)
-    }
-    // sidecar FIRST, then retire any deeper layer dirs a previous
-    // (deeper) layout left (advice r14): only once the new n_layers is
-    // committed are those dirs orphans — deleting them under the OLD
-    // sidecar would leave a crash window where readers walk a layer
-    // count whose directories are gone (a loud failure, the opposite of
-    // the invisible-orphan claim). After the commit this is hygiene.
-    writeGraphMeta(path, buckets, generations = 1)
-    GraphLayout.writeTombstoneGens(path, 0) // fresh layout: no tombstones
-    // a REWRITE of an existing layout resets the generation count while
-    // swapping only the sub-layouts — stale claims must go with it
-    graft.core.Generations.clearClaims(prepared.sparkSession, path)
+    writeLayout(prepared, path, buckets, layers,
+      graphMetaJson(buckets, generations = 1))
+    // retire any deeper layer dirs a previous (deeper) layout left
+    // (advice r14) only AFTER the sidecar commit: deleting them under the
+    // OLD sidecar would leave a crash window where readers walk a layer
+    // count whose directories are gone. After the commit this is hygiene.
     val fsRoot = new org.apache.hadoop.fs.Path(path)
     val fs = fsRoot.getFileSystem(
       prepared.sparkSession.sparkContext.hadoopConfiguration)
-    if (fs.exists(fsRoot)) {
-      fs.listStatus(fsRoot).map(_.getPath)
-        .filter { p =>
-          val n = p.getName
-          n.startsWith("layer_") &&
-            n.stripPrefix("layer_").forall(_.isDigit) &&
-            n.stripPrefix("layer_").toInt >= layers.length
-        }
-        .foreach(p => fs.delete(p, true))
-    }
+    fs.listStatus(fsRoot).map(_.getPath)
+      .filter { p =>
+        val n = p.getName.stripPrefix("layer_")
+        p.getName.startsWith("layer_") && n.nonEmpty &&
+          n.forall(_.isDigit) && n.toInt >= layers.length
+      }
+      .foreach(p => fs.delete(p, true))
   }
-
-  /** one `_gen=N` generation of a graph-layout subdir — the shared
-    * [[GraphLayout.writeGeneration]] discipline (id-sorted buckets,
-    * dynamic partition overwrite so a replayed append replaces its own
-    * generation) */
-  private def writeGeneration(rows: DataFrame, idCol: String, sub: String,
-      buckets: Int, gen: Int): Unit =
-    GraphLayout.writeGeneration(rows, idCol, sub, buckets, gen)
 
   /** the sidecar: layout shape, walk configuration (advice r11 — the
     * entry set is capped at the WRITER's efSearch, so a reader must walk
@@ -481,8 +441,7 @@ case class HnswStrategy(metric: Metric, m: Int = 16,
     * it has its own sidecar ([[GraphLayout.writeTombstoneGens]]) so an
     * append's meta rewrite can never revert a concurrently committed
     * delete's counter, and vice versa. */
-  private def writeGraphMeta(path: String, buckets: Int,
-      generations: Int): Unit = {
+  private def graphMetaJson(buckets: Int, generations: Int): String = {
     val entries = entryIds.collect().map(_.getLong(0))
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.createObjectNode()
@@ -496,307 +455,45 @@ case class HnswStrategy(metric: Metric, m: Int = 16,
     root.put("generations", generations)
     val arr = root.putArray("entries")
     entries.foreach(arr.add)
-    graft.core.FsIO.write(s"$path/_graph_meta.json",
-      mapper.writeValueAsString(root))
+    mapper.writeValueAsString(root)
   }
 
-  /** The hierarchical walk served DIRECTLY from a [[writeGraphIndex]]
-    * layout, with no resident graph: stage for stage the plan [[query]]
-    * declares (entry scoring → one expansion per upper layer → layer-0
-    * beam), except every adjacency/vector access is a partition-pruned,
-    * filter-pushed read of exactly the frontier's rows. The frontier ids
-    * are driver-enumerated per hop — bounded by the query batch
-    * (≤ beam width × batch × layer degree), the same bounded-driver-pull
-    * convention as the MIH probe keys — so the `IN`-list prune is known
-    * before each scan starts. Candidates, scores, and tie-breaks are
-    * identical to the in-memory walk (spec-asserted equality). */
-  override def queryFromDisk(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
+  protected def metaFile: String = "_graph_meta.json"
+  protected def metaFields: Seq[String] = Seq("buckets", "n_layers",
+    "metric", "m", "ef_search", "hops", "descent_width", "generations",
+    "entries")
+  protected def adjacencySubs(nLayers: Int): Seq[String] =
+    (0 until nLayers).map(l => s"layer_$l")
+  protected def walkKernel: NnDescentStrategy = scoringKernel
+  protected def untrained: IndexStrategy with DiskServing = copy()
+
+  protected def readMeta(
+      path: String): com.fasterxml.jackson.databind.JsonNode = {
     val meta = new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(graft.core.FsIO.read(s"$path/_graph_meta.json"))
     require(meta.get("metric").asText() == metric.name,
       s"index at $path was built for metric ${meta.get("metric").asText()}")
-    val buckets = meta.get("buckets").asInt()
-    val nLayers = meta.get("n_layers").asInt()
-    // adopt the WRITER's walk configuration (advice r11) — the sidecar's
-    // entry set was capped at the writer's efSearch, so walking with a
-    // differently-configured reader's parameters would silently break the
-    // disk == memory walk equality. Absent fields (pre-r12 sidecars) fall
-    // back to this instance's configuration, the old behavior.
-    def metaInt(field: String, dflt: Int): Int = {
-      val node = meta.get(field); if (node == null) dflt else node.asInt()
-    }
-    val diskEf = metaInt("ef_search", efSearch)
-    val diskHops = metaInt("hops", hops)
-    val diskDw = metaInt("descent_width", descentWidth)
-    val gens = metaInt("generations", Int.MaxValue)
-    val eIt = meta.get("entries").elements()
-    val entries = Iterator.continually(eIt)
-      .takeWhile(_.hasNext).map(_.next().asLong()).toArray
-    val kn = scoringKernel
-    val q = kn.walkQueries(queries)
-    // each sub-layout's swap-safe base is resolved ONCE per walk (r21):
-    // the per-hop prunedRead built a fresh relation per hop — a one-task
-    // schema-inference job plus a re-listing each time (11 such jobs per
-    // 5-query serve, measured) — and a walk reading one snapshot of the
-    // layout across its hops is also the more consistent serve
-    val bases = scala.collection.mutable.Map.empty[String, DataFrame]
-    def pruned(sub: String, idCol: String, ids: Array[Long],
-        cols: Seq[String]): DataFrame =
-      GraphLayout.pruneIds(
-        bases.getOrElseUpdate(sub,
-          GraphLayout.swapSafeBase(spark, path, sub, gens)),
-        idCol, ids, buckets, cols, gens)
-    import spark.implicits._
-    // The walk's state between hops is DRIVER-RESIDENT (r20, guide §2.6/§5):
-    // the beam is ≤ max(descent_width, ef) × batch rows by construction and
-    // its ids were ALREADY pulled per hop to build the IN-list prune, so
-    // holding (query_id, id, dist) driver-side adds nothing to the driver
-    // bound while collapsing each hop to exactly ONE Spark job (the r19
-    // shape paid per hop: a srcIds collect, an eager frontier
-    // localCheckpoint, a candIds collect, and an eager beam localCheckpoint
-    // — ~4 driver-scheduled jobs; 67 jobs total for the 5-query walk,
-    // measured). Distances round-trip driver↔executor as exact binary
-    // doubles (no recompute), so scores, tie-breaks, and ranks are
-    // bit-identical to the r19 plan.
-    def topKRows(scored: DataFrame, width: Int): Array[(Long, Long, Double)] =
-      TopK.topKPerGroup(scored, Seq("query_id"), "id", "dist", width)
-        .select("query_id", "id", "dist")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    def beamDf(rows: Array[(Long, Long, Double)]): DataFrame =
-      rows.toSeq.toDF("query_id", "id", "dist")
-    // one hop = one job: adjacency of the beam's ids is enumerated
-    // DRIVER-SIDE from the pruned layer read (the same bounded rows the
-    // r19 frontier checkpoint held), then the (old beam ∪ scored
-    // frontier) → per-pair min → top-width aggregate runs as a single
-    // action over the IN-list-pruned vector read.
-    def hop(beam: Array[(Long, Long, Double)], layerSub: String,
-        width: Int): Array[(Long, Long, Double)] = {
-      val srcIds = beam.map(_._2).distinct
-      val adjRows = pruned(layerSub, "src", srcIds, Seq("src", "dst"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      val adj = adjRows.groupBy(_._1)
-      // dedup the frontier against the beam HERE: a (query_id, id) pair
-      // already in the beam would rescore to the identical distance (same
-      // kernel, same stored vector), so the r19 per-pair min-aggregate was
-      // a dedup — doing it driver-side removes that whole shuffle stage
-      // from the hop's single job
-      val beamKeys = beam.map(t => (t._1, t._2)).toSet
-      val frontierPairs = beam.flatMap { case (qid, id, _) =>
-        adj.getOrElse(id, Array.empty[(Long, Long)])
-          .map { case (_, dst) => (qid, dst) }
-      }.distinct.filterNot(beamKeys)
-      val candIds = frontierPairs.map(_._2).distinct
-      val frontier = frontierPairs.toSeq.toDF("query_id", "id")
-      val scored = beamDf(beam).unionByName(kn.scoreCandidates(
-          pruned("vectors", "id", candIds, Seq("id", "vector")), q, frontier))
-      topKRows(scored, width)
-    }
-    val entryPairs = entries.toSeq.toDF("id")
-      .crossJoin(q.select("query_id"))
-    var ep = topKRows(
-      kn.scoreCandidates(pruned("vectors", "id", entries,
-        Seq("id", "vector")), q, entryPairs), diskDw)
-    for (l <- (nLayers - 1) to 1 by -1)
-      ep = hop(ep, s"layer_$l", diskDw)
-    // descent beam → ef beam: a pure per-query (dist, id) re-cut, done
-    // driver-side (the r19 plan ran it as its own TopK job)
-    def cut(rows: Array[(Long, Long, Double)],
-        width: Int): Array[(Long, Long, Double)] =
-      rows.groupBy(_._1).values.flatMap(g =>
-        g.sortBy(t => (t._3, t._2)).take(width)).toArray
-    var beam = cut(ep, diskEf)
-    for (_ <- 1 to diskHops)
-      beam = hop(beam, "layer_0", diskEf)
-    // tombstones (disk delete): deleted nodes still ROUTE — the walk
-    // traverses them exactly as before, the hnswlib mark-deleted
-    // semantics — but are excluded from the served results; the ef-wide
-    // beam is what absorbs the filter (up to ef candidates survive it)
-    val beamF = beamDf(beam)
-    val served = GraphLayout.tombstoneFrame(spark, path)
-      .fold(beamF)(t => beamF.join(t, Seq("id"), "left_anti"))
-    TopK.topKPerGroup(served, Seq("query_id"), "id", "dist", k)
+    meta
   }
 
-  /** The one disk accessor every hop goes through: bucket IN-list as a
-    * PARTITION filter + node-id IN-list pushed into the scan (row-group
-    * skipping against the id-sorted files). Package-visible so the spec
-    * can walk its plan. */
-  private[graft] def prunedRead(spark: org.apache.spark.sql.SparkSession,
-      path: String, sub: String, idCol: String, ids: Array[Long],
-      buckets: Int, cols: Seq[String],
-      maxGen: Int = Int.MaxValue): DataFrame =
-    // generation-aware read (r12 disk insert), shared with the other
-    // graph-shaped layout ([[GraphLayout.prunedRead]]): committed
-    // generations only, latest generation wins per key — the adjacency
-    // re-cap writes a full row set per touched src, and vector ids are
-    // append-only unique so the dedup is a no-op there.
-    GraphLayout.prunedRead(spark, path, sub, idCol, ids, buckets, cols,
-      maxGen)
-
-  /** Exhaustive exact mode over the SAME disk layout ([[queryExhaustive]]'s
-    * full-seed identity, reading vectors through the serving files): scores
-    * every stored vector via the identical kernel/tie-break/rank plumbing —
-    * the graph family's oracle anchor THROUGH the layout (the layout's
-    * other half, the adjacency round trip, is pinned by the disk ≡ memory
-    * walk-equality spec, since any divergence in edges would divert the
-    * walk). */
-  def queryExhaustiveFromDisk(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val kn = scoringKernel
-    val q = kn.walkQueries(queries)
-    val vecs = committedVectors(spark, path).select("id", "vector")
-    val pairs = vecs.select("id").crossJoin(q.select("query_id"))
-    TopK.topKPerGroup(kn.scoreCandidates(vecs, q, pairs),
-      Seq("query_id"), "id", "dist", k)
+  /** the hierarchical walk: entry scoring capped at descent_width, one
+    * expansion per upper layer (L..1) at descent_width, then `hops`
+    * layer-0 expansions at ef_search. The WRITER's configuration is
+    * adopted (advice r11 — the sidecar's entry set was capped at the
+    * writer's efSearch); absent fields (pre-r12 sidecars) fall back to
+    * this instance's configuration. */
+  protected def walkPlan(
+      meta: com.fasterxml.jackson.databind.JsonNode): GraphLayout.WalkPlan = {
+    def metaInt(field: String, dflt: Int): Int =
+      Option(meta.get(field)).map(_.asInt()).getOrElse(dflt)
+    val ef = metaInt("ef_search", efSearch)
+    val dw = metaInt("descent_width", descentWidth)
+    GraphLayout.WalkPlan(dw,
+      ((meta.get("n_layers").asInt() - 1) to 1 by -1).map(l =>
+        (s"layer_$l", dw)) ++
+        Seq.fill(metaInt("hops", hops))(("layer_0", ef)),
+      ef)
   }
-
-  /** the layout's LIVE vector rows: committed generations only, minus
-    * tombstones — exact semantics (a deleted row is GONE here, unlike the
-    * walk where it still routes until compaction) */
-  private def committedVectors(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame = {
-    val vecs0 = spark.read.parquet(s"$path/vectors")
-    if (!vecs0.columns.contains("_gen")) vecs0 // pre-generation layout
-    else {
-      val meta = new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(graft.core.FsIO.read(s"$path/_graph_meta.json"))
-      val g = meta.get("generations")
-      val committed = if (g == null) vecs0
-        else vecs0.where(col("_gen") < g.asInt())
-      GraphLayout.tombstoneFrame(spark, path)
-        .fold(committed)(t => committed.join(t, Seq("id"), "left_anti"))
-    }
-  }
-
-  /** Filtered search off the disk layout — the graph family's member of
-    * the filtered-serving set ([[IvfStrategy.queryFilteredFromDisk]]),
-    * with PRE-filter semantics: exact top-k of the surviving subset.
-    * The graph is deliberately bypassed ([[queryFiltered]]'s argument —
-    * an arbitrary predicate can disconnect any graph, and the walk
-    * cannot guarantee k survivors), so this is one filter-pushed,
-    * column-pruned scan of the live vectors: metadata columns ride in
-    * the vectors layout ([[writeGraphIndex]] persists every prepared
-    * column), so simple predicates reach the parquet reader as
-    * PushedFilters and no side join is needed. */
-  override def supportsDiskFiltered: Boolean = true
-  override def queryFilteredFromDisk(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, k: Int,
-      predicate: org.apache.spark.sql.Column): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val kn = scoringKernel
-    val q = kn.walkQueries(queries)
-    val vecs = committedVectors(spark, path).where(predicate)
-      .select("id", "vector")
-    val pairs = vecs.select("id").crossJoin(q.select("query_id"))
-    TopK.topKPerGroup(kn.scoreCandidates(vecs, q, pairs),
-      Seq("query_id"), "id", "dist", k)
-  }
-
-  /** Tombstone DELETE on the disk-resident graph (completing the graph
-    * family's serving CRUD next to [[appendGraphIndex]] /
-    * [[compactGraphIndex]], the way [[IvfStrategy.deleteFromDisk]]
-    * completes the cell family's): deleted ids land as one bucketed
-    * tombstone generation — no data rewrite, no graph surgery. Until
-    * compaction the nodes still ROUTE (hnswlib's mark-deleted semantics:
-    * removing a hub would tear connectivity) but are excluded from every
-    * served result; [[compactGraphIndex]] then physically drops their
-    * vectors, their adjacency rows, and the edges pointing at them. The
-    * existence check is partition-pruned to the candidates' buckets —
-    * I/O proportional to the delete batch, never the store. Returns the
-    * number of live rows newly tombstoned. */
-  override def supportsDiskDelete: Boolean = true
-  override def deleteFromDisk(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame, tag: String): Long = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val meta = mapper.readTree(graft.core.FsIO.read(s"$path/_graph_meta.json"))
-    require(meta.get("generations") != null,
-      s"index at $path predates the generation layout")
-    val buckets = meta.get("buckets").asInt()
-    // claim the TOMBSTONE slot before reading the prior tombstone state
-    // (r17 — the delete-side twin of the append claims: two concurrent
-    // deleters would both write tombstones `_gen=T` and dynamic-
-    // overwrite each other, resurrecting deleted rows). Same-tag replay
-    // reclaims; a foreign in-flight claim fails loudly.
-    val tGens = graft.core.Generations.claimAppendGeneration(spark, path,
-      tag, () => GraphLayout.tombstoneGens(path), slot = "tomb")
-    try {
-      // verify against LIVE rows only, pruned to the candidates' buckets.
-      // BOTH counters are re-read AFTER the claim (advice r17): the
-      // tombstone frame so it covers everything committed up to the
-      // claimed slot, and the append-generation count so rows a
-      // concurrent appender committed between this method's entry and
-      // the claim are seen as existing (the pre-claim `gens` silently
-      // no-op'd a delete of a just-appended id)
-      val cand = ids.select("id").distinct()
-      val candIds = cand.collect().map(_.getLong(0))
-      val freshGens = mapper.readTree(
-        graft.core.FsIO.read(s"$path/_graph_meta.json"))
-        .get("generations").asInt()
-      val existing = prunedRead(spark, path, "vectors", "id", candIds,
-        buckets, Seq("id"), freshGens)
-      val prior = GraphLayout.tombstoneFrame(spark, path)
-      val fresh = prior.fold(existing)(t =>
-        existing.join(t, Seq("id"), "left_anti")).cache()
-      val n = fresh.count()
-      if (n > 0) {
-        // at tGens == 0 any existing tombstones/ dir is an invisible
-        // leftover from a compaction that crashed between its sidecar
-        // commit and its directory delete — clear it FIRST (the
-        // staging-dir pre-delete discipline): writeGeneration's dynamic
-        // partition overwrite would otherwise keep the leftover's stale
-        // (_gen=0, _nb) partitions, and the sidecar bump below would make
-        // every reader see those SPENT tombstones again, silently hiding
-        // any id that was re-inserted since the compaction
-        if (tGens == 0) {
-          val tPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-          val tFs = tPath.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          if (tFs.exists(tPath)) tFs.delete(tPath, true)
-        }
-        writeGeneration(fresh, "id", s"$path/tombstones", buckets, tGens)
-        // the commit touches ONLY the tombstone counter's own sidecar
-        // (advice r17): rewriting the shared graph meta here could
-        // revert a generation count an appender committed concurrently
-        GraphLayout.writeTombstoneGens(path, tGens + 1)
-      } else {
-        // a no-op delete must not leave an unresolved claim behind
-        graft.core.Generations.releaseClaim(spark, path, tGens, tag,
-          slot = "tomb")
-      }
-      fresh.unpersist()
-      n
-    } catch {
-      case e: Throwable =>
-        graft.core.Generations.releaseClaim(spark, path, tGens, tag,
-          slot = "tomb")
-        throw e
-    }
-  }
-
-  /** ANN threshold semantics: top-max_k then strict `<` (hnsw.py:107-114) */
-  def queryThreshold(prepared: DataFrame, queries: DataFrame,
-      threshold: Double, maxK: Int): DataFrame =
-    if (maxK <= 0) IndexStrategy.emptyThreshold(queries)
-    else query(prepared, queries, maxK)
-      .where(col("dist") < threshold).drop("rank")
-
-  /** [[queryThreshold]] served from the layout (r15 — the flag was
-    * false for no structural reason, and a serving tier routing
-    * threshold workloads on capability flags hit the gap exactly like
-    * the r14 delete case): the family's ANN threshold contract is
-    * top-max_k THEN the strict `<` mask, so the disk form is the same
-    * mask over the [[queryFromDisk]] walk — disk ≡ memory decision for
-    * decision here by construction. */
-  override def supportsDiskThreshold: Boolean = true
-  override def queryThresholdFromDisk(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, threshold: Double,
-      maxK: Int): DataFrame =
-    if (maxK <= 0) IndexStrategy.emptyThreshold(queries)
-    else queryFromDisk(spark, path, queries, maxK)
-      .where(col("dist") < threshold).drop("rank")
 
   /** UPPER BOUND on candidates scored per query: entry stage + one
     * m-neighbor expansion per upper layer + the layer-0 beam's worst case,
@@ -886,10 +583,7 @@ case class HnswStrategy(metric: Metric, m: Int = 16,
       path: String,
       tag: String = graft.core.Generations.defaultWriterTag): DataFrame = {
     require(layers != null, "prepare must run before appendGraphIndex")
-    val meta = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readTree(graft.core.FsIO.read(s"$path/_graph_meta.json"))
-    require(meta.get("metric").asText() == metric.name,
-      s"index at $path was built for metric ${meta.get("metric").asText()}")
+    val meta = readMeta(path)
     require(meta.get("generations") != null,
       s"index at $path predates the generation layout — rewrite it with " +
         "writeGraphIndex before appending")
@@ -910,20 +604,20 @@ case class HnswStrategy(metric: Metric, m: Int = 16,
     // (verdict r16 #1): a conflicting concurrent writer must be
     // detected while this instance's layers are still untouched
     val gens = graft.core.Generations.claimAppendGeneration(spark,
-      path, tag,
-      () => new com.fasterxml.jackson.databind.ObjectMapper()
-        .readTree(graft.core.FsIO.read(s"$path/_graph_meta.json"))
-        .get("generations").asInt())
+      path, tag, () => readMeta(path).get("generations").asInt())
     try {
       val (newPrepared, deltaVecs, deltaAdj) =
         prepareIncrementDelta(prevPrepared, newRows)
-      writeGeneration(deltaVecs, "id", s"$path/vectors", buckets, gens)
-      writeGeneration(deltaAdj, "src", s"$path/layer_0", buckets, gens)
+      GraphLayout.writeGeneration(deltaVecs, "id", s"$path/vectors",
+        buckets, gens)
+      GraphLayout.writeGeneration(deltaAdj, "src", s"$path/layer_0",
+        buckets, gens)
       // the commit rewrites the graph meta (generations + entries) and
       // NOTHING of the tombstone counter, which lives in its own
       // sidecar (advice r17): a delete committing concurrently with
       // this append can no longer be reverted by this write
-      writeGraphMeta(path, buckets, generations = gens + 1)
+      graft.core.FsIO.write(s"$path/$metaFile",
+        graphMetaJson(buckets, generations = gens + 1))
       newPrepared
     } catch {
       case e: Throwable =>
@@ -932,110 +626,14 @@ case class HnswStrategy(metric: Metric, m: Int = 16,
     }
   }
 
-  /** Fold a generation-layered graph layout back to a single `_gen=0`
-    * generation — vectors union (append-only ids), adjacency
-    * latest-per-src — via the [[graft.core.Generations.swapInto]]
-    * two-rename protocol per subdir (staging write is re-runnable; a
-    * crash before a swap leaves the live layout untouched). Upper layers
+  /** Fold the layout's append generations and spent tombstones back to
+    * one `_gen=0` generation — the shared [[GraphServing]] compaction,
+    * without the maintenance fence [[compactServing]] adds. Upper layers
     * never receive deltas (inserts wire layer 0 only, matching the
-    * in-memory insert), so only vectors and layer_0 are rewritten. The
-    * sidecar keeps its entry set and walk configuration; only the
-    * generation count resets. */
-  /** [[compactGraphIndex]] behind the uniform [[DiskServing]] flag
-    * (verdict r14 #3) */
-  override def supportsCompaction: Boolean = true
-  override protected def doCompactServing(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = compactGraphIndex(spark, path)
-
+    * in-memory insert), so they are rewritten only when tombstones must
+    * leave them. */
   def compactGraphIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val meta = mapper.readTree(graft.core.FsIO.read(s"$path/_graph_meta.json"))
-    require(meta.get("generations") != null,
-      s"index at $path predates the generation layout")
-    val gens = meta.get("generations").asInt()
-    val tomb = GraphLayout.tombstoneFrame(spark, path)
-    if (gens <= 1 && tomb.isEmpty) return // already compact
-    val buckets = meta.get("buckets").asInt()
-    // tombstoned nodes leave PHYSICALLY here: their vectors and adjacency
-    // rows drop, and so do edges POINTING at them (a dangling dst is
-    // harmless to the walk — the frontier scoring join skips it — but
-    // dead edges are wasted frontier I/O forever)
-    def fold(sub: String, idCol: String, stripDst: Boolean): Unit = {
-      val rows = spark.read.parquet(s"$path/$sub")
-        .where(col("_gen") < gens)
-      val latest = rows.groupBy(idCol).agg(max("_gen").as("_gen"))
-      val merged = rows.join(latest, Seq(idCol, "_gen"))
-        .drop("_gen", "_nb")
-      val live = tomb.fold(merged)(t => merged.join(
-        t.withColumnRenamed("id", idCol), Seq(idCol), "left_anti"))
-      val state = if (stripDst)
-        tomb.fold(live)(t => live.join(
-          t.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti"))
-      else live
-      val staging = s"$path/$sub" + "__compacting"
-      // clear any leftover staging dir from a crashed earlier compaction
-      // FIRST (advice r12): writeGeneration's dynamic partition overwrite
-      // would keep stale (_gen=0,_nb=X) partitions this re-run doesn't
-      // write — e.g. a bucket emptied by tombstones since — and swapInto
-      // would promote those rows, resurrecting deleted data
-      val stPath = new org.apache.hadoop.fs.Path(staging)
-      val stFs = stPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (stFs.exists(stPath)) stFs.delete(stPath, true)
-      writeGeneration(state, idCol, staging, buckets, gen = 0)
-      graft.core.Generations.swapInto(spark, s"$path/$sub", staging)
-    }
-    fold("vectors", "id", stripDst = false)
-    val nLayers = meta.get("n_layers").asInt()
-    // layer 0 always folds (it takes insert deltas); upper layers only
-    // need a rewrite when tombstones must leave them
-    fold("layer_0", "src", stripDst = true)
-    if (tomb.nonEmpty)
-      for (l <- 1 until nLayers) fold(s"layer_$l", "src", stripDst = true)
-    val root = meta.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    root.put("generations", 1)
-    // the tombstones are spent: drop the set and reset the count; a
-    // tombstoned id also leaves the sidecar entry list (its vector is
-    // gone — it can no longer route)
-    if (tomb.nonEmpty) {
-      val eIt = meta.get("entries").elements()
-      val entryArr = Iterator.continually(eIt).takeWhile(_.hasNext)
-        .map(_.next().asLong()).toArray
-      // bounded pull: only tombstones that hit the (≤ max(ef, 2m)-sized)
-      // entry list come back, never the whole delete history
-      val dead = tomb.get
-        .where(col("id").isin(entryArr.map(java.lang.Long.valueOf).toSeq: _*))
-        .collect().map(_.getLong(0)).toSet
-      val kept = entryArr.filterNot(dead)
-      val arr = root.putArray("entries")
-      kept.foreach(arr.add)
-    }
-    // sidecars commit BEFORE the tombstones dir is deleted (advice r12):
-    // at tombstone_generations=0 an orphaned tombstones/ dir is invisible
-    // to every reader, so a crash in this window leaves a servable layout
-    // — the reverse order left a sidecar pointing at a missing directory,
-    // bricking every subsequent disk read. Same sidecar-commits-last
-    // discipline as the append path. Counter order: the tombstone reset
-    // lands FIRST — between the two writes a reader sees folded data
-    // with no tombstones (correct: the fold already dropped the rows)
-    // and a crash there re-runs the fold idempotently; the reverse order
-    // would leave spent tombstones visible over data that can re-admit
-    // their ids. The leftover tombstones dir is NOT writable-over:
-    // [[deleteFromDisk]] clears it before writing a fresh generation 0
-    // (dynamic partition overwrite would keep its stale partitions and
-    // resurrect the spent tombstones).
-    if (tomb.nonEmpty) GraphLayout.writeTombstoneGens(path, 0)
-    graft.core.FsIO.write(s"$path/_graph_meta.json",
-      mapper.writeValueAsString(root))
-    if (tomb.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    }
-    // the count reset: spent claims must not outlive it, or the first
-    // post-compact append's slot would read as foreign-claimed forever
-    graft.core.Generations.clearClaims(spark, path)
-  }
+      path: String): Unit = doCompactServing(spark, path)
 
   /** persist every layer's adjacency + meta so load never retrains
     * (≙ the hnswlib index file, hnsw.py:84-97) */
@@ -1069,41 +667,4 @@ case class HnswStrategy(metric: Metric, m: Int = 16,
       kernel = k0
     }
   }
-
-  /** The graph family's staleness is structural rather than a codebook:
-    * tombstoned nodes still ROUTE until compaction, and even compaction
-    * never relearns the survivors' neighborhoods — append deltas learned
-    * their edges against the store AS OF their insert, so a long
-    * mutation history erodes the beam walk's recall. A rebuild relearns
-    * the whole layer stack from the LIVE rows (committed generations
-    * minus tombstones) and swaps the fresh layout in. */
-  override def supportsRebuild: Boolean = true
-  override protected def doRebuildServing(spark: org.apache.spark.sql.SparkSession,
-      path: String): DiskServing.Rebuilt = {
-    // drop the layout's own partition columns: writeGeneration would
-    // overwrite them anyway, but the returned store/prepared frames are
-    // the caller's in-memory state and must not carry stale layout ids.
-    // localCheckpoint, not cache: the rewrite below replaces this
-    // frame's source files ([[IvfStrategy.rebuildCells]] argument)
-    val rows = committedVectors(spark, path).drop("_gen", "_nb")
-      .localCheckpoint()
-    val fresh = this.copy()
-    val prepared = fresh.prepare(rows)
-    fresh.writeGraphIndex(prepared, path)
-    DiskServing.Rebuilt(fresh, rows, prepared)
-  }
-
-  /** the maintenance fence's committed counters ([[DiskServing]]) */
-  override def committedCounts(spark: org.apache.spark.sql.SparkSession,
-      path: String): Map[String, Int] = Map(
-    "gen" -> graft.core.Generations.sidecarCount(
-      s"$path/_graph_meta.json", "generations"),
-    "tomb" -> GraphLayout.tombstoneGens(path))
-
-  override def fsckServing(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    ServingFsck.graphLayout(spark, path, "_graph_meta.json",
-      Seq("buckets", "n_layers", "metric", "m", "ef_search", "hops",
-        "descent_width", "generations", "entries"),
-      nLayers => (0 until nLayers).map(l => s"layer_$l"))
 }

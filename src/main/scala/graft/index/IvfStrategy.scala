@@ -257,26 +257,13 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
       family: String): Unit = {
     require(centroids != null,
       "prepare must run before writeServingIndex")
-    val spark = prepared.sparkSession
     val rows = prepared.withColumn("_gen", lit(0))
       .repartition(col("_centroid"))
-    def writeInto(dir: String): Unit =
+    graft.core.Generations.writeStaged(prepared.sparkSession, path) { dir =>
       rows.write.mode("overwrite").partitionBy("_gen", "_centroid")
         .parquet(dir)
-    val live = new org.apache.hadoop.fs.Path(path)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live)) {
-      writeInto(path)
-      graft.core.FsIO.write(servingMetaPath(path),
+      graft.core.FsIO.write(servingMetaPath(dir),
         cellMetaJson(family, generations = 1))
-    } else {
-      val staging = path + "__staging"
-      val st = new org.apache.hadoop.fs.Path(staging)
-      if (fs.exists(st)) fs.delete(st, true)
-      writeInto(staging)
-      graft.core.FsIO.write(servingMetaPath(staging),
-        cellMetaJson(family, generations = 1))
-      graft.core.Generations.swapInto(spark, path, staging)
     }
   }
 
@@ -369,17 +356,14 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
     if (gens <= 1) return // already compact
     val committed = spark.read.parquet(path)
       .where(col("_gen") < gens).drop("_gen")
-    val staging = path + "__compacting"
-    val st = new org.apache.hadoop.fs.Path(staging)
-    val fs = st.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(st)) fs.delete(st, true)
-    committed.withColumn("_gen", lit(0))
-      .repartition(col("_centroid"))
-      .write.mode("overwrite").partitionBy("_gen", "_centroid")
-      .parquet(staging)
-    graft.core.FsIO.write(servingMetaPath(staging),
-      cellMetaJson(family, generations = 1))
-    graft.core.Generations.swapInto(spark, path, staging)
+    graft.core.Generations.writeStaged(spark, path, "__compacting") { dir =>
+      committed.withColumn("_gen", lit(0))
+        .repartition(col("_centroid"))
+        .write.mode("overwrite").partitionBy("_gen", "_centroid")
+        .parquet(dir)
+      graft.core.FsIO.write(servingMetaPath(dir),
+        cellMetaJson(family, generations = 1))
+    }
   }
 
   /** [[DiskServing.rebuildServing]] for the cell families, family-

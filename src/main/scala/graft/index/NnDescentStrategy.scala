@@ -52,7 +52,7 @@ case class NnDescentStrategy(metric: Metric, nNeighbors: Int = 15,
     iters: Int = 5, sampleDeg: Int = 15, nSeeds: Int = 64, beam: Int = 40,
     hops: Int = 2, seed: Long = 42L,
     smallBuildElems: Long = 4L << 20)
-  extends IndexStrategy with DiskServing {
+  extends IndexStrategy with GraphServing {
   require(metric == Metric.Cosine || metric == Metric.Euclidean ||
     metric == Metric.Manhattan,
     s"Metric '${metric.name}' is not supported by the NN-descent backend.")
@@ -449,9 +449,8 @@ case class NnDescentStrategy(metric: Metric, nNeighbors: Int = 15,
     val batch = if (localIds == null) None
       else NnDescentStrategy.driverBatch(q)
     if (batch.isDefined) {
-      val sd = seed
-      val seeds = localIds
-        .sortBy(id => (NnDescentStrategy.mix(id, 0L, sd), id))
+      val rank = entryRank
+      val seeds = localIds.sortBy(id => (rank(id), id))
         .take(math.min(nSeeds, localIds.length))
       return walkResultFrame(prepared.sparkSession, batch.get,
         qv => beamLocalOne(qv, seeds, localIds, localVs,
@@ -462,10 +461,8 @@ case class NnDescentStrategy(metric: Metric, nNeighbors: Int = 15,
     // (a modulo filter would make the seed count binomially distributed
     // around nSeeds, breaking scanVolume's guaranteed bound — advice r4);
     // orderBy+limit plans as TakeOrdered, an O(n) scan, not a full sort
-    val sd = seed
-    val mixUdf = udf((a: Long, b: Long) => NnDescentStrategy.mix(a, b, sd))
     val seeds = vecs
-      .withColumn("_h", mixUdf(col("id"), lit(0L)))
+      .withColumn("_h", udf(entryRank).apply(col("id")))
       .orderBy(col("_h"), col("id")).limit(nSeeds)
       .drop("_h")
     val seedPairs = seeds.select("id").crossJoin(q.select("query_id"))
@@ -521,27 +518,6 @@ case class NnDescentStrategy(metric: Metric, nNeighbors: Int = 15,
     beamFrom(graph, vecs, q, allSeeds, k, 0, k)
   }
 
-  /** ANN threshold semantics: top-max_k then strict `<` mask
-    * (pynndescent.py:85-93) */
-  def queryThreshold(prepared: DataFrame, queries: DataFrame,
-      threshold: Double, maxK: Int): DataFrame =
-    if (maxK <= 0) IndexStrategy.emptyThreshold(queries)
-    else query(prepared, queries, maxK)
-      .where(col("dist") < threshold).drop("rank")
-
-  /** [[queryThreshold]] served from the layout (r15, the
-    * [[HnswStrategy.queryThresholdFromDisk]] argument): the ANN
-    * threshold contract is top-max_k then the strict `<` mask, so the
-    * disk form is the same mask over the [[queryFromDisk]] walk —
-    * disk ≡ memory by construction. */
-  override def supportsDiskThreshold: Boolean = true
-  override def queryThresholdFromDisk(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, threshold: Double,
-      maxK: Int): DataFrame =
-    if (maxK <= 0) IndexStrategy.emptyThreshold(queries)
-    else queryFromDisk(spark, path, queries, maxK)
-      .where(col("dist") < threshold).drop("rank")
-
   /** UPPER BOUND on candidates the walk scores per query (seeds + every
     * hop's worst-case frontier), capped at n — the graph index's QPS
     * story: independent of n once the graph exists. An exact count would
@@ -583,28 +559,19 @@ case class NnDescentStrategy(metric: Metric, nNeighbors: Int = 15,
 
   // --------------------------------------------------------------------
   // Disk-resident serving (verdict r13 #2 — the last index family
-  // without a layout). The graph is single-layer, so the layout is the
-  // HNSW bucketed template's one-layer case ([[GraphLayout]]):
-  //   vectors/  every prepared column, `_nb = id mod buckets` dirs,
-  //             id-sorted within files (metadata rides in the layout so
-  //             filtered serving pushes its predicate into the scan)
-  //   graph/    the k-NN adjacency (src, dst), bucketed by src
-  //   _nn_serving_meta.json  layout shape + the WRITER's walk config
-  //             (entries/beam/hops — the reader-adopts-writer-config
-  //             discipline: the entry set was ranked with the writer's
-  //             seed, so a differently-configured reader would silently
-  //             break the disk == memory walk equality)
-  // A walk touches, per hop, only the directories holding its
-  // frontier's buckets and only the row groups passing the pushed
-  // `src IN` / `id IN` filters — I/O proportional to the frontier, never
-  // the store. Reference parity: pynndescent persists and serves its
-  // graph (`pynndescent.py:93-115`); insert stays unsupported on disk as
-  // in memory (`pynndescent.py:75-77` rejects insertion — the layout is
-  // generation-tagged only for the shared plumbing). Delete is a
-  // serving-layer MAINTENANCE op ([[deleteFromDisk]], verdict r14 #2 —
-  // the HNSW tombstone pattern's single-layer case; the reference's
-  // facade delete stays BASIC-only, `pynndescent.py:79-83`, and
-  // `Vicinity.delete` enforces that gate).
+  // without a layout): the graph is single-layer, so the layout is the
+  // shared [[GraphLayout]] with one adjacency sub-layout, `graph/`, and
+  // every serving operation is the shared [[GraphServing]] body. The
+  // sidecar `_nn_serving_meta.json` records the layout shape and the
+  // WRITER's walk config (entries/beam/hops — the entry set was ranked
+  // with the writer's seed, so a differently-configured reader would
+  // silently break the disk == memory walk equality). Reference parity:
+  // pynndescent persists and serves its graph (`pynndescent.py:93-115`);
+  // insert stays unsupported on disk as in memory (`pynndescent.py:75-77`
+  // — the layout is generation-tagged only for the shared plumbing).
+  // Delete is a serving-layer MAINTENANCE op (verdict r14 #2; the
+  // reference's facade delete stays BASIC-only, `pynndescent.py:79-83`,
+  // and `Vicinity.delete` enforces that gate).
   // --------------------------------------------------------------------
 
   /** node-bucket fan of the serving layout */
@@ -613,35 +580,48 @@ case class NnDescentStrategy(metric: Metric, nNeighbors: Int = 15,
   override def writeServingIndex(prepared: DataFrame, path: String): Unit = {
     require(graph != null,
       "NnDescentStrategy.prepare must run before writeServingIndex")
-    // writeFresh, not a bare generation write (review r14): rewriting an
-    // existing layout must not leave stale buckets behind
-    GraphLayout.writeFresh(prepared, "id", s"$path/vectors", diskBuckets)
-    GraphLayout.writeFresh(graph.select("src", "dst"), "src",
-      s"$path/graph", diskBuckets)
-    // the hash-ranked entry set — EXACTLY the seeds [[query]] walks from
-    // (same mixer, same (hash, id) order), bounded by nSeeds
-    val sd = seed
-    val mixUdf = udf((a: Long, b: Long) => NnDescentStrategy.mix(a, b, sd))
-    val entries = prepared.select(col("id"))
-      .withColumn("_h", mixUdf(col("id"), lit(0L)))
-      .orderBy(col("_h"), col("id")).limit(nSeeds)
-      .collect().map(_.getLong(0))
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = mapper.createObjectNode()
-    root.put("metric", metric.name)
-    root.put("buckets", diskBuckets)
-    root.put("n_neighbors", nNeighbors)
-    root.put("beam", beam)
-    root.put("hops", hops)
-    root.put("generations", 1)
-    val arr = root.putArray("entries")
-    entries.foreach(arr.add)
-    graft.core.FsIO.write(s"$path/_nn_serving_meta.json",
-      mapper.writeValueAsString(root))
-    GraphLayout.writeTombstoneGens(path, 0) // fresh layout: no tombstones
+    writeLayout(prepared, path, diskBuckets, Seq(graph), {
+      // the hash-ranked entry set — EXACTLY the seeds [[query]] walks
+      // from (same mixer, same (hash, id) order), bounded by nSeeds
+      val entries = prepared.select(col("id"))
+        .withColumn("_h", udf(entryRank).apply(col("id")))
+        .orderBy(col("_h"), col("id")).limit(nSeeds)
+        .collect().map(_.getLong(0))
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val root = mapper.createObjectNode()
+      root.put("metric", metric.name)
+      root.put("buckets", diskBuckets)
+      root.put("n_neighbors", nNeighbors)
+      root.put("beam", beam)
+      root.put("hops", hops)
+      root.put("generations", 1)
+      val arr = root.putArray("entries")
+      entries.foreach(arr.add)
+      mapper.writeValueAsString(root)
+    })
   }
 
-  private def readServingMeta(
+  protected def metaFile: String = "_nn_serving_meta.json"
+  protected def metaFields: Seq[String] = Seq("metric", "buckets",
+    "n_neighbors", "beam", "hops", "generations", "entries")
+  protected def adjacencySubs(nLayers: Int): Seq[String] = Seq("graph")
+  protected def entryRank: Long => Long = {
+    val sd = seed
+    id => NnDescentStrategy.mix(id, 0L, sd)
+  }
+  protected def walkKernel: NnDescentStrategy = this
+  protected def untrained: IndexStrategy with DiskServing = copy()
+
+  /** the walk: entries cut to the writer's beam, then `hops` expansions
+    * of `graph` at that beam */
+  protected def walkPlan(
+      meta: com.fasterxml.jackson.databind.JsonNode): GraphLayout.WalkPlan = {
+    val w = meta.get("beam").asInt()
+    GraphLayout.WalkPlan(w, Seq.fill(meta.get("hops").asInt())(("graph", w)),
+      w)
+  }
+
+  protected def readMeta(
       path: String): com.fasterxml.jackson.databind.JsonNode = {
     require(graft.core.FsIO.exists(s"$path/_nn_serving_meta.json"),
       s"no NN-descent serving layout at $path (missing _nn_serving_meta.json)")
@@ -663,326 +643,6 @@ case class NnDescentStrategy(metric: Metric, nNeighbors: Int = 15,
     }
     meta
   }
-
-  /** The beam walk served DIRECTLY from a [[writeServingIndex]] layout,
-    * with no resident graph: stage for stage [[beamFrom]] (seed scoring →
-    * `hops` frontier expansions → top-k), except every adjacency/vector
-    * access is a partition-pruned, filter-pushed read of exactly the
-    * frontier's rows ([[GraphLayout.prunedRead]]). Frontier ids are
-    * driver-enumerated per hop — bounded by beam width × batch × degree,
-    * the bounded-driver-pull convention — so the `IN`-list prune is known
-    * before each scan starts. Candidates, scores, and tie-breaks are
-    * identical to the in-memory walk (spec-asserted equality). */
-  override def queryFromDisk(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val meta = readServingMeta(path)
-    val buckets = meta.get("buckets").asInt()
-    val diskBeam = meta.get("beam").asInt()
-    val diskHops = meta.get("hops").asInt()
-    val gens = meta.get("generations").asInt()
-    val eIt = meta.get("entries").elements()
-    val entries = Iterator.continually(eIt)
-      .takeWhile(_.hasNext).map(_.next().asLong()).toArray
-    val q = walkQueries(queries)
-    // each sub-layout's swap-safe base resolved ONCE per walk (r21, the
-    // HnswStrategy.queryFromDisk discipline): no per-hop schema-inference
-    // job / re-listing, one consistent layout snapshot across hops
-    val bases = scala.collection.mutable.Map.empty[String, DataFrame]
-    def pruned(sub: String, idCol: String, ids: Array[Long],
-        cols: Seq[String]): DataFrame =
-      GraphLayout.pruneIds(
-        bases.getOrElseUpdate(sub,
-          GraphLayout.swapSafeBase(spark, path, sub, gens)),
-        idCol, ids, buckets, cols, gens)
-    import spark.implicits._
-    val entryPairs = entries.toSeq.toDF("id")
-      .crossJoin(q.select("query_id"))
-    var beamDf = TopK.topKPerGroup(
-        scoreCandidates(pruned("vectors", "id", entries,
-          Seq("id", "vector")), q, entryPairs),
-        Seq("query_id"), "id", "dist", diskBeam)
-      .select("query_id", "id", "dist").localCheckpoint()
-    for (_ <- 1 to diskHops) {
-      val srcIds = beamDf.select("id").distinct().collect().map(_.getLong(0))
-      val adj = pruned("graph", "src", srcIds, Seq("src", "dst"))
-        .withColumnRenamed("src", "id")
-      val frontier = beamDf.select("query_id", "id").join(adj, Seq("id"))
-        .select(col("query_id"), col("dst").as("id")).distinct()
-        .localCheckpoint()
-      val candIds = frontier.select("id").distinct().collect()
-        .map(_.getLong(0))
-      val merged = beamDf.unionByName(scoreCandidates(
-          pruned("vectors", "id", candIds, Seq("id", "vector")), q, frontier))
-        .groupBy("query_id", "id").agg(min("dist").as("dist"))
-      beamDf = TopK.topKPerGroup(merged, Seq("query_id"), "id", "dist",
-          diskBeam)
-        .select("query_id", "id", "dist").localCheckpoint()
-    }
-    // tombstones (disk delete): deleted nodes still ROUTE — the walk
-    // traverses them exactly as before (removing a hub would tear the
-    // k-NN graph's connectivity) — but are excluded from served results;
-    // the beam-wide candidate set absorbs the filter
-    val served = GraphLayout.tombstoneFrame(spark, path)
-      .fold(beamDf)(t => beamDf.join(t, Seq("id"), "left_anti"))
-    TopK.topKPerGroup(served, Seq("query_id"), "id", "dist", k)
-  }
-
-  /** [[queryExhaustive]]'s full-seed identity through the layout's
-    * vectors side — the family's oracle anchor THROUGH the disk round
-    * trip (the adjacency round trip is pinned by the disk ≡ memory
-    * walk-equality spec: a diverged edge set would divert the walk). */
-  /** the layout's LIVE vector rows — same `_gen < generations` gate as
-    * the walk's pruned reads (review r14: every entry point shares one
-    * visibility rule, or an orphan generation would be visible to some
-    * and not others), minus tombstones (exact semantics: a deleted row
-    * is GONE here, unlike the walk where it still routes until
-    * compaction) */
-  private def committedVectors(spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      meta: com.fasterxml.jackson.databind.JsonNode): DataFrame = {
-    val committed = spark.read.parquet(s"$path/vectors")
-      .where(col("_gen") < meta.get("generations").asInt())
-    GraphLayout.tombstoneFrame(spark, path)
-      .fold(committed)(t => committed.join(t, Seq("id"), "left_anti"))
-  }
-
-  def queryExhaustiveFromDisk(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val meta = readServingMeta(path)
-    val q = walkQueries(queries)
-    val vecs = committedVectors(spark, path, meta).select("id", "vector")
-    val pairs = vecs.select("id").crossJoin(q.select("query_id"))
-    TopK.topKPerGroup(scoreCandidates(vecs, q, pairs),
-      Seq("query_id"), "id", "dist", k)
-  }
-
-  /** Filtered search off the layout — [[queryFiltered]]'s exact-subset
-    * semantics (an arbitrary predicate can disconnect any graph, so the
-    * graph is deliberately bypassed): one filter-pushed, column-pruned
-    * scan of the layout vectors, every survivor seeded. */
-  override def supportsDiskFiltered: Boolean = true
-  override def queryFilteredFromDisk(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, k: Int,
-      predicate: org.apache.spark.sql.Column): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val meta = readServingMeta(path)
-    val q = walkQueries(queries)
-    val vecs = committedVectors(spark, path, meta).where(predicate)
-      .select("id", "vector")
-    val pairs = vecs.select("id").crossJoin(q.select("query_id"))
-    TopK.topKPerGroup(scoreCandidates(vecs, q, pairs),
-      Seq("query_id"), "id", "dist", k)
-  }
-
-  /** Tombstone DELETE on the serving layout (verdict r14 #2 — the HNSW
-    * tombstone pattern's single-layer case): deleted ids land as one
-    * bucketed tombstone generation, no data rewrite, no graph surgery.
-    * Until [[compactServing]] the nodes still ROUTE (tearing a hub out
-    * of the k-NN graph would break connectivity) but are excluded from
-    * every served result. The existence check is partition-pruned to the
-    * candidates' buckets — I/O proportional to the delete batch, never
-    * the store. Returns the number of live rows newly tombstoned. */
-  override def supportsDiskDelete: Boolean = true
-  override def deleteFromDisk(spark: org.apache.spark.sql.SparkSession,
-      path: String, ids: DataFrame, tag: String): Long = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val meta = readServingMeta(path)
-    val buckets = meta.get("buckets").asInt()
-    // claim the TOMBSTONE slot before reading the prior tombstone state
-    // (r17 — the delete-side twin of the append claims, the HNSW
-    // discipline): two concurrent deleters would both write tombstones
-    // `_gen=T` and dynamic-overwrite each other, resurrecting deleted
-    // rows. Same-tag replay reclaims; a foreign in-flight claim fails.
-    val tGens = graft.core.Generations.claimAppendGeneration(spark, path,
-      tag, () => GraphLayout.tombstoneGens(path), slot = "tomb")
-    try {
-      // verify against LIVE rows only, pruned to the candidates' buckets.
-      // BOTH counters are re-read AFTER the claim (advice r17): the
-      // tombstone frame so it covers everything committed up to the
-      // claimed slot, and the append-generation count so rows a
-      // concurrent appender committed since this method's entry are
-      // seen as existing
-      val candIds = ids.select(col("id").cast("long").as("id")).distinct()
-        .collect().map(_.getLong(0))
-      val freshGens = readServingMeta(path).get("generations").asInt()
-      val existing = GraphLayout.prunedRead(spark, path, "vectors", "id",
-        candIds, buckets, Seq("id"), freshGens)
-      val prior = GraphLayout.tombstoneFrame(spark, path)
-      val fresh = prior.fold(existing)(t =>
-        existing.join(t, Seq("id"), "left_anti")).cache()
-      val n = fresh.count()
-      if (n > 0) {
-        // at tGens == 0 any existing tombstones/ dir is an invisible
-        // leftover from a compaction that crashed between its sidecar
-        // commit and its directory delete — clear it FIRST (the HNSW
-        // discipline): the generation write's dynamic partition overwrite
-        // would otherwise keep the leftover's stale partitions, and the
-        // sidecar bump would resurrect SPENT tombstones
-        if (tGens == 0) {
-          val tPath = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-          val tFs = tPath.getFileSystem(
-            spark.sparkContext.hadoopConfiguration)
-          if (tFs.exists(tPath)) tFs.delete(tPath, true)
-        }
-        GraphLayout.writeGeneration(fresh, "id", s"$path/tombstones",
-          buckets, tGens)
-        // the commit touches ONLY the tombstone counter's own sidecar
-        // (advice r17): rewriting the shared serving meta here could
-        // revert state another writer committed concurrently
-        GraphLayout.writeTombstoneGens(path, tGens + 1)
-      } else {
-        // a no-op delete must not leave an unresolved claim behind
-        graft.core.Generations.releaseClaim(spark, path, tGens, tag,
-          slot = "tomb")
-      }
-      fresh.unpersist()
-      n
-    } catch {
-      case e: Throwable =>
-        graft.core.Generations.releaseClaim(spark, path, tGens, tag,
-          slot = "tomb")
-        throw e
-    }
-  }
-
-  /** Fold the layout back to a single tombstone-free `_gen=0` state
-    * (verdict r14 #3 — the HNSW [[HnswStrategy.compactGraphIndex]]
-    * discipline's single-layer case): tombstoned nodes leave PHYSICALLY
-    * — their vectors, their adjacency rows, and the edges POINTING at
-    * them — via staging + rename-swap rewrites (the staging write
-    * finishes reading the live files before the swap, so
-    * rewrite-from-own-read is safe). The sidecar drops dead entry nodes
-    * and resets the tombstone count BEFORE the spent tombstones
-    * directory is deleted (sidecar-commits-first: at
-    * tombstone_generations=0 an orphaned tombstones/ dir is invisible,
-    * and [[deleteFromDisk]] clears such a leftover before its next
-    * generation-0 write). */
-  override def supportsCompaction: Boolean = true
-  override protected def doCompactServing(spark: org.apache.spark.sql.SparkSession,
-      path: String): Unit = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val meta = readServingMeta(path)
-    val gens = meta.get("generations").asInt()
-    val tomb = GraphLayout.tombstoneFrame(spark, path)
-    if (gens <= 1 && tomb.isEmpty) return // already compact
-    val buckets = meta.get("buckets").asInt()
-    def fold(sub: String, idCol: String, stripDst: Boolean): Unit = {
-      val rows = spark.read.parquet(s"$path/$sub")
-        .where(col("_gen") < gens)
-      val latest = rows.groupBy(idCol).agg(max("_gen").as("_gen"))
-      val merged = rows.join(latest, Seq(idCol, "_gen"))
-        .drop("_gen", "_nb")
-      val live = tomb.fold(merged)(t => merged.join(
-        t.withColumnRenamed("id", idCol), Seq(idCol), "left_anti"))
-      val state = if (stripDst)
-        tomb.fold(live)(t => live.join(
-          t.withColumnRenamed("id", "dst"), Seq("dst"), "left_anti"))
-      else live
-      val staging = s"$path/$sub" + "__compacting"
-      // clear a crashed earlier compaction's staging FIRST: dynamic
-      // partition overwrite would keep its stale partitions and swapInto
-      // would promote them, resurrecting deleted data
-      val stPath = new org.apache.hadoop.fs.Path(staging)
-      val stFs = stPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (stFs.exists(stPath)) stFs.delete(stPath, true)
-      GraphLayout.writeGeneration(state, idCol, staging, buckets, gen = 0)
-      graft.core.Generations.swapInto(spark, s"$path/$sub", staging)
-    }
-    fold("vectors", "id", stripDst = false)
-    fold("graph", "src", stripDst = true)
-    val root = meta.asInstanceOf[com.fasterxml.jackson.databind.node.ObjectNode]
-    root.put("generations", 1)
-    if (tomb.nonEmpty) {
-      val eIt = meta.get("entries").elements()
-      val entryArr = Iterator.continually(eIt).takeWhile(_.hasNext)
-        .map(_.next().asLong()).toArray
-      // bounded pull: only tombstones hitting the nSeeds-sized entry
-      // list come back, never the whole delete history
-      val dead = tomb.get
-        .where(col("id").isin(entryArr.map(java.lang.Long.valueOf).toSeq: _*))
-        .collect().map(_.getLong(0)).toSet
-      val kept = entryArr.filterNot(dead)
-      // advice r15: if EVERY entry node was tombstoned, an empty entry
-      // list would seed nothing and the compacted layout would silently
-      // serve empty results forever despite holding live vectors —
-      // re-seed from the surviving ids with the same hash ranking
-      // [[writeServingIndex]] uses (the instance's seed; the sidecar
-      // records no seed, and compaction is a maintenance op on the
-      // owning instance). The folded vectors sub-layout was just
-      // written above, so reading it sees exactly the survivors; a
-      // store with NO survivors keeps the honest empty entry list.
-      val reseeded =
-        if (kept.nonEmpty) kept
-        else {
-          val sd = seed
-          val mixUdf = udf((a: Long, b: Long) =>
-            NnDescentStrategy.mix(a, b, sd))
-          spark.read.parquet(s"$path/vectors").select(col("id"))
-            .withColumn("_h", mixUdf(col("id"), lit(0L)))
-            .orderBy(col("_h"), col("id"))
-            .limit(math.max(entryArr.length, 1))
-            .collect().map(_.getLong(0))
-        }
-      val arr = root.putArray("entries")
-      reseeded.foreach(arr.add)
-    }
-    // counter order: the tombstone reset lands FIRST (its own sidecar —
-    // advice r17); between the two writes a reader sees folded data
-    // with no tombstones, which is correct (the fold dropped the rows)
-    if (tomb.nonEmpty) GraphLayout.writeTombstoneGens(path, 0)
-    graft.core.FsIO.write(s"$path/_nn_serving_meta.json",
-      mapper.writeValueAsString(root))
-    // the spent tombstones dir leaves BEFORE the ledger clears (review
-    // r18 — the HNSW ordering): clearClaims also sweeps the maintenance
-    // marker, reopening the layout to writers, and a delete entering
-    // between an early sweep and this directory delete would write a
-    // fresh tombstone generation this trailing delete then wipes —
-    // sidecar claiming tombstones over a missing directory
-    if (tomb.nonEmpty) {
-      val fs = new org.apache.hadoop.fs.Path(s"$path/tombstones")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/tombstones"), true)
-    }
-    // the count resets (gen AND tomb slots): spent claims must not
-    // outlive them, or the first post-compact append/delete slot would
-    // read as foreign-claimed forever
-    graft.core.Generations.clearClaims(spark, path)
-  }
-
-  /** relearn the k-NN graph from the LIVE rows (the [[HnswStrategy
-    * .rebuildServing]] argument, single-layer case): tombstoned nodes
-    * stop routing AND the survivors' neighborhoods are relearned
-    * against the current store */
-  override def supportsRebuild: Boolean = true
-  override protected def doRebuildServing(spark: org.apache.spark.sql.SparkSession,
-      path: String): DiskServing.Rebuilt = {
-    val meta = readServingMeta(path)
-    // dropped partition columns + localCheckpoint: same reasons as
-    // [[HnswStrategy.rebuildServing]] — the returned frames are
-    // in-memory state, and the rewrite replaces their source files
-    val rows = committedVectors(spark, path, meta).drop("_gen", "_nb")
-      .localCheckpoint()
-    val fresh = this.copy()
-    val prepared = fresh.prepare(rows)
-    fresh.writeServingIndex(prepared, path)
-    DiskServing.Rebuilt(fresh, rows, prepared)
-  }
-
-  /** the maintenance fence's committed counters ([[DiskServing]]) */
-  override def committedCounts(spark: org.apache.spark.sql.SparkSession,
-      path: String): Map[String, Int] = Map(
-    "gen" -> graft.core.Generations.sidecarCount(
-      s"$path/_nn_serving_meta.json", "generations"),
-    "tomb" -> GraphLayout.tombstoneGens(path))
-
-  override def fsckServing(spark: org.apache.spark.sql.SparkSession,
-      path: String): DataFrame =
-    ServingFsck.graphLayout(spark, path, "_nn_serving_meta.json",
-      Seq("metric", "buckets", "n_neighbors", "beam", "hops",
-        "generations", "entries"),
-      _ => Seq("graph"))
 }
 
 object NnDescentStrategy {

@@ -552,46 +552,52 @@ class ScaleDesignSpec extends SparkSpec {
 
   test("NN-descent compaction re-seeds entries when every entry node was " +
       "tombstoned (advice r15): live vectors keep serving") {
-    import graft.index.NnDescentStrategy
+    import graft.index.{GraphServing, HnswStrategy, IndexStrategy, NnDescentStrategy}
     val store = sf("embeddings")
       .select($"vec_id".as("id"),
         $"embedding".cast("array<double>").as("vector"))
       .where($"id" < 120).cache()
-    // tiny entry set so a small delete batch can cover ALL of it
-    val strat = NnDescentStrategy(graft.core.Metric.Cosine, nNeighbors = 8,
-      nSeeds = 3)
-    val prepared = strat.prepare(store).cache()
-    val root = graft.VerifyIO.scratchDir("graft_nnreseed")
-    val path = root.resolve("index").toString
-    strat.writeServingIndex(prepared, path)
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val meta0 = mapper.readTree(graft.core.FsIO.read(
-      s"$path/_nn_serving_meta.json"))
-    val eIt = meta0.get("entries").elements()
-    val entries0 = Iterator.continually(eIt).takeWhile(_.hasNext)
-      .map(_.next().asLong()).toSeq
-    assert(entries0.length === 3)
-    // tombstone EVERY entry node, then compact: before the advice-r15
-    // fix the sidecar's entry list folded to empty and the walk seeded
-    // nothing forever despite 117 live vectors
-    assert(strat.deleteFromDisk(spark, path, entries0.toDF("id")) === 3L)
-    strat.compactServing(spark, path)
-    val meta1 = mapper.readTree(graft.core.FsIO.read(
-      s"$path/_nn_serving_meta.json"))
-    val e1 = meta1.get("entries").elements()
-    val entries1 = Iterator.continually(e1).takeWhile(_.hasNext)
-      .map(_.next().asLong()).toSeq
-    assert(entries1.nonEmpty, "compaction left an empty entry list")
-    assert(entries1.intersect(entries0).isEmpty,
-      "re-seeded entries include tombstoned ids")
-    val queries = store.where($"id" >= 100 && $"id" < 103)
-      .select($"id".as("query_id"), $"vector".as("qvector"))
-    val served = strat.queryFromDisk(spark, path, queries, 5).collect()
-    assert(served.length === 15, "compacted layout stopped serving")
-    assert(!served.map(_.getLong(1)).toSet.exists(entries0.contains),
-      "tombstoned entry id still served")
-    prepared.unpersist(); store.unpersist()
-    VerifyIO.deleteRec(root.toFile)
+    // both graph families share the compaction: tiny entry sets so a small
+    // delete batch can cover ALL of them — NN-descent's 3 seeds, and
+    // HNSW's top layer (~n/m nodes at m=16)
+    Seq[(IndexStrategy with GraphServing, String, Option[Int])](
+      (NnDescentStrategy(graft.core.Metric.Cosine, nNeighbors = 8,
+        nSeeds = 3), "_nn_serving_meta.json", Some(3)),
+      (HnswStrategy(graft.core.Metric.Cosine), "_graph_meta.json", None)
+    ).foreach { case (strat, metaFile, nEntries) =>
+      val prepared = strat.prepare(store).cache()
+      val root = graft.VerifyIO.scratchDir("graft_nnreseed")
+      val path = root.resolve("index").toString
+      strat.writeServingIndex(prepared, path)
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      def entries(): Seq[Long] = {
+        val arr = mapper.readTree(graft.core.FsIO.read(s"$path/$metaFile"))
+          .get("entries")
+        (0 until arr.size()).map(arr.get(_).asLong())
+      }
+      val entries0 = entries()
+      nEntries.foreach(n => assert(entries0.length === n))
+      assert(entries0.nonEmpty && entries0.length <= 10, s"$metaFile")
+      // tombstone EVERY entry node, then compact: before the advice-r15
+      // fix the sidecar's entry list folded to empty and the walk seeded
+      // nothing forever despite the live vectors
+      assert(strat.deleteFromDisk(spark, path, entries0.toDF("id")) ===
+        entries0.length.toLong)
+      strat.compactServing(spark, path)
+      val entries1 = entries()
+      assert(entries1.nonEmpty, s"compaction left an empty entry list: $metaFile")
+      assert(entries1.intersect(entries0).isEmpty,
+        s"re-seeded entries include tombstoned ids: $metaFile")
+      val queries = store.where($"id" >= 100 && $"id" < 103)
+        .select($"id".as("query_id"), $"vector".as("qvector"))
+      val served = strat.queryFromDisk(spark, path, queries, 5).collect()
+      assert(served.length === 15, s"compacted layout stopped serving: $metaFile")
+      assert(!served.map(_.getLong(1)).toSet.exists(entries0.contains),
+        s"tombstoned entry id still served: $metaFile")
+      prepared.unpersist()
+      VerifyIO.deleteRec(root.toFile)
+    }
+    store.unpersist()
   }
 
   test("IvfSq8/IvfPq disk delete (r15) delegates the IVF cell rewrite: " +
@@ -1243,8 +1249,8 @@ class ScaleDesignSpec extends SparkSpec {
     //    frontier narrower than the bucket count prunes directories, and
     //    the id list reaches the scan as a pushed filter for row-group
     //    skipping against the id-sorted files
-    val narrow = strat.prunedRead(spark, path, "vectors", "id",
-      Array(1L, 17L), 16, Seq("id", "vector"))
+    val narrow = graft.index.GraphLayout.prunedRead(spark, path, "vectors",
+      "id", Array(1L, 17L), 16, Seq("id", "vector"))
     assert(narrow.count() == 2)
     def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
       case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
