@@ -36,6 +36,10 @@ object Verify {
       // previous run's output behind for the comparer to pick up
       val dest = new java.io.File(s"$outDir/$name")
       if (dest.exists()) VerifyIO.deleteRec(dest)
+      // name the query in the log stream and on its jobs, so a scheduler
+      // ERROR line can be traced to the query that ran it
+      System.err.println(s"[verify] $name")
+      spark.sparkContext.setJobDescription(name)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

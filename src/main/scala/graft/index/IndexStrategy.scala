@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.core.Metric
-import graft.functions.{TopK, VectorFunctions}
+import graft.functions.VectorFunctions
 import graft.operators.Knn
 
 /** Physical index strategy behind the [[graft.api.Vicinity]] facade —
@@ -133,6 +133,15 @@ object IndexStrategy {
   * kernel is a bare dot product (`1 − x·v`, `basic.py:218-222`); euclidean
   * queries use the direct single-pass √Σ(x−y)² kernel.
   *
+  * Top-k ([[query]], and the top-max_k of `annThreshold`) runs through the
+  * blocked kernel `graft.operators.Knn.blockedTopK`, the reference's
+  * batched matmul + partial top-k (`basic.py:190-221`): the normalized
+  * query batch is collected once, each cached store partition scores its
+  * rows against the whole batch into per-query bounded heaps, and only
+  * q × k × partitions survivors reach the merge — no per-pair row. The
+  * radius paths keep the expression plan (`rawPairs`), whose output is
+  * every pair under the bound.
+  *
   * `strictThreshold = false` is BASIC's inclusive `<=` radius semantics
   * (`basic.py:168`); `true` serves FAISS `flat`, whose `range_search` path
   * filters with strict `<` (`faiss.py:180-183`). Both ignore `max_k`
@@ -155,49 +164,51 @@ case class ExactStrategy(metric: Metric, strictThreshold: Boolean = false,
     case _ => store
   }
 
-  private def dist(metric: Metric) = metric match {
-    // vectors pre-normalized at build: cosine == 1 - dot == inner-product dist
-    case Metric.Cosine => VectorFunctions.inner_product_distance _
-    case m             => VectorFunctions.distance(m) _
-  }
+  /** the pair kernel: vectors are pre-normalized for cosine, so cosine
+    * scores as 1 − dot == inner-product distance */
+  private def kernel: Metric =
+    if (metric == Metric.Cosine) Metric.InnerProduct else metric
 
+  /** queries normalized like the store, in their element type */
   private def normalizedQueries(queries: DataFrame): DataFrame = metric match {
     case Metric.Cosine =>
       queries.withColumn("qvector", VectorFunctions.l2_normalize(col("qvector")))
     case _ => queries
   }
 
-  /** Raw pair distances: metrics that are mathematically >= 0 clip here as
-    * fp-noise canonicalization, but InnerProduct is genuinely SIGNED — it
-    * must rank (and threshold-mask) on the raw value, with the clip applied
-    * only to the final output, exactly like the reference facade
-    * (`vicinity.py:135`, `:162`; the backend ranks raw, `usearch.py:115-121`).
-    * Clipping before selection would collapse every dot > 1 row to dist 0
-    * and pick among them by id. */
+  /** Raw distances: metrics that are mathematically >= 0 clip BEFORE
+    * selection as fp-noise canonicalization, but InnerProduct is genuinely
+    * SIGNED — it must rank (and threshold-mask) on the raw value, with the
+    * clip applied only to the final output, exactly like the reference
+    * facade (`vicinity.py:135`, `:162`; the backend ranks raw,
+    * `usearch.py:115-121`). Clipping before selection would collapse every
+    * dot > 1 row to dist 0 and pick among them by id. */
+  private def clipRaw: Boolean = metric != Metric.InnerProduct
+
+  /** top-k per query of the raw distances: (query_id, id, dist, rank) */
+  private def rawTopK(prepared: DataFrame, queries: DataFrame,
+      k: Int): DataFrame =
+    Knn.blockedTopK(prepared, normalizedQueries(queries), k, kernel, clipRaw)
+
+  /** every (query, row) pair's raw distance, for the radius paths */
   private def rawPairs(prepared: DataFrame, queries: DataFrame): DataFrame = {
-    // not Knn.query's pairs: cosine here is a normalized inner product
-    val q = normalizedQueries(queries)
-    val raw = dist(metric)(col("vector"), col("qvector"))
-    val d = if (metric == Metric.InnerProduct) raw else greatest(raw, lit(0.0))
-    prepared.crossJoin(broadcast(q))
+    val raw = VectorFunctions.distance(kernel)(col("vector"), col("qvector"))
+    val d = if (clipRaw) greatest(raw, lit(0.0)) else raw
+    prepared.crossJoin(broadcast(normalizedQueries(queries)))
       .select(col("query_id"), col("id"), d.as("dist"))
   }
 
   private def clipOut(df: DataFrame): DataFrame =
     df.withColumn("dist", greatest(col("dist"), lit(0.0)))
 
-  def query(prepared: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    clipOut(TopK.topKPerGroup(rawPairs(prepared, queries),
-      Seq("query_id"), "id", "dist", k))
-  }
+  def query(prepared: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    clipOut(rawTopK(prepared, queries, k))
 
   def queryThreshold(prepared: DataFrame, queries: DataFrame,
       threshold: Double, maxK: Int): DataFrame = {
     if (annThreshold) { // top-max_k, RAW strict < mask, clip (usearch.py:131-139)
       if (maxK <= 0) return IndexStrategy.emptyThreshold(queries)
-      return clipOut(TopK.topKPerGroup(rawPairs(prepared, queries),
-          Seq("query_id"), "id", "dist", maxK)
+      return clipOut(rawTopK(prepared, queries, maxK)
         .where(col("dist") < threshold).drop("rank"))
     }
     // mask on RAW (signed for InnerProduct), clip the final output only —

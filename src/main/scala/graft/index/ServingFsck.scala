@@ -97,7 +97,8 @@ private[graft] object ServingFsck {
   }
 
   /** crash-window leftovers anywhere under the layout root: staging
-    * dirs a swap never promoted (`__staging`), retired dirs a swap
+    * dirs a swap never promoted (`__staging`, and the graph fold's
+    * in-root `<sub>__compacting`), retired dirs a swap
     * never deleted (`__old`), and the partition rewrites' dot-hidden
     * temp/retired dirs (`.old_*`, `.*.tmp`), and Spark's own `_temporary`
     * output directories — the most common artifact of an in-place first
@@ -113,6 +114,7 @@ private[graft] object ServingFsck {
     val (fs, p) = hfs(spark, root)
     def isLeftover(name: String): Boolean =
       name.endsWith("__staging") || name.endsWith("__old") ||
+        name.endsWith("__compacting") ||
         name.startsWith(".old_") || name == "_temporary" ||
         (name.startsWith(".") && name.endsWith(".tmp"))
     def walk(dir: org.apache.hadoop.fs.Path): Long =

@@ -3,9 +3,10 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.core.Metric
-import graft.functions.{TopK, VectorFunctions}
+import graft.functions.{TopK, TopKHeap, VectorFunctions}
 
 /** Exact (brute-force) k-NN and radius queries — the Spark-native equivalent
   * of the reference's BASIC backend (`/root/reference/vicinity/backends/
@@ -529,10 +530,12 @@ object Knn {
     }
   }
 
-  /** primitive-loop distance for the blocked/grid kernels — every Metric,
-    * term-for-term identical to the codegen'd Column expressions
-    * (`VectorExpressions`), so either kernel choice gives the same bits */
+  /** primitive-loop distance for the grid and threshold kernels — every
+    * Metric, term-for-term identical to the codegen'd Column expressions
+    * (`VectorExpressions`), so either kernel choice gives the same bits;
+    * unequal lengths fail as the expressions fail */
   private def scoreVec(m: Metric, v: Array[Double], q: Array[Double]): Double = {
+    checkDim(v.length, q.length)
     var acc = 0.0; var na = 0.0; var nb = 0.0
     var i = 0
     m match {
@@ -549,73 +552,200 @@ object Knn {
       case Metric.Hamming =>
         while (i < v.length) { if (v(i) != q(i)) acc += 1.0; i += 1 }
     }
-    m match {
-      case Metric.Cosine =>
-        val denom = math.sqrt(na) * math.sqrt(nb)
-        if (denom == 0) 1.0 else 1.0 - acc / denom
-      case Metric.Tanimoto =>
-        val denom = na + nb - acc
-        if (denom == 0.0) 0.0 else 1.0 - acc / denom
-      case Metric.Euclidean => math.sqrt(math.max(acc, 0.0))
-      case Metric.InnerProduct => 1.0 - acc
-      case _ => acc
-    }
+    finish(m, acc, na, nb)
   }
 
-  /** Blocked exact kNN for LARGE query batches — the scale path when the
-    * n×q pair space is too big to materialize as join rows (the crossJoin
-    * plan streams every (store row, query) pair through the aggregate; at
-    * q in the thousands that is billions of rows).
+  /** the expressions' dimension check: store length, then query length */
+  @inline private def checkDim(n: Int, qn: Int): Unit =
+    if (n != qn) throw new IllegalArgumentException(
+      s"vector dimension mismatch: $n vs $qn")
+
+  /** One pair's distance from its accumulators, as the expression of `m`
+    * finishes it: `acc` is the metric's sum, `vv`/`qq` the store and
+    * query Σx² (read by cosine and Tanimoto only). */
+  @inline private def finish(m: Metric, acc: Double, vv: Double,
+      qq: Double): Double = m match {
+    case Metric.Cosine =>
+      val denom = math.sqrt(vv) * math.sqrt(qq)
+      if (denom == 0) 1.0 else 1.0 - acc / denom
+    case Metric.Tanimoto =>
+      val denom = vv + qq - acc
+      if (denom == 0.0) 0.0 else 1.0 - acc / denom
+    case Metric.Euclidean => math.sqrt(math.max(acc, 0.0))
+    case Metric.InnerProduct => 1.0 - acc
+    case _ => acc
+  }
+
+  /** Σx² in element order: the `‖x‖²` accumulator of cosine and Tanimoto */
+  private def sumSq(v: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { s += v(i) * v(i); i += 1 }
+    s
+  }
+
+  /** queries the blocked kernel scores per pass over a store vector */
+  private val Tile = 4
+
+  /** Scores store vector `v` (Σx² `vv`) against queries `t until t + Tile`
+    * of `qs` (Σq² `qq`) into `out`: one accumulator per query, summed in
+    * element order, so every slot holds the bits [[scoreVec]] and the
+    * codegen'd expressions give. A tile past the batch end repeats the
+    * last query; the caller ignores those slots. */
+  private def scoreTile(m: Metric, v: Array[Double], vv: Double,
+      qs: Array[Array[Double]], qq: Array[Double], t: Int,
+      out: Array[Double]): Unit = {
+    val last = qs.length - 1
+    val j1 = math.min(t + 1, last)
+    val j2 = math.min(t + 2, last)
+    val j3 = math.min(t + 3, last)
+    val q0 = qs(t); val q1 = qs(j1); val q2 = qs(j2); val q3 = qs(j3)
+    val n = v.length
+    checkDim(n, q0.length); checkDim(n, q1.length)
+    checkDim(n, q2.length); checkDim(n, q3.length)
+    var a0 = 0.0; var a1 = 0.0; var a2 = 0.0; var a3 = 0.0
+    var i = 0
+    m match {
+      case Metric.Cosine | Metric.Tanimoto | Metric.InnerProduct =>
+        while (i < n) {
+          val x = v(i)
+          a0 += x * q0(i); a1 += x * q1(i); a2 += x * q2(i); a3 += x * q3(i)
+          i += 1
+        }
+      case Metric.Euclidean | Metric.L2Squared =>
+        while (i < n) {
+          val x = v(i)
+          val d0 = x - q0(i); val d1 = x - q1(i)
+          val d2 = x - q2(i); val d3 = x - q3(i)
+          a0 += d0 * d0; a1 += d1 * d1; a2 += d2 * d2; a3 += d3 * d3
+          i += 1
+        }
+      case Metric.Manhattan =>
+        while (i < n) {
+          val x = v(i)
+          a0 += math.abs(x - q0(i)); a1 += math.abs(x - q1(i))
+          a2 += math.abs(x - q2(i)); a3 += math.abs(x - q3(i))
+          i += 1
+        }
+      case Metric.Hamming =>
+        while (i < n) {
+          val x = v(i)
+          if (x != q0(i)) a0 += 1.0
+          if (x != q1(i)) a1 += 1.0
+          if (x != q2(i)) a2 += 1.0
+          if (x != q3(i)) a3 += 1.0
+          i += 1
+        }
+    }
+    out(0) = finish(m, a0, vv, qq(t)); out(1) = finish(m, a1, vv, qq(j1))
+    out(2) = finish(m, a2, vv, qq(j2)); out(3) = finish(m, a3, vv, qq(j3))
+  }
+
+  /** a row's double vector, copied into `buf` when the length fits */
+  private def readVector(a: org.apache.spark.sql.catalyst.util.ArrayData,
+      buf: Array[Double]): Array[Double] = {
+    val n = a.numElements()
+    val v = if (buf.length == n) buf else new Array[Double](n)
+    var i = 0
+    while (i < n) { v(i) = a.getDouble(i); i += 1 }
+    v
+  }
+
+  /** The query batch of [[blockedTopK]], collected once:
+    * group keys as the frame holds them, their long view for
+    * `excludeSelf` (null for a null key), vectors widened to double after
+    * any normalization, and each vector's Σq². */
+  private final case class QueryBatch(keys: Array[Any],
+      selfIds: Array[java.lang.Long], vecs: Array[Array[Double]],
+      norms: Array[Double])
+
+  /** Exact top-k by the blocked kernel — the reference's batched BLAS
+    * kernel (`basic.py:190-207`) on Spark terms, and the one exact top-k
+    * body behind [[queryBlocked]], [[selfJoin]] and
+    * `graft.index.ExactStrategy`:
+    *  - the query side (`query_id`, `qvecCol`) is collected ONCE to
+    *    primitive arrays and broadcast; a query frame that is a local
+    *    relation (the facade's) costs no job;
+    *  - each store partition reads its rows as `InternalRow`s and scores
+    *    every row against [[Tile]] queries per pass, keeping one bounded
+    *    heap per query — no per-pair row, no join;
+    *  - each partition emits its q × k survivors, which
+    *    [[TopK.topKPerGroup]] merges (shuffle volume q × k × partitions,
+    *    independent of the store size).
     *
-    * Physical shape, mirroring the reference's batched BLAS kernel
-    * (`/root/reference/vicinity/backends/basic.py:190-207`) on Spark terms:
-    * queries are collected to a primitive matrix and broadcast; each store
-    * partition scans its rows once, scoring all queries per row in a tight
-    * primitive loop and maintaining one bounded heap per query; each
-    * partition emits only its q×k survivors, which a final per-query top-k
-    * merges. Shuffle volume: q × k × partitions rows, independent of n.
-    *
-    * `excludeSelf` drops candidate id == query id (self-join semantics).
-    */
-  def queryBlocked(store: DataFrame, queries: DataFrame, k: Int,
-      metric: Metric, vecCol: String = "vector", qvecCol: String = "qvector",
-      excludeSelf: Boolean = false): DataFrame = {
+    * Distances are `kernel`'s expression bits, and with `clip` they are
+    * clipped at 0 BEFORE selection (`greatest(raw, 0)`, fp-noise
+    * canonicalization for the metrics that are ≥ 0); without it the RAW
+    * signed value ranks (InnerProduct). Returns (query_id, id, dist, rank)
+    * with the output clip left to the caller. A null store vector scores
+    * nothing; a null query vector gets no rows; unequal lengths fail with
+    * the expressions' "vector dimension mismatch"; `excludeSelf` drops
+    * candidate id == query id. */
+  private[graft] def blockedTopK(store: DataFrame, queries: DataFrame,
+      k: Int, kernel: Metric, clip: Boolean, vecCol: String = "vector",
+      qvecCol: String = "qvector", excludeSelf: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = store.sparkSession
-    import graft.functions.TopKHeap
     val qRows = queries
-      .select(col("query_id").cast("long"),
+      .select(col("query_id"), col("query_id").cast("long"),
         col(qvecCol).cast("array<double>"))
-      .collect()
-    val qIds = qRows.map(_.getLong(0))
-    val qVecs = qRows.map(_.getSeq[Double](1).toArray)
-    val bc = spark.sparkContext.broadcast((qIds, qVecs))
-    val m = metric
-    val partials = store
-      .select(col("id").cast("long"), col(vecCol).cast("array<double>"))
-      .rdd.mapPartitions { rows =>
-        val (ids, vecs) = bc.value
-        val heaps = Array.fill(ids.length)(new TopKHeap(k))
-        rows.foreach { r =>
+      .collect().filterNot(_.isNullAt(2))
+    val vecs = qRows.map(_.getSeq[Double](2).toArray)
+    val bc = spark.sparkContext.broadcast(QueryBatch(qRows.map(_.get(0)),
+      qRows.map(r => if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))),
+      vecs, vecs.map(sumSq)))
+    // widening to double is exact, as in the expressions' accessors
+    val src = store.select(col("id").cast("long"),
+      col(vecCol).cast("array<double>"))
+    val m = kernel
+    val selfNorm = m == Metric.Cosine || m == Metric.Tanimoto
+    val partials = src.queryExecution.toRdd.mapPartitions { rows =>
+      val b = bc.value
+      val nq = b.vecs.length
+      val heaps = Array.fill(nq)(new TopKHeap(k))
+      val out = new Array[Double](Tile)
+      var v = new Array[Double](0)
+      if (nq > 0) rows.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1)) {
           val id = r.getLong(0)
-          val v = r.getSeq[Double](1).toArray
-          var qi = 0
-          while (qi < vecs.length) {
-            if (!(excludeSelf && ids(qi) == id)) {
-              val dist = scoreVec(m, v, vecs(qi))
-              // canonicalize fp noise for non-negative metrics; keep the
-              // signed value for InnerProduct (clip happens on output)
-              val d2 = if (m == Metric.InnerProduct) dist else math.max(dist, 0.0)
-              heaps(qi).add(id, d2)
+          v = readVector(r.getArray(1), v)
+          val vv = if (selfNorm) sumSq(v) else 0.0
+          var t = 0
+          while (t < nq) {
+            scoreTile(m, v, vv, b.vecs, b.norms, t, out)
+            val end = math.min(t + Tile, nq)
+            var qi = t
+            while (qi < end) {
+              if (!excludeSelf || b.selfIds(qi) == null ||
+                  b.selfIds(qi).longValue != id) {
+                val d = out(qi - t)
+                heaps(qi).add(id, if (clip && d < 0.0) 0.0 else d)
+              }
+              qi += 1
             }
-            qi += 1
+            t += Tile
           }
         }
-        heaps.iterator.zipWithIndex.flatMap { case (h, qi) =>
-          h.sorted.map(n => org.apache.spark.sql.Row(ids(qi), n.id, n.dist))
-        }
       }
-    val partialDf = spark.createDataFrame(partials, partialsSchema)
-    clipOut(TopK.topKPerGroup(partialDf, Seq("query_id"), "id", "dist", k))
+      Iterator.range(0, nq).flatMap(qi =>
+        heaps(qi).sorted.iterator.map(n => Row(b.keys(qi), n.id, n.dist)))
+    }
+    val schema = StructType(Seq(
+      StructField("query_id", queries.schema("query_id").dataType),
+      StructField("id", LongType, nullable = false),
+      StructField("dist", DoubleType, nullable = false)))
+    TopK.topKPerGroup(spark.createDataFrame(partials, schema),
+      Seq("query_id"), "id", "dist", k)
   }
+
+  /** Exact top-k per query through the blocked kernel ([[blockedTopK]]):
+    * (query_id, id, dist, rank), the same rows and bits as [[query]] on
+    * null-free vectors, without one join row per (store row, query) pair.
+    * The query batch is collected, so it must fit in memory as a
+    * broadcast would. `excludeSelf` drops candidate id == query id
+    * (self-join semantics). */
+  def queryBlocked(store: DataFrame, queries: DataFrame, k: Int,
+      metric: Metric, vecCol: String = "vector", qvecCol: String = "qvector",
+      excludeSelf: Boolean = false): DataFrame =
+    clipOut(blockedTopK(store, queries, k, metric,
+      clip = metric != Metric.InnerProduct, vecCol, qvecCol, excludeSelf))
 }

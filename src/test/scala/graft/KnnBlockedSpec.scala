@@ -1,8 +1,12 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.core.Metric
+import graft.functions.{TopK, VectorFunctions}
+import graft.index.ExactStrategy
 import graft.operators.Knn
 
 class KnnBlockedSpec extends SparkSpec {
@@ -12,9 +16,12 @@ class KnnBlockedSpec extends SparkSpec {
     .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("vector"))
     .cache()
 
-  private def collect(df: org.apache.spark.sql.DataFrame) =
-    df.select("query_id", "id", "rank").collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted.toSeq
+  /** (query_id, id, dist bits, rank), sorted */
+  private def collect(df: DataFrame) =
+    df.select("query_id", "id", "dist", "rank").collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
+      .sorted.toSeq
 
   for (metric <- Seq(Metric.Cosine, Metric.Euclidean, Metric.Manhattan)) {
     test(s"blocked kernel matches the join plan (${metric.name})") {
@@ -23,6 +30,155 @@ class KnnBlockedSpec extends SparkSpec {
       val joined = collect(Knn.query(emb, queries, 5, metric))
       val blocked = collect(Knn.queryBlocked(emb, queries, 5, metric))
       assert(blocked === joined)
+    }
+  }
+
+  // ---- ExactStrategy against the cross-join body it replaced ----
+
+  /** The cross-join + `topk_neighbors` top-k that `ExactStrategy` ran
+    * before the blocked kernel, kept here as the bit-level reference:
+    * queries normalized in their element type like the store, one join
+    * row per (store row, query) pair scored by the codegen'd expression,
+    * clipped before selection except for InnerProduct. The output clip is
+    * left to [[clipOut]]. */
+  private def joinReference(metric: Metric, prepared: DataFrame,
+      queries: DataFrame, k: Int): DataFrame = {
+    val q = if (metric == Metric.Cosine)
+      queries.withColumn("qvector", VectorFunctions.l2_normalize($"qvector"))
+    else queries
+    val kernel = if (metric == Metric.Cosine) Metric.InnerProduct else metric
+    val raw = VectorFunctions.distance(kernel)($"vector", $"qvector")
+    val d = if (metric == Metric.InnerProduct) raw else greatest(raw, lit(0.0))
+    val pairs = prepared.crossJoin(broadcast(q))
+      .select($"query_id", $"id", d.as("dist"))
+    TopK.topKPerGroup(pairs, Seq("query_id"), "id", "dist", k)
+  }
+
+  private def clipOut(df: DataFrame) =
+    df.withColumn("dist", greatest($"dist", lit(0.0)))
+
+  /** 203 stored rows of 12 dims plus a null-vector row (id 999), in five
+    * partitions, the last one empty: dims 0-5 seeded Gaussian, dims 6-11
+    * in {-1, 0, 1} (so Hamming and Tanimoto see ties), ids 200-202 copy
+    * rows 0-2 (equal distances, ties broken on id). */
+  private val dim = 12
+  private lazy val rows: Seq[(Long, Array[Double])] = {
+    val rnd = new scala.util.Random(7)
+    val base = (0 until 200).map { i =>
+      i.toLong -> Array.tabulate(dim)(j =>
+        if (j < 6) rnd.nextGaussian() else (rnd.nextInt(3) - 1).toDouble)
+    }
+    base ++ (0 until 3).map(i => (200L + i) -> base(i)._2)
+  }
+
+  private def vecs(elem: DataType, vs: Seq[Array[Double]]): Seq[Any] =
+    vs.map(v => if (v == null) null
+      else if (elem == FloatType) v.map(_.toFloat).toSeq else v.toSeq)
+
+  private def storeOf(elem: DataType): DataFrame = {
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("vector", ArrayType(elem))))
+    val all = rows :+ (999L -> (null: Array[Double]))
+    val data = all.map(_._1).zip(vecs(elem, all.map(_._2)))
+      .map { case (id, v) => Row(id, v) }
+    val sc = spark.sparkContext
+    spark.createDataFrame(sc.parallelize(data, 4)
+      .union(sc.parallelize(Seq.empty[Row], 1)), schema)
+  }
+
+  /** ten query rows (a batch that is not a multiple of the tile width):
+    * stored vectors (distance 0 to themselves and to their copies), a
+    * second row under query_id 3, a null vector under query_id 7, and
+    * Gaussian draws */
+  private def queriesOf(elem: DataType): DataFrame = {
+    val rnd = new scala.util.Random(11)
+    val qs: Seq[(Long, Array[Double])] = Seq(
+      0L -> rows(0)._2, 1L -> rows(201)._2, 2L -> rows(57)._2,
+      3L -> rows(9)._2, 3L -> Array.fill(dim)(rnd.nextGaussian()),
+      4L -> Array.fill(dim)(rnd.nextGaussian()),
+      5L -> Array.fill(dim)(rnd.nextGaussian()),
+      6L -> rows(130)._2, 7L -> null, 8L -> rows(2)._2)
+    val schema = StructType(Seq(
+      StructField("query_id", LongType, nullable = false),
+      StructField("qvector", ArrayType(elem))))
+    spark.createDataFrame(java.util.Arrays.asList(
+      qs.map(_._1).zip(vecs(elem, qs.map(_._2)))
+        .map { case (q, v) => Row(q, v) }: _*), schema)
+  }
+
+  for (metric <- Metric.all; elem <- Seq(FloatType, DoubleType)) {
+    test(s"ExactStrategy top-k is bit-identical to the cross-join plan " +
+        s"(${metric.name}, ${elem.simpleString})") {
+      val strat = ExactStrategy(metric)
+      val store = storeOf(elem)
+      val queries = queriesOf(elem)
+      val prepared = strat.prepare(store).cache()
+      // the reference sees the frames without their null-vector rows: the
+      // cross join's clip (`greatest` skips nulls) scored a null vector
+      // at distance 0, where the blocked kernel scores nothing
+      val refPrepared = strat.prepare(store.where($"vector".isNotNull))
+      val refQueries = queries.where($"qvector".isNotNull)
+      for (k <- Seq(5, 250)) { // 250 > the 203 scored rows
+        val got = collect(strat.query(prepared, queries, k))
+        assert(got ===
+          collect(clipOut(joinReference(metric, refPrepared, refQueries, k))),
+          s"k = $k")
+        assert(got.map(_._1).distinct.sorted === (0L to 8L).filter(_ != 7L),
+          "every query but the null vector answers, duplicate ids merged")
+        assert(!got.exists(_._2 == 999L), "the null store vector scored")
+      }
+      // annThreshold: top-max_k, then the strict < mask on the RAW value
+      // (signed for InnerProduct), then the output clip
+      val ann = ExactStrategy(metric, annThreshold = true)
+      val maxK = 7
+      val ref = joinReference(metric, refPrepared, refQueries, maxK)
+      val raws = ref.select("dist").collect().map(_.getDouble(0)).sorted
+      val threshold = raws(raws.length / 2)
+      def masked(df: DataFrame) =
+        df.select("query_id", "id", "dist").collect()
+          .map(r => (r.getLong(0), r.getLong(1),
+            java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
+          .sorted.toSeq
+      val got = masked(ann.queryThreshold(prepared, queries, threshold, maxK))
+      assert(got.nonEmpty && got.size < raws.length)
+      assert(got === masked(clipOut(ref.where($"dist" < threshold))))
+      prepared.unpersist()
+    }
+  }
+
+  test("blocked kernel skips a null store vector and a null query vector") {
+    val store = storeOf(DoubleType)
+    val queries = queriesOf(DoubleType)
+    for (metric <- Seq(Metric.Cosine, Metric.InnerProduct)) {
+      val got = collect(Knn.queryBlocked(store, queries, 5, metric))
+      assert(got === collect(Knn.query(store.where($"vector".isNotNull),
+        queries.where($"qvector".isNotNull), 5, metric)))
+      assert(!got.exists(_._2 == 999L))
+      assert(!got.exists(_._1 == 7L))
+    }
+  }
+
+  /** the first IllegalArgumentException in `e`'s cause chain */
+  private def illegalArg(e: Throwable): Option[Throwable] =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .find(_.isInstanceOf[IllegalArgumentException])
+
+  test("blocked kernel fails on a vector dimension mismatch like the expression path") {
+    val store = storeOf(DoubleType).where($"vector".isNotNull)
+    for ((len, label) <- Seq((dim + 3, "longer"), (dim - 4, "shorter"))) {
+      val queries = Seq((0L, Seq.fill(len)(0.5))).toDF("query_id", "qvector")
+      val expected = s"vector dimension mismatch: $dim vs $len"
+      def failure(run: => Any): String = {
+        val e = intercept[Exception](run)
+        illegalArg(e).map(_.getMessage).getOrElse(s"$label query: $e")
+      }
+      assert(failure(Knn.query(store, queries, 3, Metric.Euclidean)
+        .collect()) === expected)
+      assert(failure(Knn.queryBlocked(store, queries, 3, Metric.Euclidean)
+        .collect()) === expected, s"$label query, Knn.queryBlocked")
+      val strat = ExactStrategy(Metric.Cosine)
+      assert(failure(strat.query(strat.prepare(store), queries, 3)
+        .collect()) === expected, s"$label query, ExactStrategy")
     }
   }
 

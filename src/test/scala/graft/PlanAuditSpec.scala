@@ -172,4 +172,22 @@ class PlanAuditSpec extends SparkSpec {
         s"$name no longer ranks through the TopK aggregate")
     }
   }
+
+  test("the BASIC facade's top-k plans no pair join and no per-pair distance") {
+    // the exact top-k scores through the blocked kernel: a cross join of
+    // store and queries (BroadcastNestedLoopJoin) with the codegen'd
+    // distance on every pair row is the plan it replaced
+    import spark.implicits._
+    val rnd = new scala.util.Random(5)
+    val vic = graft.api.Vicinity.fromVectorsAndItems(spark,
+      (0 until 64).map(i => s"item$i"),
+      Seq.fill(64)(Seq.fill(8)(rnd.nextGaussian())))
+    val queries = (0 until 6).map(i => (i.toLong, Seq.fill(8)(rnd.nextGaussian())))
+      .toDF("query_id", "qvector")
+    val res = vic.queryDf(queries, 5)
+    val plan = res.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoopJoin"), plan)
+    assert(!plan.contains("inner_product_distance"), plan)
+    assert(res.count() === 30)
+  }
 }

@@ -116,6 +116,19 @@ class ServingDoctorSpec extends SparkSpec {
     assert(c(("cells", "duplicate_ids"))._1 === "ok")
   }
 
+  test("fsck: a graph compaction's in-root __compacting staging dir is warn") {
+    // the graph fold stages each sub-layout at <root>/<sub>__compacting;
+    // a crash before its swap leaves that dir INSIDE the layout root
+    val strat = HnswStrategy(Metric.Cosine)
+    val path = tmp("graph_compacting")
+    strat.writeServingIndex(strat.prepare(store), path)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(s"$path/vectors__compacting/_gen=0"))
+    val c = checks(strat.fsckServing(spark, path))
+    assert(c(("layout", "crash_leftovers")) === ("warn", 1L))
+  }
+
   test("fsck: a missing sidecar is fail rows, not an exception") {
     val strat = LshStrategy(Metric.Cosine, nTables = 8, nBits = 5)
     val path = tmp("nosidecar")
