@@ -17,7 +17,9 @@ import graft.operators.Knn
   *  - count-like columns are long in both engines.
   *
   * Library conventions for query bodies:
-  *  - a plain exact kNN goes through [[graft.operators.Knn.query]];
+  *  - a plain exact kNN goes through [[graft.operators.Knn.query]] (the
+  *    blocked kernel: the query batch is collected at construction), a
+  *    radius query through [[graft.operators.Knn.queryThreshold]];
   *  - a top-n by descending score goes through [[graft.functions.TopK.topNByScore]];
   *  - a session-scoped cache is a [[SessionCache]].
   */

@@ -918,6 +918,7 @@ trait GraphServing extends DiskServing { self: IndexStrategy =>
   private def exactTopK(vecs: DataFrame, queries: DataFrame,
       k: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
+    // not Knn.blockedTopK: it scores through the family's own walk kernel
     val q = walkKernel.walkQueries(queries)
     val v = vecs.select("id", "vector")
     TopK.topKPerGroup(walkKernel.scoreCandidates(v, q,

@@ -139,8 +139,9 @@ object IndexStrategy {
   * query batch is collected once, each cached store partition scores its
   * rows against the whole batch into per-query bounded heaps, and only
   * q × k × partitions survivors reach the merge — no per-pair row. The
-  * radius paths keep the expression plan (`rawPairs`), whose output is
-  * every pair under the bound.
+  * radius paths run through the library's one radius body
+  * (`Knn.radiusPairs`), whose output is every pair under the bound. Both
+  * skip a null vector.
   *
   * `strictThreshold = false` is BASIC's inclusive `<=` radius semantics
   * (`basic.py:168`); `true` serves FAISS `flat`, whose `range_search` path
@@ -190,35 +191,24 @@ case class ExactStrategy(metric: Metric, strictThreshold: Boolean = false,
       k: Int): DataFrame =
     Knn.blockedTopK(prepared, normalizedQueries(queries), k, kernel, clipRaw)
 
-  /** every (query, row) pair's raw distance, for the radius paths */
-  private def rawPairs(prepared: DataFrame, queries: DataFrame): DataFrame = {
-    val raw = VectorFunctions.distance(kernel)(col("vector"), col("qvector"))
-    val d = if (clipRaw) greatest(raw, lit(0.0)) else raw
-    prepared.crossJoin(broadcast(normalizedQueries(queries)))
-      .select(col("query_id"), col("id"), d.as("dist"))
-  }
-
-  private def clipOut(df: DataFrame): DataFrame =
-    df.withColumn("dist", greatest(col("dist"), lit(0.0)))
-
   def query(prepared: DataFrame, queries: DataFrame, k: Int): DataFrame =
-    clipOut(rawTopK(prepared, queries, k))
+    Knn.clipOut(rawTopK(prepared, queries, k))
 
   def queryThreshold(prepared: DataFrame, queries: DataFrame,
       threshold: Double, maxK: Int): DataFrame = {
     if (annThreshold) { // top-max_k, RAW strict < mask, clip (usearch.py:131-139)
       if (maxK <= 0) return IndexStrategy.emptyThreshold(queries)
-      return clipOut(rawTopK(prepared, queries, maxK)
+      return Knn.clipOut(rawTopK(prepared, queries, maxK)
         .where(col("dist") < threshold).drop("rank"))
     }
     // mask on RAW (signed for InnerProduct), clip the final output only —
-    // same facade semantics as query() (vicinity.py:135, :162)
-    val pairs = rawPairs(prepared, queries)
-    if (strictThreshold) // faiss flat range search, radius-composed bound
-      clipOut(pairs
-        .where(col("dist") < IndexStrategy.faissRangeBound(metric, threshold)))
-    else // inclusive: basic.py:168
-      clipOut(pairs.where(col("dist") <= threshold))
+    // same facade semantics as query() (vicinity.py:135, :162). Strict:
+    // faiss flat range search, radius-composed bound; inclusive:
+    // basic.py:168
+    val bound = if (strictThreshold)
+      IndexStrategy.faissRangeBound(metric, threshold) else threshold
+    Knn.radiusPairs(prepared, normalizedQueries(queries), kernel, clipRaw,
+      bound, inclusive = !strictThreshold)
   }
 
   /** normalization is per-row: prepare the increment only */

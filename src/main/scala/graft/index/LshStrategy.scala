@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.Metric
 import graft.functions.{TopK, VectorFunctions}
+import graft.operators.Knn
 
 /** Random-projection LSH strategy — the Spark-native stand-in for the
   * reference's ANN backend family (ANNOY's random-projection forest,
@@ -486,19 +487,14 @@ case class LshStrategy(metric: Metric, nTables: Int = 16, nBits: Int = 6,
   /** [[queryExhaustive]] served from the layout's vectors side: all-pairs
     * candidates, so the rerank IS brute force and the result provably the
     * exact top-k — the family's oracle anchor THROUGH the disk round trip
-    * (pins the partitioned write, payload recovery, rerank join, rank),
-    * mirroring [[HnswStrategy]]'s exhaustive disk sibling. */
+    * (pins the partitioned write, payload recovery, rank), mirroring
+    * [[HnswStrategy]]'s exhaustive disk sibling. Scored by the blocked
+    * kernel; cosine and euclidean (the only LSH metrics) clip before
+    * selection, so the output needs no second clip. */
   def queryExhaustiveFromDisk(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    val meta = readMeta(path)
-    val q = queries.withColumn("qvector", col("qvector").cast("array<double>"))
-    val d = VectorFunctions.distance(metric)(col("vector"), col("qvector"))
-    val scored = diskVectors(spark, path, meta).select(col("id"), col("vector"))
-      .crossJoin(broadcast(q.select(col("query_id"), col("qvector"))))
-      .select(col("query_id"), col("id"), greatest(d, lit(0.0)).as("dist"))
-    TopK.topKPerGroup(scored, Seq("query_id"), "id", "dist", k)
-  }
+      path: String, queries: DataFrame, k: Int): DataFrame =
+    Knn.blockedTopK(diskVectors(spark, path, readMeta(path)), queries, k,
+      metric, clip = true)
 
   /** [[queryThreshold]] off the same layout — strict `<` and the max_k
     * cap (hnsw.py:107-114), same pruned candidate read. */

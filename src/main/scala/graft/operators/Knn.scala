@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -14,72 +13,64 @@ import graft.functions.{TopK, TopKHeap, VectorFunctions}
   * (`/root/reference/vicinity/vicinity.py:114-165`).
   *
   * Physical shape (designed for a large store, small-to-medium query batch):
-  * store never shuffles — queries are broadcast, the distance kernel runs
-  * inside whole-stage codegen over the store scan, and per-query top-k is a
-  * partial aggregate (map-side bounded heap; see [[graft.functions.TopKHeap]]),
-  * so the only shuffled rows are `k × partitions` per query.
+  * top-k runs through one blocked kernel ([[blockedTopK]]): the query batch
+  * is collected once and broadcast as primitive arrays, each store
+  * partition scores its rows against the whole batch into per-query
+  * bounded heaps (see [[graft.functions.TopKHeap]]), and the store never
+  * shuffles — the only shuffled rows are `k × partitions` per query.
+  * Radius queries output every pair under the bound, so they keep the
+  * broadcast pair plan ([[radiusPairs]]).
   */
 object Knn {
 
-  /** Broadcast-join each query against the full store and compute the raw
-    * pair distances. `store` must have (`id`, `vecCol`); `queries` must
-    * have (`query_id`, `qvecCol`). Output: query_id, id, dist. For metrics
-    * that are mathematically >= 0 the clip-to-zero is applied here as
-    * fp-noise canonicalization (stabilizes tie order); for InnerProduct
-    * the distance is genuinely signed, so selection must rank the RAW
-    * value — the reference clips only the final, already-sorted output
-    * (`vicinity.py:135`). */
-  private def pairDistances(store: DataFrame, queries: DataFrame,
-      metric: Metric, vecCol: String, qvecCol: String): DataFrame = {
-    val raw = VectorFunctions.distance(metric)(col(vecCol), col(qvecCol))
-    val d = if (metric == Metric.InnerProduct) raw else greatest(raw, lit(0.0))
-    store.crossJoin(broadcast(queries))
-      .select(col("query_id"), col("id"), d.as("dist"))
-  }
-
   /** output clip ≙ `distances.clip(min=0)` after selection (vicinity.py:135) */
-  private def clipOut(df: DataFrame): DataFrame =
+  private[graft] def clipOut(df: DataFrame): DataFrame =
     df.withColumn("dist", greatest(col("dist"), lit(0.0)))
 
   /** Top-k per query: (query_id, id, dist, rank), rank 1-based by (dist, id).
     * `effective k = min(k, store size)` falls out naturally (a heap over
     * fewer than k candidates just returns them all — `basic.py:192` parity).
+    * Metrics that are mathematically >= 0 clip at 0 before selection as
+    * fp-noise canonicalization (stabilizes tie order); InnerProduct is
+    * genuinely signed, so it ranks the RAW value and only the output is
+    * clipped (`vicinity.py:135`). The query batch is collected, so it must
+    * fit in memory as a broadcast would.
     */
   def query(store: DataFrame, queries: DataFrame, k: Int, metric: Metric,
-      vecCol: String = "vector", qvecCol: String = "qvector",
-      useAggregator: Boolean = true): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k") // basic.py:187-188
-    val pairs = pairDistances(store, queries, metric, vecCol, qvecCol)
-    if (useAggregator) {
-      clipOut(TopK.topKPerGroup(pairs, Seq("query_id"), "id", "dist", k))
-    } else {
-      // reference plan for correctness cross-checks: full window sort
-      val w = Window.partitionBy("query_id").orderBy(col("dist"), col("id"))
-      clipOut(pairs.withColumn("rank", row_number().over(w))
-        .where(col("rank") <= k))
-    }
+      vecCol: String = "vector", qvecCol: String = "qvector"): DataFrame =
+    clipOut(blockedTopK(store, queries, k, metric,
+      clip = metric != Metric.InnerProduct, vecCol, qvecCol))
+
+  /** The one radius body: every (query, store row) pair whose `kernel`
+    * distance is within `bound` (`<=` when `inclusive`, BASIC's
+    * `basic.py:168`; strict `<` for the FAISS range search), as
+    * (query_id, id, dist) with the output clip applied. With `clip` the
+    * distance is clipped at 0 BEFORE the mask; without it the mask reads
+    * the RAW signed value (InnerProduct). A null vector on either side
+    * pairs with nothing. */
+  private[graft] def radiusPairs(store: DataFrame, queries: DataFrame,
+      kernel: Metric, clip: Boolean, bound: Double, inclusive: Boolean,
+      vecCol: String = "vector", qvecCol: String = "qvector"): DataFrame = {
+    val raw = VectorFunctions.distance(kernel)(col(vecCol), col(qvecCol))
+    val d = if (clip) greatest(raw, lit(0.0)) else raw
+    val pred: Column =
+      if (inclusive) col("dist") <= bound else col("dist") < bound
+    clipOut(store.where(col(vecCol).isNotNull)
+      .crossJoin(broadcast(queries.where(col(qvecCol).isNotNull)))
+      .select(col("query_id"), col("id"), d.as("dist"))
+      .where(pred))
   }
 
   /** Radius query: all pairs with dist <= threshold (exact-backend inclusive
     * semantics, `basic.py:168`; ANN backends use strict `<` — pass
-    * `inclusive = false` for that). `maxK` caps candidates per query like the
-    * ANN paths' top-max_k pre-truncation (`vicinity.py:140-165`); pass
-    * `maxK <= 0` for uncapped exact semantics.
+    * `inclusive = false` for that). The capped ANN shape (top-max_k, then
+    * the mask) is `graft.index.ExactStrategy(annThreshold = true)`.
     */
   def queryThreshold(store: DataFrame, queries: DataFrame, threshold: Double,
-      metric: Metric, maxK: Int = 0, inclusive: Boolean = true,
-      vecCol: String = "vector", qvecCol: String = "qvector"): DataFrame = {
-    val pairs = pairDistances(store, queries, metric, vecCol, qvecCol)
-    val pred: Column =
-      if (inclusive) col("dist") <= threshold else col("dist") < threshold
-    if (maxK > 0) {
-      // ANN emulation: truncate to max_k nearest, then filter
-      clipOut(TopK.topKPerGroup(pairs, Seq("query_id"), "id", "dist", maxK)
-        .where(pred))
-    } else {
-      clipOut(pairs.where(pred))
-    }
-  }
+      metric: Metric, inclusive: Boolean = true,
+      vecCol: String = "vector", qvecCol: String = "qvector"): DataFrame =
+    radiusPairs(store, queries, metric, clip = metric != Metric.InnerProduct,
+      threshold, inclusive, vecCol, qvecCol)
 
   /** Matryoshka-style truncated-dimension search: coarse-rank every store
     * row by distance over the first `coarseDims` dimensions only, keep the
@@ -133,22 +124,27 @@ object Knn {
 
   /** The two matryoshka stages over (id, _prefix) and (id, _vec): the
     * `pool` nearest by prefix distance per query, then the top k of those
-    * by full-vector distance. */
+    * by full-vector distance. A null vector on either side scores nothing
+    * in either stage. */
   private def matryoshkaStages(prefixes: DataFrame, vectors: DataFrame,
       queries: DataFrame, coarseDims: Int, pool: Int, k: Int, metric: Metric,
       qvecCol: String): DataFrame = {
     require(pool >= k, s"pool ($pool) must be >= k ($k)")
-    val coarseQ = queries.select(col("query_id"),
+    val q = queries.where(col(qvecCol).isNotNull)
+    val coarseQ = q.select(col("query_id"),
       slice(col(qvecCol), 1, coarseDims).as("_cq"))
-    val coarsePairs = prefixes.crossJoin(broadcast(coarseQ))
+    // not blockedTopK: its RDD boundary would hide the prefix-only parquet
+    // scan the coarse pass exists for (asserted in ScaleDesignSpec)
+    val coarsePairs = prefixes.where(col("_prefix").isNotNull)
+      .crossJoin(broadcast(coarseQ))
       .select(col("query_id"), col("id"),
         greatest(VectorFunctions.distance(metric)(col("_prefix"), col("_cq")),
           lit(0.0)).as("dist"))
     val cands = TopK.topKPerGroup(coarsePairs, Seq("query_id"), "id", "dist",
       pool).select("query_id", "id")
     val exact = cands
-      .join(vectors, Seq("id"))
-      .join(broadcast(queries.select(col("query_id"), col(qvecCol))),
+      .join(vectors.where(col("_vec").isNotNull), Seq("id"))
+      .join(broadcast(q.select(col("query_id"), col(qvecCol))),
         Seq("query_id"))
       .select(col("query_id"), col("id"),
         greatest(VectorFunctions.distance(metric)(col("_vec"), col(qvecCol)),
@@ -231,9 +227,8 @@ object Knn {
       }
       out.toSeq
     }
-    val pairs = pairDistances(store, queries, Metric.Cosine, vecCol, qvecCol)
-      .where(col("id") =!= col("query_id"))
-    val cands = TopK.topKPerGroup(pairs, Seq("query_id"), "id", "dist", pool)
+    val cands = blockedTopK(store, queries, pool, Metric.Cosine, clip = true,
+        vecCol, qvecCol, excludeSelf = true)
       .select(col("query_id"), col("id"), round(lit(1.0) - col("dist"), 6).as("rel"))
     cands
       .join(store.select(col("id"), col(vecCol)), Seq("id"))
@@ -296,7 +291,10 @@ object Knn {
     val nb = b
     val data = df.select(col("id").cast("long"),
         col(vecCol).cast("array<double>"))
-      .rdd.map(r => (r.getLong(0), r.getSeq[Double](1).toArray))
+      .queryExecution.toRdd.flatMap { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) None
+        else Some((r.getLong(0), r.getArray(1).toDoubleArray()))
+      }
     // tag 0 = query copy (buffered), tag 1 = candidate copy (streamed);
     // sort key (cell, tag, id) delivers a cell's queries before candidates
     val keyed = data.flatMap { case (id, v) =>
@@ -312,47 +310,39 @@ object Knn {
       .mapPartitions { it =>
         // lazily stream one CELL at a time: peak task memory is one query
         // block + its heaps, never the whole partition's output rows
-        new Iterator[org.apache.spark.sql.Row] {
+        new Iterator[Row] {
           private val src = it.buffered
-          private var pending: Iterator[org.apache.spark.sql.Row] =
-            Iterator.empty
+          private var pending: Iterator[Row] = Iterator.empty
+          private val out = new Array[Double](Tile)
           private def nextCell(): Unit = {
             if (!src.hasNext) return
             val cell = src.head._1._1
-            val qIds = scala.collection.mutable.ArrayBuffer.empty[Long]
+            val qIds = scala.collection.mutable.ArrayBuffer.empty[java.lang.Long]
             val qVecs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-            var heaps: Array[graft.functions.TopKHeap] = null
-            while (src.hasNext && src.head._1._1 == cell) {
-              val ((_, tag, id), v) = src.next()
-              if (tag == 0) { qIds += id; qVecs += v }
-              else {
-                if (heaps == null)
-                  heaps = Array.fill(qIds.length)(new graft.functions.TopKHeap(k))
-                var qi = 0
-                while (qi < qIds.length) {
-                  if (qIds(qi) != id) { // self-join: exclude the row itself
-                    val dist = scoreVec(m, v, qVecs(qi))
-                    val d2 = if (m == Metric.InnerProduct) dist
-                      else math.max(dist, 0.0)
-                    heaps(qi).add(id, d2)
-                  }
-                  qi += 1
-                }
-              }
+            while (src.hasNext && src.head._1._1 == cell && src.head._1._2 == 0) {
+              val ((_, _, id), v) = src.next()
+              qIds += id; qVecs += v
             }
-            if (heaps != null) {
-              val hs = heaps
-              pending = qIds.indices.iterator.flatMap { qi =>
-                hs(qi).sorted.iterator.map(nbr =>
-                  org.apache.spark.sql.Row(qIds(qi), nbr.id, nbr.dist))
-              }
+            val ids = qIds.toArray
+            val vecs = qVecs.toArray
+            val norms = vecs.map(sumSq)
+            val heaps = Array.fill(vecs.length)(new TopKHeap(k))
+            while (src.hasNext && src.head._1._1 == cell) {
+              val ((_, _, id), v) = src.next()
+              // self-join: each query excludes the row itself
+              scoreRow(m, m != Metric.InnerProduct, id, v, vecs, norms, ids,
+                heaps, out)
+            }
+            pending = heaps.indices.iterator.flatMap { qi =>
+              heaps(qi).sorted.iterator.map(nbr =>
+                Row(ids(qi).longValue, nbr.id, nbr.dist))
             }
           }
           def hasNext: Boolean = {
             while (!pending.hasNext && src.hasNext) nextCell()
             pending.hasNext
           }
-          def next(): org.apache.spark.sql.Row = {
+          def next(): Row = {
             if (!hasNext) throw new NoSuchElementException
             pending.next()
           }
@@ -366,13 +356,14 @@ object Knn {
     * The all-pairs similarity-join workhorse (dedup, graph building).
     *
     * Scale shape: when the store's vector payload fits `broadcastBytes`
-    * the query side rides one broadcast through the blocked kernel
-    * ([[queryBlocked]]); above the budget the job switches to the grid
-    * kernel ([[gridSelfJoin]]) — no driver collect, executor-memory-
-    * bounded, constant driver actions at any size. Both paths score with
-    * the same primitive kernel and merge through the same deterministic
-    * (dist, id) top-k, so results are identical. An exact self-join is
-    * O(n²) compute regardless; the compute-scale path is ANN
+    * the query side is collected once and broadcast to the blocked kernel
+    * ([[blockedTopK]] with `excludeSelf`); above the budget the job
+    * switches to the grid kernel ([[gridSelfJoin]]) — no driver collect,
+    * executor-memory-bounded, constant driver actions at any size. Both
+    * paths score each store row through the same per-row step
+    * ([[scoreRow]]) and merge through the same deterministic (dist, id)
+    * top-k, so results are identical; both skip a null vector. An exact
+    * self-join is O(n²) compute regardless; the compute-scale path is ANN
     * ([[selfJoinAuto]] with `exact = false`).
     */
   def selfJoin(df: DataFrame, k: Int, metric: Metric,
@@ -386,7 +377,8 @@ object Knn {
       val queries = df.select(col("id").as("query_id"),
         col(vecCol).as("qvector"))
       val store = df.select(col("id"), col(vecCol).as("vector"))
-      queryBlocked(store, queries, k, metric, excludeSelf = true)
+      clipOut(blockedTopK(store, queries, k, metric,
+        clip = metric != Metric.InnerProduct, excludeSelf = true))
     } else {
       // block-count ceiling: past ~4k blocks the 2·n·b shuffle replication
       // (and the O(n²) pair space itself) says the exact self-join is the
@@ -437,7 +429,9 @@ object Knn {
       vecCol: String = "vector",
       broadcastBytes: Long = 256L * 1024 * 1024): DataFrame = {
     val spark = df.sparkSession
-    val store = df.select(col("id").cast("long"), col(vecCol).cast("array<double>"))
+    // a null vector pairs with nothing
+    val store = df.where(col(vecCol).isNotNull)
+      .select(col("id").cast("long"), col(vecCol).cast("array<double>"))
     val (n, dim) = countAndDim(df, vecCol)
     val m = metric
     val schema = org.apache.spark.sql.types.StructType(Seq(
@@ -530,10 +524,10 @@ object Knn {
     }
   }
 
-  /** primitive-loop distance for the grid and threshold kernels — every
-    * Metric, term-for-term identical to the codegen'd Column expressions
-    * (`VectorExpressions`), so either kernel choice gives the same bits;
-    * unequal lengths fail as the expressions fail */
+  /** primitive-loop distance for the threshold kernels and MMR's pool
+    * sims — every Metric, term-for-term identical to the codegen'd Column
+    * expressions (`VectorExpressions`), so either kernel choice gives the
+    * same bits; unequal lengths fail as the expressions fail */
   private def scoreVec(m: Metric, v: Array[Double], q: Array[Double]): Double = {
     checkDim(v.length, q.length)
     var acc = 0.0; var na = 0.0; var nb = 0.0
@@ -640,6 +634,35 @@ object Knn {
     out(2) = finish(m, a2, vv, qq(j2)); out(3) = finish(m, a3, vv, qq(j3))
   }
 
+  /** The per-row step of the blocked and grid kernels: scores store row
+    * (`id`, `v`) against every query of `qs` (Σq² `qq`), [[Tile]] queries
+    * per pass, into the queries' `heaps`. The distance is clipped at 0
+    * when `clip`; query `qi` skips the row when `exclude(qi)` is its id
+    * (`exclude` null: no exclusion; a null slot excludes nothing). `out`
+    * is [[Tile]] scratch slots. */
+  private def scoreRow(m: Metric, clip: Boolean, id: Long, v: Array[Double],
+      qs: Array[Array[Double]], qq: Array[Double],
+      exclude: Array[java.lang.Long], heaps: Array[TopKHeap],
+      out: Array[Double]): Unit = {
+    val nq = qs.length
+    val vv = if (m == Metric.Cosine || m == Metric.Tanimoto) sumSq(v) else 0.0
+    var t = 0
+    while (t < nq) {
+      scoreTile(m, v, vv, qs, qq, t, out)
+      val end = math.min(t + Tile, nq)
+      var qi = t
+      while (qi < end) {
+        if (exclude == null || exclude(qi) == null ||
+            exclude(qi).longValue != id) {
+          val d = out(qi - t)
+          heaps(qi).add(id, if (clip && d < 0.0) 0.0 else d)
+        }
+        qi += 1
+      }
+      t += Tile
+    }
+  }
+
   /** a row's double vector, copied into `buf` when the length fits */
   private def readVector(a: org.apache.spark.sql.catalyst.util.ArrayData,
       buf: Array[Double]): Array[Double] = {
@@ -652,16 +675,16 @@ object Knn {
 
   /** The query batch of [[blockedTopK]], collected once:
     * group keys as the frame holds them, their long view for
-    * `excludeSelf` (null for a null key), vectors widened to double after
-    * any normalization, and each vector's Σq². */
+    * `excludeSelf` (all null without it, and for a null key), vectors
+    * widened to double after any normalization, and each vector's Σq². */
   private final case class QueryBatch(keys: Array[Any],
       selfIds: Array[java.lang.Long], vecs: Array[Array[Double]],
       norms: Array[Double])
 
   /** Exact top-k by the blocked kernel — the reference's batched BLAS
     * kernel (`basic.py:190-207`) on Spark terms, and the one exact top-k
-    * body behind [[queryBlocked]], [[selfJoin]] and
-    * `graft.index.ExactStrategy`:
+    * body behind [[query]], [[selfJoin]], [[mmrRerank]]'s pool,
+    * `graft.index.ExactStrategy` and the LSH exhaustive disk read:
     *  - the query side (`query_id`, `qvecCol`) is collected ONCE to
     *    primitive arrays and broadcast; a query frame that is a local
     *    relation (the facade's) costs no job;
@@ -685,8 +708,10 @@ object Knn {
       qvecCol: String = "qvector", excludeSelf: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = store.sparkSession
+    // the long view only for excludeSelf: any query_id type ranks
+    val selfId = if (excludeSelf) col("query_id") else lit(null)
     val qRows = queries
-      .select(col("query_id"), col("query_id").cast("long"),
+      .select(col("query_id"), selfId.cast("long"),
         col(qvecCol).cast("array<double>"))
       .collect().filterNot(_.isNullAt(2))
     val vecs = qRows.map(_.getSeq[Double](2).toArray)
@@ -697,33 +722,18 @@ object Knn {
     val src = store.select(col("id").cast("long"),
       col(vecCol).cast("array<double>"))
     val m = kernel
-    val selfNorm = m == Metric.Cosine || m == Metric.Tanimoto
     val partials = src.queryExecution.toRdd.mapPartitions { rows =>
       val b = bc.value
       val nq = b.vecs.length
       val heaps = Array.fill(nq)(new TopKHeap(k))
       val out = new Array[Double](Tile)
+      val exclude = if (excludeSelf) b.selfIds else null
       var v = new Array[Double](0)
       if (nq > 0) rows.foreach { r =>
         if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          val id = r.getLong(0)
           v = readVector(r.getArray(1), v)
-          val vv = if (selfNorm) sumSq(v) else 0.0
-          var t = 0
-          while (t < nq) {
-            scoreTile(m, v, vv, b.vecs, b.norms, t, out)
-            val end = math.min(t + Tile, nq)
-            var qi = t
-            while (qi < end) {
-              if (!excludeSelf || b.selfIds(qi) == null ||
-                  b.selfIds(qi).longValue != id) {
-                val d = out(qi - t)
-                heaps(qi).add(id, if (clip && d < 0.0) 0.0 else d)
-              }
-              qi += 1
-            }
-            t += Tile
-          }
+          scoreRow(m, clip, r.getLong(0), v, b.vecs, b.norms, exclude,
+            heaps, out)
         }
       }
       Iterator.range(0, nq).flatMap(qi =>
@@ -736,16 +746,4 @@ object Knn {
     TopK.topKPerGroup(spark.createDataFrame(partials, schema),
       Seq("query_id"), "id", "dist", k)
   }
-
-  /** Exact top-k per query through the blocked kernel ([[blockedTopK]]):
-    * (query_id, id, dist, rank), the same rows and bits as [[query]] on
-    * null-free vectors, without one join row per (store row, query) pair.
-    * The query batch is collected, so it must fit in memory as a
-    * broadcast would. `excludeSelf` drops candidate id == query id
-    * (self-join semantics). */
-  def queryBlocked(store: DataFrame, queries: DataFrame, k: Int,
-      metric: Metric, vecCol: String = "vector", qvecCol: String = "qvector",
-      excludeSelf: Boolean = false): DataFrame =
-    clipOut(blockedTopK(store, queries, k, metric,
-      clip = metric != Metric.InnerProduct, vecCol, qvecCol, excludeSelf))
 }

@@ -23,39 +23,63 @@ class KnnBlockedSpec extends SparkSpec {
         java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
       .sorted.toSeq
 
-  for (metric <- Seq(Metric.Cosine, Metric.Euclidean, Metric.Manhattan)) {
+  /** The cross-join + `topk_neighbors` top-k that `Knn.query` and
+    * `ExactStrategy` ran before the blocked kernel, kept here as the
+    * bit-level reference: one join row per (store row, query) pair scored
+    * by `kernel`'s codegen'd expression, clipped before selection except
+    * for InnerProduct. The output clip is left to [[clipOut]]. */
+  private def crossJoinTopK(store: DataFrame, queries: DataFrame, k: Int,
+      kernel: Metric, clip: Boolean): DataFrame = {
+    val raw = VectorFunctions.distance(kernel)($"vector", $"qvector")
+    val pairs = store.crossJoin(broadcast(queries))
+      .select($"query_id", $"id",
+        (if (clip) greatest(raw, lit(0.0)) else raw).as("dist"))
+    TopK.topKPerGroup(pairs, Seq("query_id"), "id", "dist", k)
+  }
+
+  private def clipOut(df: DataFrame) =
+    df.withColumn("dist", greatest($"dist", lit(0.0)))
+
+  /** the plan `Knn.query` ran before the blocked kernel */
+  private def crossJoinQuery(store: DataFrame, queries: DataFrame, k: Int,
+      metric: Metric): DataFrame =
+    clipOut(crossJoinTopK(store, queries, k, metric,
+      clip = metric != Metric.InnerProduct))
+
+  for (metric <- Metric.all) {
     test(s"blocked kernel matches the join plan (${metric.name})") {
       val queries = emb.where($"id" < 20)
         .select($"id".as("query_id"), $"vector".as("qvector"))
-      val joined = collect(Knn.query(emb, queries, 5, metric))
-      val blocked = collect(Knn.queryBlocked(emb, queries, 5, metric))
+      val joined = collect(crossJoinQuery(emb, queries, 5, metric))
+      val blocked = collect(Knn.query(emb, queries, 5, metric))
       assert(blocked === joined)
     }
   }
 
+  test("Knn.query keeps the query frame's query_id type") {
+    val queries = emb.where($"id" < 3)
+      .select(concat(lit("q"), $"id").as("query_id"), $"vector".as("qvector"))
+    val got = Knn.query(emb, queries, 4, Metric.Cosine)
+    assert(got.schema("query_id").dataType === StringType)
+    def rows(df: DataFrame) = df.select("query_id", "id", "dist", "rank")
+      .collect().map(r => (r.getString(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
+      .sorted.toSeq
+    assert(rows(got) === rows(crossJoinQuery(emb, queries, 4, Metric.Cosine)))
+  }
+
   // ---- ExactStrategy against the cross-join body it replaced ----
 
-  /** The cross-join + `topk_neighbors` top-k that `ExactStrategy` ran
-    * before the blocked kernel, kept here as the bit-level reference:
-    * queries normalized in their element type like the store, one join
-    * row per (store row, query) pair scored by the codegen'd expression,
-    * clipped before selection except for InnerProduct. The output clip is
-    * left to [[clipOut]]. */
+  /** [[crossJoinTopK]] as `ExactStrategy` ran it: queries normalized in
+    * their element type like the store, cosine scored as inner product. */
   private def joinReference(metric: Metric, prepared: DataFrame,
       queries: DataFrame, k: Int): DataFrame = {
     val q = if (metric == Metric.Cosine)
       queries.withColumn("qvector", VectorFunctions.l2_normalize($"qvector"))
     else queries
     val kernel = if (metric == Metric.Cosine) Metric.InnerProduct else metric
-    val raw = VectorFunctions.distance(kernel)($"vector", $"qvector")
-    val d = if (metric == Metric.InnerProduct) raw else greatest(raw, lit(0.0))
-    val pairs = prepared.crossJoin(broadcast(q))
-      .select($"query_id", $"id", d.as("dist"))
-    TopK.topKPerGroup(pairs, Seq("query_id"), "id", "dist", k)
+    crossJoinTopK(prepared, q, k, kernel, clip = metric != Metric.InnerProduct)
   }
-
-  private def clipOut(df: DataFrame) =
-    df.withColumn("dist", greatest($"dist", lit(0.0)))
 
   /** 203 stored rows of 12 dims plus a null-vector row (id 999), in five
     * partitions, the last one empty: dims 0-5 seeded Gaussian, dims 6-11
@@ -150,12 +174,58 @@ class KnnBlockedSpec extends SparkSpec {
     val store = storeOf(DoubleType)
     val queries = queriesOf(DoubleType)
     for (metric <- Seq(Metric.Cosine, Metric.InnerProduct)) {
-      val got = collect(Knn.queryBlocked(store, queries, 5, metric))
-      assert(got === collect(Knn.query(store.where($"vector".isNotNull),
+      val got = collect(Knn.query(store, queries, 5, metric))
+      assert(got === collect(crossJoinQuery(store.where($"vector".isNotNull),
         queries.where($"qvector".isNotNull), 5, metric)))
       assert(!got.exists(_._2 == 999L))
       assert(!got.exists(_._1 == 7L))
     }
+  }
+
+  /** (query_id, id, dist bits) of a radius answer, sorted */
+  private def pairs(df: DataFrame) =
+    df.select("query_id", "id", "dist").collect()
+      .map(r => (r.getLong(0), r.getLong(1),
+        java.lang.Double.doubleToRawLongBits(r.getDouble(2))))
+      .sorted.toSeq
+
+  test("radius queries return no row for a null store or query vector") {
+    val store = storeOf(DoubleType)
+    val queries = queriesOf(DoubleType)
+    val nullFree = (store.where($"vector".isNotNull),
+      queries.where($"qvector".isNotNull))
+    for ((metric, threshold) <- Seq((Metric.Cosine, 0.9),
+        (Metric.Euclidean, 4.0), (Metric.InnerProduct, 0.0))) {
+      val got = pairs(Knn.queryThreshold(store, queries, threshold, metric))
+      assert(got.nonEmpty, metric.name)
+      assert(!got.exists(_._2 == 999L), s"${metric.name}: null store vector")
+      assert(!got.exists(_._1 == 7L), s"${metric.name}: null query vector")
+      assert(got === pairs(Knn.queryThreshold(nullFree._1, nullFree._2,
+        threshold, metric)), metric.name)
+    }
+    // the BASIC facade's radius path (ExactStrategy, inclusive <=)
+    val items = store.select(concat(lit("item"), $"id").as("item"), $"vector")
+      .orderBy($"vector".isNull, $"id")
+    val vic = graft.api.Vicinity.fromDataFrame(items, "item", "vector")
+    val res = vic.queryThresholdDf(queries, 0.9, maxK = 1000)
+      .select("query_id", "item").collect()
+      .map(r => (r.getLong(0), r.getString(1)))
+    assert(res.nonEmpty)
+    assert(!res.exists(_._2 == "item999"), "null store vector matched")
+    assert(!res.exists(_._1 == 7L), "null query vector matched")
+  }
+
+  test("matryoshkaRerank never returns a null-vector id") {
+    val store = storeOf(DoubleType)
+    val queries = queriesOf(DoubleType)
+    val got = collect(Knn.matryoshkaRerank(store, queries, coarseDims = 4,
+      pool = 20, k = 5))
+    assert(got.nonEmpty)
+    assert(!got.exists(_._2 == 999L), "null store vector ranked")
+    assert(!got.exists(_._1 == 7L), "null query vector answered")
+    assert(got === collect(Knn.matryoshkaRerank(
+      store.where($"vector".isNotNull), queries.where($"qvector".isNotNull),
+      coarseDims = 4, pool = 20, k = 5)))
   }
 
   /** the first IllegalArgumentException in `e`'s cause chain */
@@ -172,10 +242,10 @@ class KnnBlockedSpec extends SparkSpec {
         val e = intercept[Exception](run)
         illegalArg(e).map(_.getMessage).getOrElse(s"$label query: $e")
       }
+      assert(failure(crossJoinQuery(store, queries, 3, Metric.Euclidean)
+        .collect()) === expected, s"$label query, expression path")
       assert(failure(Knn.query(store, queries, 3, Metric.Euclidean)
-        .collect()) === expected)
-      assert(failure(Knn.queryBlocked(store, queries, 3, Metric.Euclidean)
-        .collect()) === expected, s"$label query, Knn.queryBlocked")
+        .collect()) === expected, s"$label query, Knn.query")
       val strat = ExactStrategy(Metric.Cosine)
       assert(failure(strat.query(strat.prepare(store), queries, 3)
         .collect()) === expected, s"$label query, ExactStrategy")
@@ -184,8 +254,8 @@ class KnnBlockedSpec extends SparkSpec {
 
   test("blocked self-join (excludeSelf) matches selfJoin") {
     val queries = emb.select($"id".as("query_id"), $"vector".as("qvector"))
-    val a = collect(Knn.queryBlocked(emb, queries, 1, Metric.Cosine,
-      excludeSelf = true))
+    val a = collect(clipOut(Knn.blockedTopK(emb, queries, 1, Metric.Cosine,
+      clip = true, excludeSelf = true)))
     val b = collect(Knn.selfJoin(emb, 1, Metric.Cosine))
     assert(a === b)
   }
@@ -195,9 +265,9 @@ class KnnBlockedSpec extends SparkSpec {
     def time(f: => Unit): Double = {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
-    val tJoin = time(Knn.query(emb, queries, 10, Metric.Cosine).count())
-    val tBlocked = time(
-      Knn.queryBlocked(emb, queries, 10, Metric.Cosine).count())
+    val tJoin = time(
+      crossJoinQuery(emb, queries, 10, Metric.Cosine).count())
+    val tBlocked = time(Knn.query(emb, queries, 10, Metric.Cosine).count())
     info(f"join plan: $tJoin%.2fs, blocked kernel: $tBlocked%.2fs (500x500)")
     assert(tBlocked > 0) // timing is informational; correctness asserted above
   }

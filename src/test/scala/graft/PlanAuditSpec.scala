@@ -190,4 +190,40 @@ class PlanAuditSpec extends SparkSpec {
     assert(!plan.contains("inner_product_distance"), plan)
     assert(res.count() === 30)
   }
+
+  test("the library's exact top-k bodies plan no pair join and no per-pair distance") {
+    // Knn.query, MMR's pool, the self-join and the LSH exhaustive disk read
+    // score through the blocked kernel: a cross join of store and queries
+    // (BroadcastNestedLoopJoin) with a codegen'd distance on every pair row
+    // is the plan it replaced
+    import spark.implicits._
+    import graft.core.Metric
+    import graft.operators.Knn
+    val rnd = new scala.util.Random(9)
+    val store = (0 until 64)
+      .map(i => (i.toLong, s"item$i", Seq.fill(8)(rnd.nextGaussian())))
+      .toDF("id", "item", "vector")
+    val queries = (0 until 6)
+      .map(i => (100L + i, Seq.fill(8)(rnd.nextGaussian())))
+      .toDF("query_id", "qvector")
+    val lsh = graft.index.LshStrategy(Metric.Cosine, nTables = 4, nBits = 4)
+    val path = graft.VerifyIO.scratchDir("graft_plan_lsh")
+      .resolve("index").toString
+    lsh.writeServingIndex(lsh.prepare(store), path)
+    val selfQueries = store.where($"id" < 4)
+      .select($"id".as("query_id"), $"vector".as("qvector"))
+    val pairDistance = "[a-z0-9]+_distance\\(".r
+    Seq(
+      "Knn.query" -> Knn.query(store, queries, 5, Metric.Euclidean),
+      "Knn.mmrRerank" -> Knn.mmrRerank(store, selfQueries, pool = 10, k = 3),
+      "Knn.selfJoin" -> Knn.selfJoin(store, 3, Metric.Cosine),
+      "LshStrategy.queryExhaustiveFromDisk" ->
+        lsh.queryExhaustiveFromDisk(spark, path, queries, 5)
+    ).foreach { case (name, df) =>
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("BroadcastNestedLoopJoin"), s"$name:\n$plan")
+      assert(pairDistance.findFirstIn(plan).isEmpty, s"$name:\n$plan")
+      assert(df.count() > 0, name)
+    }
+  }
 }

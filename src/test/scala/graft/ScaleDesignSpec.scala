@@ -52,7 +52,10 @@ class ScaleDesignSpec extends SparkSpec {
       .select($"id".as("query_id"), $"vector".as("qvector"))
     val plan = graft.operators.Knn.query(store, queries, 10,
       graft.core.Metric.Cosine).queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastExchange"), s"queries not broadcast:\n$plan")
+    // the query batch rides a broadcast of primitive arrays into the
+    // blocked kernel: no pair join and no per-pair distance expression
+    assert(!plan.contains("BroadcastNestedLoopJoin"), s"pair join in kNN plan:\n$plan")
+    assert(!plan.contains("cosine_distance"), s"per-pair distance in kNN plan:\n$plan")
     // the only allowed shuffle is the k×partitions partial-aggregate merge —
     // the store itself must never hash-partition on a join key
     assert(!plan.contains("Exchange hashpartitioning(id"),

@@ -60,6 +60,28 @@ class ScaleFixesSpec extends SparkSpec {
     }
   }
 
+  test("self-joins skip a null vector on the broadcast and grid routes") {
+    val base = vecDf(120, 6)
+    val df = base.union(spark.createDataFrame(
+      java.util.Arrays.asList(Row(999L, null)), base.schema)).cache()
+    for ((m, threshold) <- Seq((Metric.Cosine, 0.5), (Metric.Euclidean, 1.5))) {
+      val one = Knn.selfJoin(df, 3, m).orderBy("query_id", "rank")
+        .collect().toSeq
+      val grid = Knn.selfJoin(df, 3, m, broadcastBytes = 1024)
+        .orderBy("query_id", "rank").collect().toSeq
+      assert(one.nonEmpty && grid === one, m.name)
+      assert(!one.exists(r => r.getLong(0) == 999L || r.getLong(1) == 999L),
+        s"${m.name}: selfJoin returned the null row")
+      def pairs(budget: Long) =
+        Knn.thresholdSelfJoin(df, threshold, m, broadcastBytes = budget)
+          .orderBy("i", "j").collect().toSeq
+      val inBudget = pairs(256L * 1024 * 1024)
+      assert(inBudget.nonEmpty && pairs(1024) === inBudget, m.name)
+      assert(!inBudget.exists(r => r.getLong(0) == 999L || r.getLong(1) == 999L),
+        s"${m.name}: thresholdSelfJoin returned the null row")
+    }
+  }
+
   test("self-join driver actions stay constant at any block count (r2 #7/r3 #5)") {
     val df = vecDf(240, 8).cache()
     df.count()

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.core.Metric
 import graft.functions.VectorFunctions._
@@ -89,9 +90,14 @@ class VectorExpressionsSpec extends SparkSpec {
       .select($"vec_id".as("id"), $"embedding".as("vector"))
     val queries = emb.where($"id" < 3)
       .select($"id".as("query_id"), $"vector".as("qvector"))
-    val a = Knn.query(emb, queries, 10, Metric.Cosine, useAggregator = true)
+    val a = Knn.query(emb, queries, 10, Metric.Cosine)
       .select("query_id", "id", "rank").collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
-    val b = Knn.query(emb, queries, 10, Metric.Cosine, useAggregator = false)
+    // reference plan: every pair's clipped distance, full window sort
+    val dist = greatest(cosine_distance($"vector", $"qvector"), lit(0.0))
+    val w = Window.partitionBy("query_id").orderBy($"dist", $"id")
+    val b = emb.crossJoin(broadcast(queries))
+      .select($"query_id", $"id", dist.as("dist"))
+      .withColumn("rank", row_number().over(w)).where($"rank" <= 10)
       .select("query_id", "id", "rank").collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sorted
     assert(a.length === 30)
     assert(a.toSeq === b.toSeq)
