@@ -47,23 +47,60 @@ object Queries {
     * deliberately NOT routed through this cache: layouts gain partition
     * values and sidecar-driven shape across generations.
     *
-    * The events table is conf-sensitive at INFERENCE time (nano-epoch
-    * generations need `nanosAsLong`; micros generations must infer
-    * TIMESTAMP, not TIMESTAMP_NTZ, for the epoch cast to be legal), and
-    * with a cache the FIRST reader pins the schema for the session — so
-    * both confs are pinned here before any events inference, giving
-    * every consumer the shape [[eventsTable]] documents regardless of
-    * which query reads events first. */
-  private val schemaCache =
-    new SessionCache[org.apache.spark.sql.types.StructType]
+    * Inference is conf-sensitive for every table with a naive
+    * TIMESTAMP column — events, and lineitem and orders, whose dates are
+    * TIMESTAMP(MICROS, not UTC-adjusted): nano-epoch generations need
+    * `nanosAsLong`, and micros must infer TIMESTAMP, not TIMESTAMP_NTZ,
+    * for the epoch cast to be legal. With a cache the FIRST reader pins
+    * the schema for the session, so [[inferenceConfs]] are set before
+    * any base-table inference, giving every consumer the shape
+    * [[eventsTable]] documents regardless of which query reads first.
+    *
+    * The cache relies on two facts, checked on every read, and a read
+    * that breaks one fails naming it: the table's files are the ones the
+    * schema was inferred from (base tables are immutable), and the
+    * inference confs still hold their pinned values. */
+  private val schemaCache = new SessionCache[TableSchema]
+
+  /** a cached base-table schema and the (path, length, mtime) of the
+    * files it was inferred from */
+  private final case class TableSchema(
+      schema: org.apache.spark.sql.types.StructType,
+      files: Seq[(String, Long, Long)])
+
+  /** the parquet confs a base-table schema inference reads */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
+
+  private def tableFiles(s: SparkSession, path: String): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val it = p.getFileSystem(s.sparkContext.hadoopConfiguration).listFiles(p, true)
+    val files = Seq.newBuilder[(String, Long, Long)]
+    while (it.hasNext) {
+      val f = it.next()
+      files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+    }
+    files.result().sorted
+  }
 
   private[graft] def readTable(s: SparkSession, path: String): DataFrame = {
-    if (path.endsWith("/events.parquet")) {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      s.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
+    val files = tableFiles(s, path)
+    val cached = schemaCache(s).getOrElseUpdate(path, {
+      inferenceConfs.foreach { case (k, v) => s.conf.set(k, v) }
+      TableSchema(s.read.parquet(path).schema, files)
+    })
+    if (cached.files != files) throw new IllegalStateException(
+      s"base table $path changed on disk after its schema was cached " +
+        "for this session; base tables must be immutable while a " +
+        "session reads them")
+    inferenceConfs.foreach { case (k, v) =>
+      if (s.conf.get(k, null) != v) throw new IllegalStateException(
+        s"$k is ${s.conf.get(k, null)}, but the cached schema of $path " +
+          s"was inferred under $v; the base-table inference confs must " +
+          "keep their pinned values for the session")
     }
-    val sch = schemaCache(s).getOrElseUpdate(path, s.read.parquet(path).schema)
-    s.read.schema(sch).parquet(path)
+    s.read.schema(cached.schema).parquet(path)
   }
 
   /** Scale-adaptive parallelism floor (r20, guide §2.2/§2.5): when a scan
@@ -97,8 +134,8 @@ object Queries {
     * timestamp for the window/streaming operators. */
   def eventsTable(s: SparkSession, dir: String): DataFrame = {
     // nanosAsLong + TIMESTAMP-not-NTZ inference confs are pinned inside
-    // [[readTable]]'s events branch (r21), so they hold no matter which
-    // query touches events first
+    // [[readTable]] before any base-table inference, so they hold no
+    // matter which query touches events first
     val raw = readTable(s, s"$dir/events.parquet")
     val tsS = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

@@ -2543,9 +2543,9 @@ object QueriesVector {
     * every cell is probed, making this run provably exact and
     * oracle-checkable end to end THROUGH the disk layout: partitioned
     * write, partition-column recovery on read, normalized-vector
-    * round-trip, probe join, kernel, rank. The nprobe < nlist pruning
-    * behavior of the same code path is spec-pinned against the in-memory
-    * index. */
+    * round-trip, driver-side probe, kernel, rank. The nprobe < nlist
+    * pruning behavior of the same code path is spec-pinned against the
+    * in-memory index. */
   private val qIvfPartitionedKnn = Q("q_ivf_partitioned_knn",
     (s, dir) => {
       val (strat, prepared) = preparedIndex(s, dir, "ivf16x16")(
@@ -2567,7 +2567,7 @@ object QueriesVector {
     * label comparison pushes into the scan. nprobe = nlist makes this run
     * provably exact, so the SAME filtered oracle as q_knn_filtered pins
     * the whole path: labeled layout round trip, pre-filter placement,
-    * probe join, kernel, rank. The nprobe < nlist pruning + pushdown
+    * driver-side probe, kernel, rank. The nprobe < nlist pruning + pushdown
     * behavior of the same code path is plan-asserted in ScaleDesignSpec.
     * Builds its own labeled registry entry, adopting the registry IVF's
     * centroids (training depends on nlist/seed/store, not columns). */

@@ -52,15 +52,23 @@ class Vicinity private (
         StructField("qvector", ArrayType(DoubleType, containsNull = false)))))
   }
 
+  /** A strategy result with each row's `item`, as `cols`. The item comes
+    * from the result itself when the strategy carried it from the rows it
+    * scored (the IVF family reads it from the prepared frame or the
+    * serving layout, which hold the store's items); otherwise it is
+    * joined from the store by id. */
+  private def withItems(res: DataFrame, cols: String*): DataFrame =
+    (if (res.columns.contains("item")) res
+     else res.join(store.select(col("id"), col("item")), Seq("id"), "left"))
+      .select(cols.map(col): _*)
+
   /** k-NN as a DataFrame: (query_id, id, item, dist, rank).
     * ≙ `vicinity.query` (`vicinity.py:114-138`): distances clipped ≥ 0,
     * indices joined back to items, ascending by (dist, id).
     */
-  def queryDf(queries: DataFrame, k: Int): DataFrame = {
-    val res = strategy.query(prepared, queries, k)
-    res.join(store.select(col("id"), col("item")), Seq("id"), "left")
-      .select("query_id", "id", "item", "dist", "rank")
-  }
+  def queryDf(queries: DataFrame, k: Int): DataFrame =
+    withItems(strategy.query(prepared, queries, k),
+      "query_id", "id", "item", "dist", "rank")
 
   /** Store/index introspection manifest — the dataset-card of an index:
     * backend, physical strategy, metric, row count, dimensionality,
@@ -86,8 +94,7 @@ class Vicinity private (
     // path ignores the frame it is handed, so query(where(...)) would
     // silently drop the predicate there (advice r11)
     val res = strategy.queryFiltered(prepared.where(predicate), queries, k)
-    res.join(store.select(col("id"), col("item")), Seq("id"), "left")
-      .select("query_id", "id", "item", "dist", "rank")
+    withItems(res, "query_id", "id", "item", "dist", "rank")
   }
 
   /** Disk-resident serving at the FACADE level — the deployment story's
@@ -116,13 +123,14 @@ class Vicinity private (
       s"Backend ${backend.name} (${strategy.name}) has no disk-serving layout.")
   }
 
-  /** Top-k from a [[writeServingIndex]] layout, item-joined like every
-    * facade query — same output schema as [[queryDf]]. */
-  def queryFromDiskDf(path: String, queries: DataFrame, k: Int): DataFrame = {
-    val res = diskServing.queryFromDisk(spark, path, queries, k)
-    res.join(store.select(col("id"), col("item")), Seq("id"), "left")
-      .select("query_id", "id", "item", "dist", "rank")
-  }
+  /** Top-k from a [[writeServingIndex]] layout — same output schema as
+    * [[queryDf]]. `item` comes from the layout where the family carries
+    * it out of the scan (the IVF family: its layout holds the items the
+    * facade wrote and appended), with no store read; every other family
+    * joins it from the store by id. */
+  def queryFromDiskDf(path: String, queries: DataFrame, k: Int): DataFrame =
+    withItems(diskServing.queryFromDisk(spark, path, queries, k),
+      "query_id", "id", "item", "dist", "rank")
 
   /** Radius search from the serving layout (verdict r12 #3 — the
     * strategy layer served radius/filtered/delete from disk but the
@@ -137,8 +145,7 @@ class Vicinity private (
       s"Backend ${backend.name} (${strategy.name}) does not serve " +
         "threshold queries from disk.")
     val res = d.queryThresholdFromDisk(spark, path, queries, threshold, maxK)
-    res.join(store.select(col("id"), col("item")), Seq("id"), "left")
-      .select("query_id", "id", "item", "dist")
+    withItems(res, "query_id", "id", "item", "dist")
   }
 
   /** Metadata-filtered k-NN from the serving layout — PRE-filter
@@ -152,8 +159,7 @@ class Vicinity private (
       s"Backend ${backend.name} (${strategy.name}) does not serve " +
         "filtered queries from disk.")
     val res = d.queryFilteredFromDisk(spark, path, queries, k, predicate)
-    res.join(store.select(col("id"), col("item")), Seq("id"), "left")
-      .select("query_id", "id", "item", "dist", "rank")
+    withItems(res, "query_id", "id", "item", "dist", "rank")
   }
 
   /** Integer Hamming-radius search from the serving layout — the BINARY
@@ -170,8 +176,7 @@ class Vicinity private (
       s"Backend ${backend.name} (${strategy.name}) does not serve " +
         "Hamming-radius queries from disk.")
     val res = d.queryHammingFromDisk(spark, path, queries, bits, maxK)
-    res.join(store.select(col("id"), col("item")), Seq("id"), "left")
-      .select("query_id", "id", "item", "dist", "rank")
+    withItems(res, "query_id", "id", "item", "dist", "rank")
   }
 
   /** Delete against the serving layout — partition-scoped rewrite (cell
@@ -463,8 +468,7 @@ class Vicinity private (
       maxK: Int = 100): DataFrame = {
     requireThresholdMaxK(maxK)
     val res = strategy.queryThreshold(prepared, queries, threshold, maxK)
-    res.join(store.select(col("id"), col("item")), Seq("id"), "left")
-      .select("query_id", "id", "item", "dist")
+    withItems(res, "query_id", "id", "item", "dist")
   }
 
   def queryThreshold(vectors: Seq[Seq[Double]], threshold: Double = 0.5,

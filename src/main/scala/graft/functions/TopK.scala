@@ -53,12 +53,13 @@ final class TopKHeap(val k: Int) extends Serializable {
     }
   }
 
-  def add(id: Long, d: Double): Unit = {
+  /** keeps (id, d) if it is among the k smallest seen; true if it was kept */
+  def add(id: Long, d: Double): Boolean = {
     if (size < k) {
-      dists(size) = d; ids(size) = id; size += 1; siftUp(size - 1)
+      dists(size) = d; ids(size) = id; size += 1; siftUp(size - 1); true
     } else if (k > 0 && worse(dists(0), ids(0), d, id)) {
-      dists(0) = d; ids(0) = id; siftDown()
-    }
+      dists(0) = d; ids(0) = id; siftDown(); true
+    } else false
   }
 
   def mergeIn(o: TopKHeap): TopKHeap = {

@@ -4,9 +4,11 @@ import org.apache.spark.ml.clustering.KMeans
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.core.Metric
 import graft.functions.{TopK, VectorFunctions}
+import graft.operators.Knn
 
 /** IVF (inverted-file) strategy ≙ the reference's FAISS `ivf*` index family
   * (`/root/reference/vicinity/backends/faiss.py:101-118`): train a KMeans
@@ -50,16 +52,20 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
   }
 
   private def nearestCentroidsUdf(cents: Array[Array[Double]], n: Int) =
-    udf { (v: Seq[Double]) =>
-      val arr = v.toArray
-      val dists = cents.map { c =>
-        var s = 0.0
-        var i = 0
-        while (i < arr.length) { val d = arr(i) - c(i); s += d * d; i += 1 }
-        s
-      }
-      dists.zipWithIndex.sortBy(_._1).take(n).map(_._2)
+    udf { (v: Seq[Double]) => IvfStrategy.nearestCells(cents, v.toArray, n) }
+
+  /** the driver-side probe of a normalized query vector: its `probes`
+    * nearest cells, as [[nearestCentroidsUdf]] gives them */
+  private def prober(probes: Int): Array[Double] => Array[Int] = {
+    require(centroids != null, "IvfStrategy.prepare must run before query")
+    val cents = centroids
+    val n = math.min(probes, cents.length)
+    v => {
+      if (v.length != cents(0).length) throw new IllegalArgumentException(
+        s"vector dimension mismatch: ${cents(0).length} vs ${v.length}")
+      IvfStrategy.nearestCells(cents, v, n)
     }
+  }
 
   /** rows used to train the codebook; assignment still covers every row
     * (FAISS trains on a sample too — training cost must not scale with the
@@ -152,7 +158,7 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
   // discipline): probe pruning still resolves at the directory level,
   // readers union committed generations only, and the sidecar
   // `_ivf_serving_meta.json` records {family, metric, nlist, seed,
-  // generations, centroids} — the codebook RIDES IN THE LAYOUT, so
+  // generations, schema, centroids} — the codebook RIDES IN THE LAYOUT, so
   // appends/deletes validate they assign with the codebook the layout
   // was built from (a mismatched codebook would route rows to cells no
   // probe list ever selects — the silent-divergence class). The
@@ -177,7 +183,11 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
 
   private def servingMetaPath(path: String) = s"$path/_ivf_serving_meta.json"
 
-  private def cellMetaJson(family: String, generations: Int): String = {
+  /** the sidecar; `schema` is the layout's schema, partition columns
+    * included, so a read runs no schema-inference job and partition
+    * discovery infers no value types */
+  private def cellMetaJson(family: String, generations: Int,
+      schema: StructType): String = {
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.createObjectNode()
     root.put("family", family)
@@ -185,10 +195,23 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
     root.put("nlist", nlist)
     root.put("seed", seed)
     root.put("generations", generations)
+    root.put("schema", schema.json)
     val arr = root.putArray("centroids")
     centroids.foreach { c => val row = arr.addArray(); c.foreach(row.add) }
     mapper.writeValueAsString(root)
   }
+
+  /** the layout under a validated sidecar, read with the schema it
+    * records; a sidecar written before the schema field existed costs
+    * one inference */
+  private def readCells(spark: org.apache.spark.sql.SparkSession,
+      path: String, meta: com.fasterxml.jackson.databind.JsonNode): DataFrame =
+    Option(meta.get("schema")) match {
+      case Some(s) => spark.read
+        .schema(DataType.fromJson(s.asText()).asInstanceOf[StructType])
+        .parquet(path)
+      case None => spark.read.parquet(path)
+    }
 
   /** read + validate the serving sidecar: family tag, metric, and the
     * CODEBOOK must match this instance (training is deterministic, so
@@ -232,19 +255,24 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
   }
 
   /** committed rows of a cell serving layout — the one read every
-    * serving entry point goes through. A flat [[writeIndex]] layout (no
-    * `_gen` column) reads unchanged; a generation layout requires its
-    * sidecar and unions committed generations only, so an orphan
-    * generation from a crashed append is invisible. */
+    * serving entry point goes through. A generation layout is read with
+    * the schema its sidecar records (no inference job) and unions
+    * committed generations only, so an orphan generation from a crashed
+    * append is invisible. A flat [[writeIndex]] layout (no sidecar, no
+    * `_gen` column) reads unchanged through one inference; a generation
+    * layout without its sidecar fails. */
   private[index] def servingRows(spark: org.apache.spark.sql.SparkSession,
-      path: String, family: String): DataFrame = {
-    val raw = spark.read.parquet(path)
-    if (!raw.columns.contains("_gen")) raw
-    else {
+      path: String, family: String): DataFrame =
+    if (graft.core.FsIO.exists(servingMetaPath(path))) {
       val meta = validateCellMeta(path, family)
-      raw.where(col("_gen") < meta.get("generations").asInt())
+      readCells(spark, path, meta)
+        .where(col("_gen") < meta.get("generations").asInt())
+    } else {
+      val raw = spark.read.parquet(path)
+      // a generation layout without its sidecar: validation fails
+      if (raw.columns.contains("_gen")) validateCellMeta(path, family)
+      raw
     }
-  }
 
   /** [[DiskServing.writeServingIndex]] for the cell families: `_gen=0`
     * of the generation-nested layout plus the sidecar. A rewrite of an
@@ -263,7 +291,7 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
       rows.write.mode("overwrite").partitionBy("_gen", "_centroid")
         .parquet(dir)
       graft.core.FsIO.write(servingMetaPath(dir),
-        cellMetaJson(family, generations = 1))
+        cellMetaJson(family, generations = 1, rows.schema))
     }
   }
 
@@ -283,8 +311,9 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
   private[index] def appendPreparedCells(
       spark: org.apache.spark.sql.SparkSession, path: String,
       family: String, inc: DataFrame, tag: String): Unit = {
-    validateCellMeta(path, family)
-    require(spark.read.parquet(path).columns.contains("_gen"),
+    val meta = validateCellMeta(path, family)
+    val schema = readCells(spark, path, meta).schema
+    require(schema.fieldNames.contains("_gen"),
       s"layout at $path predates the generation layout — rewrite it " +
         "with writeServingIndex before appending")
     val keyed = inc.withColumn("id", col("id").cast("long")).cache()
@@ -311,7 +340,8 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
       try {
         val cells = keyed.select("_centroid").distinct().collect()
           .map(_.getInt(0)).toSeq.map(Integer.valueOf)
-        val clash = spark.read.parquet(path)
+        // listed after the claim, so a contender's commit is visible
+        val clash = readCells(spark, path, meta)
           .where(col("_gen") < gens && col("_centroid").isin(cells: _*))
           .select(col("id").cast("long").as("id"))
           .join(keyed.select("id"), Seq("id"), "left_semi")
@@ -332,7 +362,7 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("_gen", "_centroid").parquet(path)
         graft.core.FsIO.write(servingMetaPath(path),
-          cellMetaJson(family, gens + 1)) // the commit point
+          cellMetaJson(family, gens + 1, schema)) // the commit point
       } catch {
         case e: Throwable =>
           // reopen the slot on a pre-commit failure: partial `_gen=N`
@@ -354,15 +384,15 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
     val meta = validateCellMeta(path, family)
     val gens = meta.get("generations").asInt()
     if (gens <= 1) return // already compact
-    val committed = spark.read.parquet(path)
-      .where(col("_gen") < gens).drop("_gen")
+    val layout = readCells(spark, path, meta)
+    val committed = layout.where(col("_gen") < gens).drop("_gen")
     graft.core.Generations.writeStaged(spark, path, "__compacting") { dir =>
       committed.withColumn("_gen", lit(0))
         .repartition(col("_centroid"))
         .write.mode("overwrite").partitionBy("_gen", "_centroid")
         .parquet(dir)
       graft.core.FsIO.write(servingMetaPath(dir),
-        cellMetaJson(family, generations = 1))
+        cellMetaJson(family, generations = 1, layout.schema))
     }
   }
 
@@ -488,25 +518,22 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
   override protected def doCompactServing(spark: org.apache.spark.sql.SparkSession,
       path: String): Unit = compactCells(spark, path, name)
 
-  /** Disk-resident serving: answer top-k from the cell-partitioned parquet
-    * layout [[writeIndex]] wrote, scanning ONLY the probed cells. The
-    * distinct union of the batch's probe cells becomes a `_centroid IN`
-    * predicate the scan resolves at the DIRECTORY level (Parquet partition
-    * pruning — spec-asserted on the physical plan), so a query batch reads
-    * ~nprobe/nlist of the index from storage: FAISS's inverted-list
-    * pruning, served by the storage layer with NO resident index and no
-    * warm-up scan. This is the 100 TB serving shape — the index lives as a
-    * partitioned table, executors read only probed cells, and per-query
-    * cell matching happens in the same broadcast equi-join as the
-    * in-memory path, so results are identical to [[query]] on the
-    * prepared frame (spec-pinned). */
+  /** Disk-resident serving: answer top-k from a cell layout
+    * ([[writeServingIndex]] or [[writeIndex]]) through [[query]], the
+    * same body as the in-memory path, so results are identical to
+    * [[query]] on the prepared frame (spec-pinned). The layout is read
+    * with the schema its sidecar records, and the union of the batch's
+    * probe cells, computed on the driver, becomes a `_centroid IN`
+    * predicate the scan resolves at the DIRECTORY level (Parquet
+    * partition pruning, spec-asserted on the physical plan). A query
+    * batch therefore reads ~nprobe/nlist of the index from storage:
+    * FAISS's inverted-list pruning, with no resident index and no
+    * warm-up scan. A single-query read runs two Spark jobs, the pruned
+    * scan with its scoring and the survivor merge; the layout's `item`
+    * column rides out with the survivors. */
   override def queryFromDisk(spark: org.apache.spark.sql.SparkSession,
-      path: String, queries: DataFrame, k: Int): DataFrame = {
-    require(centroids != null, "IvfStrategy.prepare must run before query")
-    val pruned = servingRows(spark, path, name)
-      .where(col("_centroid").isInCollection(probeCells(queries)))
-    query(pruned, queries, k)
-  }
+      path: String, queries: DataFrame, k: Int): DataFrame =
+    query(servingRows(spark, path, name), queries, k)
 
   /** Filtered ANN off the disk layout — the "filtered vector search"
     * shape: a metadata predicate composed with the probe pruning, with
@@ -523,13 +550,8 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
   override def supportsDiskFiltered: Boolean = true
   override def queryFilteredFromDisk(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, k: Int,
-      predicate: org.apache.spark.sql.Column): DataFrame = {
-    require(centroids != null, "IvfStrategy.prepare must run before query")
-    val pruned = servingRows(spark, path, name)
-      .where(col("_centroid").isInCollection(probeCells(queries)))
-      .where(predicate)
-    query(pruned, queries, k)
-  }
+      predicate: org.apache.spark.sql.Column): DataFrame =
+    query(servingRows(spark, path, name).where(predicate), queries, k)
 
   /** [[queryFromDisk]] for the range-search entry point: same
     * partition-pruned scan, same FAISS strict-`<` threshold semantics as
@@ -614,20 +636,22 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
   }
 
   /** distinct union of every query's nprobe nearest cells — the static
-    * pruning predicate for strategies that compose over IVF cells */
+    * pruning predicate for strategies that compose over IVF cells. The
+    * normalized batch is collected and probed on the driver (a local
+    * relation costs no job); a null query vector probes nothing. */
   def probeCells(queries: DataFrame): Seq[Int] = {
+    val probe = prober(nprobe)
+    maybeNormalize(queries, "qvector").select("qvector").collect()
+      .filterNot(_.isNullAt(0))
+      .flatMap(r => probe(r.getSeq[Double](0).toArray)).distinct.sorted.toSeq
+  }
+
+  /** every (query, row of a probed cell) pair with its clipped distance:
+    * the radius path's candidates */
+  private def candidates(prepared: DataFrame, queries: DataFrame): DataFrame = {
     require(centroids != null, "IvfStrategy.prepare must run before query")
     val q = maybeNormalize(queries, "qvector")
     val nprobeEff = math.min(nprobe, centroids.length)
-    q.select(explode(nearestCentroidsUdf(centroids, nprobeEff)(col("qvector"))))
-      .distinct().collect().map(_.getInt(0)).toSeq
-  }
-
-  private def candidates(prepared: DataFrame, queries: DataFrame,
-      probes: Int): DataFrame = {
-    require(centroids != null, "IvfStrategy.prepare must run before query")
-    val q = maybeNormalize(queries, "qvector")
-    val nprobeEff = math.min(probes, centroids.length)
     val qProbes = q.withColumn("_probe",
       explode(nearestCentroidsUdf(centroids, nprobeEff)(col("qvector"))))
       .select(col("query_id"), col("qvector"), col("_probe"))
@@ -642,11 +666,17 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
       .select(col("query_id"), col("id"), greatest(d, lit(0.0)).as("dist"))
   }
 
-  def query(prepared: DataFrame, queries: DataFrame, k: Int): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    TopK.topKPerGroup(candidates(prepared, queries, nprobe),
-      Seq("query_id"), "id", "dist", k)
-  }
+  /** Top-k over the probed cells: (query_id, id, dist, rank), plus `item`
+    * when the rows carry one. Each query's nprobe nearest cells are
+    * computed on the driver; the rows are pruned to their union and each
+    * row is scored only against the queries that probe its cell, through
+    * `Knn`'s per-row step ([[graft.operators.Knn.cellTopK]]). Cosine is
+    * inner product over the pre-normalized vectors; distances clip at 0
+    * before selection. */
+  def query(prepared: DataFrame, queries: DataFrame, k: Int): DataFrame =
+    Knn.cellTopK(prepared, maybeNormalize(queries, "qvector"), k,
+      if (metric == Metric.Cosine) Metric.InnerProduct else metric,
+      prober(nprobe))
 
   /** rows actually scored = Σ over (query, probed cell) of |cell| — the
     * pruning ratio vs brute force is the IVF speed story in one number */
@@ -738,7 +768,7 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
     * candidate with `dist < threshold` (`faiss.py:18-23`, `175-183`). */
   def queryThreshold(prepared: DataFrame, queries: DataFrame,
       threshold: Double, maxK: Int): DataFrame =
-    candidates(prepared, queries, nprobe)
+    candidates(prepared, queries)
       .where(col("dist") < IndexStrategy.faissRangeBound(metric, threshold))
 
   /** Distributed ANN self-join: each row's approximate k nearest OTHER
@@ -772,5 +802,20 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
       .where(col("id") =!= col("query_id"))
       .select(col("query_id"), col("id"), greatest(d, lit(0.0)).as("dist"))
     TopK.topKPerGroup(pairs, Seq("query_id"), "id", "dist", k)
+  }
+}
+
+object IvfStrategy {
+  /** the `n` cells whose centroids lie nearest `v` (squared euclidean),
+    * nearest first, ties to the lower cell */
+  private def nearestCells(cents: Array[Array[Double]], v: Array[Double],
+      n: Int): Array[Int] = {
+    val dists = cents.map { c =>
+      var s = 0.0
+      var i = 0
+      while (i < v.length) { val d = v(i) - c(i); s += d * d; i += 1 }
+      s
+    }
+    dists.zipWithIndex.sortBy(_._1).take(n).map(_._2)
   }
 }

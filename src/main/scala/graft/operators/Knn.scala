@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -18,8 +20,9 @@ import graft.functions.{TopK, TopKHeap, VectorFunctions}
   * partition scores its rows against the whole batch into per-query
   * bounded heaps (see [[graft.functions.TopKHeap]]), and the store never
   * shuffles — the only shuffled rows are `k × partitions` per query.
-  * Radius queries output every pair under the bound, so they keep the
-  * broadcast pair plan ([[radiusPairs]]).
+  * The IVF family's cell-scoped top-k ([[cellTopK]]) scores through the
+  * same per-row step. Radius queries output every pair under the bound,
+  * so they keep the broadcast pair plan ([[radiusPairs]]).
   */
 object Knn {
 
@@ -634,18 +637,19 @@ object Knn {
     out(2) = finish(m, a2, vv, qq(j2)); out(3) = finish(m, a3, vv, qq(j3))
   }
 
-  /** The per-row step of the blocked and grid kernels: scores store row
+  /** The per-row step of the blocked, grid and cell kernels: scores store row
     * (`id`, `v`) against every query of `qs` (Σq² `qq`), [[Tile]] queries
     * per pass, into the queries' `heaps`. The distance is clipped at 0
     * when `clip`; query `qi` skips the row when `exclude(qi)` is its id
     * (`exclude` null: no exclusion; a null slot excludes nothing). `out`
-    * is [[Tile]] scratch slots. */
+    * is [[Tile]] scratch slots. True when some heap kept the row. */
   private def scoreRow(m: Metric, clip: Boolean, id: Long, v: Array[Double],
       qs: Array[Array[Double]], qq: Array[Double],
       exclude: Array[java.lang.Long], heaps: Array[TopKHeap],
-      out: Array[Double]): Unit = {
+      out: Array[Double]): Boolean = {
     val nq = qs.length
     val vv = if (m == Metric.Cosine || m == Metric.Tanimoto) sumSq(v) else 0.0
+    var kept = false
     var t = 0
     while (t < nq) {
       scoreTile(m, v, vv, qs, qq, t, out)
@@ -655,12 +659,13 @@ object Knn {
         if (exclude == null || exclude(qi) == null ||
             exclude(qi).longValue != id) {
           val d = out(qi - t)
-          heaps(qi).add(id, if (clip && d < 0.0) 0.0 else d)
+          if (heaps(qi).add(id, if (clip && d < 0.0) 0.0 else d)) kept = true
         }
         qi += 1
       }
       t += Tile
     }
+    kept
   }
 
   /** a row's double vector, copied into `buf` when the length fits */
@@ -673,13 +678,29 @@ object Knn {
     v
   }
 
-  /** The query batch of [[blockedTopK]], collected once:
+  /** The query batch of [[blockedTopK]] and [[cellTopK]], collected once:
     * group keys as the frame holds them, their long view for
     * `excludeSelf` (all null without it, and for a null key), vectors
     * widened to double after any normalization, and each vector's Σq². */
   private final case class QueryBatch(keys: Array[Any],
       selfIds: Array[java.lang.Long], vecs: Array[Array[Double]],
       norms: Array[Double])
+
+  /** Collects `queries` (`query_id`, `qvecCol`) into a [[QueryBatch]],
+    * dropping null vectors; a local-relation frame costs no job. */
+  private def collectBatch(queries: DataFrame, qvecCol: String,
+      excludeSelf: Boolean): QueryBatch = {
+    // the long view only for excludeSelf: any query_id type ranks
+    val selfId = if (excludeSelf) col("query_id") else lit(null)
+    val qRows = queries
+      .select(col("query_id"), selfId.cast("long"),
+        col(qvecCol).cast("array<double>"))
+      .collect().filterNot(_.isNullAt(2))
+    val vecs = qRows.map(_.getSeq[Double](2).toArray)
+    QueryBatch(qRows.map(_.get(0)),
+      qRows.map(r => if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))),
+      vecs, vecs.map(sumSq))
+  }
 
   /** Exact top-k by the blocked kernel — the reference's batched BLAS
     * kernel (`basic.py:190-207`) on Spark terms, and the one exact top-k
@@ -708,16 +729,8 @@ object Knn {
       qvecCol: String = "qvector", excludeSelf: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = store.sparkSession
-    // the long view only for excludeSelf: any query_id type ranks
-    val selfId = if (excludeSelf) col("query_id") else lit(null)
-    val qRows = queries
-      .select(col("query_id"), selfId.cast("long"),
-        col(qvecCol).cast("array<double>"))
-      .collect().filterNot(_.isNullAt(2))
-    val vecs = qRows.map(_.getSeq[Double](2).toArray)
-    val bc = spark.sparkContext.broadcast(QueryBatch(qRows.map(_.get(0)),
-      qRows.map(r => if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))),
-      vecs, vecs.map(sumSq)))
+    val bc = spark.sparkContext.broadcast(
+      collectBatch(queries, qvecCol, excludeSelf))
     // widening to double is exact, as in the expressions' accessors
     val src = store.select(col("id").cast("long"),
       col(vecCol).cast("array<double>"))
@@ -745,5 +758,86 @@ object Knn {
       StructField("dist", DoubleType, nullable = false)))
     TopK.topKPerGroup(spark.createDataFrame(partials, schema),
       Seq("query_id"), "id", "dist", k)
+  }
+
+  /** Exact top-k of each query over the rows of only the cells it probes:
+    * the IVF family's one top-k body, in memory and off a disk layout.
+    *  - The batch (`query_id`, `qvector`) is collected once and `probe`
+    *    maps each query vector to its cells on the driver.
+    *  - `rows` is filtered to the union of the probed cells, which on a
+    *    cell-partitioned layout is partition pruning. Each row is scored
+    *    through [[scoreRow]] against only the queries that probe its
+    *    cell, into per-query bounded heaps.
+    *  - Each partition emits its survivors; an exchange on `query_id`
+    *    merges them into (query_id, id, dist, rank), rank 1-based by
+    *    (dist, id).
+    *
+    * The kernel runs inside the Dataset plan, so the executed plan keeps
+    * the pruned scan. `rows` holds (`id`, `vector`, `_centroid`); when it
+    * also has an `item` column, the item of each row a heap admitted
+    * lands in the output as a last column, and other rows never retain
+    * it. Distances are `kernel`'s expression bits, clipped at 0 before
+    * selection; a null vector scores nothing. */
+  private[graft] def cellTopK(rows: DataFrame, queries: DataFrame, k: Int,
+      kernel: Metric, probe: Array[Double] => Array[Int]): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    val batch = collectBatch(queries, "qvector", excludeSelf = false)
+    // cell -> the batch indices of the queries that probe it
+    val byCell: Map[Int, Array[Int]] = batch.vecs.indices
+      .flatMap(qi => probe(batch.vecs(qi)).map(_ -> qi))
+      .groupBy(_._1).map { case (c, qs) => c -> qs.map(_._2).toArray }
+    val hasCarry = rows.columns.contains("item")
+    val carried =
+      if (hasCarry) Seq(rows.schema("item").copy(nullable = true)) else Nil
+    val src = rows
+      .where(col("_centroid").isInCollection(byCell.keys.toSeq.sorted))
+      .select(Seq(col("id").cast("long"), col("vector").cast("array<double>"),
+        col("_centroid").cast("int")) ++ carried.map(f => col(f.name)): _*)
+    val key = StructField("query_id", queries.schema("query_id").dataType)
+    val idDist = Seq(StructField("id", LongType, nullable = false),
+      StructField("dist", DoubleType, nullable = false))
+    val bc = rows.sparkSession.sparkContext.broadcast((batch, byCell))
+    val m = kernel
+    val partials = src.mapPartitions { (it: Iterator[Row]) =>
+      val (b, cells) = bc.value
+      val heaps = Array.fill(b.vecs.length)(new TopKHeap(k))
+      // a cell's sub-batch: its queries' vectors, Σq² and (shared) heaps
+      val subs = scala.collection.mutable.HashMap.empty[Int,
+        (Array[Array[Double]], Array[Double], Array[TopKHeap])]
+      val kept = new java.util.HashMap[Long, Any]()
+      val out = new Array[Double](Tile)
+      it.foreach { r =>
+        if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
+          cells.get(r.getInt(2)).foreach { qs =>
+            val (vs, qq, hs) = subs.getOrElseUpdate(r.getInt(2),
+              (qs.map(b.vecs), qs.map(b.norms), qs.map(heaps)))
+            val id = r.getLong(0)
+            if (scoreRow(m, clip = true, id, r.getSeq[Double](1).toArray, vs,
+                qq, null, hs, out) && hasCarry) kept.put(id, r.get(3))
+          }
+      }
+      heaps.indices.iterator.flatMap(qi => heaps(qi).sorted.iterator.map(n =>
+        Row.fromSeq(Seq(b.keys(qi), n.id, n.dist) ++
+          (if (hasCarry) Seq(kept.get(n.id)) else Nil))))
+    }(Encoders.row(StructType(key +: (idDist ++ carried))))
+    val ranked = StructType((key +: idDist) ++
+      (StructField("rank", IntegerType, nullable = false) +: carried))
+    partials.repartition(col("query_id")).mapPartitions { (it: Iterator[Row]) =>
+      val merged = new java.util.LinkedHashMap[Any,
+        (TopKHeap, java.util.HashMap[Long, Any])]()
+      it.foreach { r =>
+        val acc = merged.computeIfAbsent(r.get(0),
+          _ => (new TopKHeap(k), new java.util.HashMap[Long, Any]()))
+        if (acc._1.add(r.getLong(1), r.getDouble(2)) && hasCarry)
+          acc._2.put(r.getLong(1), r.get(3))
+      }
+      merged.entrySet.iterator.asScala.flatMap { e =>
+        val (h, items) = e.getValue
+        h.sorted.iterator.zipWithIndex.map { case (n, i) =>
+          Row.fromSeq(Seq(e.getKey, n.id, n.dist, i + 1) ++
+            (if (hasCarry) Seq(items.get(n.id)) else Nil))
+        }
+      }
+    }(Encoders.row(ranked))
   }
 }

@@ -226,4 +226,29 @@ class PlanAuditSpec extends SparkSpec {
       assert(df.count() > 0, name)
     }
   }
+
+  test("the IVF disk read plans no store join and no per-pair distance") {
+    // the read scores the pruned cells through Knn's per-row step and
+    // carries `item` out of the layout: a broadcast probe equi-join with a
+    // codegen'd distance per pair, and a store join for `item`, are the
+    // plan it replaced; the partition-pruned scan stays in the plan
+    import spark.implicits._
+    val rnd = new scala.util.Random(21)
+    val vic = graft.api.Vicinity.fromVectorsAndItems(spark,
+      (0 until 200).map(i => s"item$i"),
+      Seq.fill(200)(Seq.fill(8)(rnd.nextGaussian())), graft.core.Backend.Faiss,
+      Some(graft.core.BackendArgs.FaissArgs(indexType = "ivf", nlist = 8)))
+    val path = graft.VerifyIO.scratchDir("graft_plan_ivf")
+      .resolve("index").toString
+    vic.writeServingIndex(path)
+    val queries = Seq((0L, Seq.fill(8)(rnd.nextGaussian())))
+      .toDF("query_id", "qvector")
+    val res = vic.queryFromDiskDf(path, queries, 5)
+    assert(res.collect().length === 5)
+    val plan = res.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join"), plan)
+    assert("[a-z0-9]+_distance\\(".r.findFirstIn(plan).isEmpty, plan)
+    assert("PartitionFilters: \\[[^\\]]*_centroid".r.findFirstIn(plan).isDefined,
+      plan)
+  }
 }

@@ -152,8 +152,11 @@ class ScaleDesignSpec extends SparkSpec {
     // the knob a 100 TB job relies on when the hot key isn't known ahead
     // of time. Thresholds are lowered so the ~MB-scale test fixture
     // crosses them; production defaults (256 MB) scale the same way.
+    // The shuffle partition count is pinned too: the session derives it
+    // from the core count, and the thresholds assume four partitions.
     val conf = spark.conf
     val saved = Seq(
+      "spark.sql.shuffle.partitions",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
       "spark.sql.adaptive.advisoryPartitionSizeInBytes",
@@ -162,6 +165,7 @@ class ScaleDesignSpec extends SparkSpec {
       .map(k => k -> scala.util.Try(Option(conf.get(k))).toOption.flatten)
       .toMap
     try {
+      conf.set("spark.sql.shuffle.partitions", "4")
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1")
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "65536")
       conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "16384")
