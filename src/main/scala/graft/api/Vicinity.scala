@@ -54,9 +54,13 @@ class Vicinity private (
 
   /** A strategy result with each row's `item`, as `cols`. The item comes
     * from the result itself when the strategy carried it from the rows it
-    * scored (the IVF family reads it from the prepared frame or the
-    * serving layout, which hold the store's items); otherwise it is
-    * joined from the store by id. */
+    * scored, which hold the store's items:
+    *  - `ExactStrategy` (BASIC, FAISS `flat`, USEARCH's non-cosine
+    *    metrics): top-k, and USEARCH's top-max_k radius, read it from
+    *    the prepared frame through the blocked kernel;
+    *  - `IvfStrategy` (FAISS `ivf`): top-k reads it from the prepared
+    *    frame, and the IVF family's disk reads from the serving layout.
+    * Every other result joins it from the store by id. */
   private def withItems(res: DataFrame, cols: String*): DataFrame =
     (if (res.columns.contains("item")) res
      else res.join(store.select(col("id"), col("item")), Seq("id"), "left"))

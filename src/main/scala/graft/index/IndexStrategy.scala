@@ -138,10 +138,13 @@ object IndexStrategy {
   * batched matmul + partial top-k (`basic.py:190-221`): the normalized
   * query batch is collected once, each cached store partition scores its
   * rows against the whole batch into per-query bounded heaps, and only
-  * q × k × partitions survivors reach the merge — no per-pair row. The
-  * radius paths run through the library's one radius body
-  * (`Knn.radiusPairs`), whose output is every pair under the bound. Both
-  * skip a null vector.
+  * q × k × partitions survivors reach the merge, which runs in the same
+  * Spark job — no per-pair row, one job. When the prepared frame has an
+  * `item` column (the facade's does), these answers carry each row's
+  * item, so the facade joins nothing to serve them. The radius paths
+  * run through the library's one radius body (`Knn.radiusPairs`), whose
+  * output is every pair under the bound and carries no item. Both skip
+  * a null vector.
   *
   * `strictThreshold = false` is BASIC's inclusive `<=` radius semantics
   * (`basic.py:168`); `true` serves FAISS `flat`, whose `range_search` path
@@ -186,7 +189,8 @@ case class ExactStrategy(metric: Metric, strictThreshold: Boolean = false,
     * dot > 1 row to dist 0 and pick among them by id. */
   private def clipRaw: Boolean = metric != Metric.InnerProduct
 
-  /** top-k per query of the raw distances: (query_id, id, dist, rank) */
+  /** top-k per query of the raw distances: (query_id, id, dist, rank),
+    * plus `item` when `prepared` has one */
   private def rawTopK(prepared: DataFrame, queries: DataFrame,
       k: Int): DataFrame =
     Knn.blockedTopK(prepared, normalizedQueries(queries), k, kernel, clipRaw)

@@ -493,8 +493,8 @@ case class LshStrategy(metric: Metric, nTables: Int = 16, nBits: Int = 6,
     * selection, so the output needs no second clip. */
   def queryExhaustiveFromDisk(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, k: Int): DataFrame =
-    Knn.blockedTopK(diskVectors(spark, path, readMeta(path)), queries, k,
-      metric, clip = true)
+    Knn.blockedTopK(diskVectors(spark, path, readMeta(path)).drop("item"),
+      queries, k, metric, clip = true)
 
   /** [[queryThreshold]] off the same layout — strict `<` and the max_k
     * cap (hnsw.py:107-114), same pruned candidate read. */

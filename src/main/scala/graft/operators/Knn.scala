@@ -2,7 +2,11 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,10 +23,12 @@ import graft.functions.{TopK, TopKHeap, VectorFunctions}
   * is collected once and broadcast as primitive arrays, each store
   * partition scores its rows against the whole batch into per-query
   * bounded heaps (see [[graft.functions.TopKHeap]]), and the store never
-  * shuffles — the only shuffled rows are `k × partitions` per query.
-  * The IVF family's cell-scoped top-k ([[cellTopK]]) scores through the
-  * same per-row step. Radius queries output every pair under the bound,
-  * so they keep the broadcast pair plan ([[radiusPairs]]).
+  * shuffles — the only shuffled rows are `k × partitions` per query,
+  * which [[mergeSurvivors]] merges inside the kernel's own job. The IVF
+  * family's cell-scoped top-k ([[cellTopK]]) scores through the same
+  * per-row step and merges through the same function. Radius queries
+  * output every pair under the bound, so they keep the broadcast pair
+  * plan ([[radiusPairs]]).
   */
 object Knn {
 
@@ -41,7 +47,7 @@ object Knn {
     */
   def query(store: DataFrame, queries: DataFrame, k: Int, metric: Metric,
       vecCol: String = "vector", qvecCol: String = "qvector"): DataFrame =
-    clipOut(blockedTopK(store, queries, k, metric,
+    clipOut(blockedTopK(store.drop("item"), queries, k, metric,
       clip = metric != Metric.InnerProduct, vecCol, qvecCol))
 
   /** The one radius body: every (query, store row) pair whose `kernel`
@@ -230,8 +236,8 @@ object Knn {
       }
       out.toSeq
     }
-    val cands = blockedTopK(store, queries, pool, Metric.Cosine, clip = true,
-        vecCol, qvecCol, excludeSelf = true)
+    val cands = blockedTopK(store.drop("item"), queries, pool, Metric.Cosine,
+        clip = true, vecCol, qvecCol, excludeSelf = true)
       .select(col("query_id"), col("id"), round(lit(1.0) - col("dist"), 6).as("rel"))
     cands
       .join(store.select(col("id"), col(vecCol)), Seq("id"))
@@ -253,14 +259,6 @@ object Knn {
   @inline private def blockOf(id: Long, b: Int): Int =
     (((scala.util.hashing.byteswap64(id) % b) + b) % b).toInt
 
-  private def partialsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("query_id",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("id",
-      org.apache.spark.sql.types.LongType, nullable = false),
-    org.apache.spark.sql.types.StructField("dist",
-      org.apache.spark.sql.types.DoubleType, nullable = false)))
-
   /** cells → a bounded partition count; multiple cells per partition are
     * fine (rows arrive sorted by cell, the kernels flush on cell change) */
   private def gridPartitioner(spark: org.apache.spark.sql.SparkSession,
@@ -281,14 +279,15 @@ object Knn {
     * whose vector payload fits the broadcast budget; the (query block,
     * candidate block) grid is a b²-cell shuffle; within a cell the query
     * block is buffered (≤ budget) and the candidate block STREAMS through
-    * the primitive kernel into one bounded heap per query; a global
-    * per-query top-k merges the b partial sets. Shuffle volume 2·n·b rows;
-    * task memory one block + heaps; driver actions CONSTANT in b. Compute
+    * the primitive kernel into one bounded heap per query; in the same
+    * job [[mergeSurvivors]] merges the b partial sets of the `keys`
+    * queries. Shuffle volume 2·n·b rows; task memory one block + heaps;
+    * driver actions CONSTANT in b. Compute
     * is still O(n²) by definition — the 100 TB similarity path is
     * `IvfStrategy.selfJoin` (see [[selfJoinAuto]]).
     */
   private def gridSelfJoin(df: DataFrame, k: Int, metric: Metric,
-      vecCol: String, b: Int): DataFrame = {
+      vecCol: String, b: Int, keys: Int): DataFrame = {
     val spark = df.sparkSession
     val m = metric
     val nb = b
@@ -351,8 +350,8 @@ object Knn {
           }
         }
       }
-    clipOut(TopK.topKPerGroup(spark.createDataFrame(partials, partialsSchema),
-      Seq("query_id"), "id", "dist", k))
+    clipOut(mergeInJob(spark, partials, k, keys,
+      rankedSchema(LongType, None)))
   }
 
   /** k-NN self-join: for every row of `df`, its k nearest *other* rows.
@@ -390,7 +389,8 @@ object Knn {
       // selfJoinAuto(exact = false)
       val b = math.min(4096L,
         math.ceil(bytes.toDouble / broadcastBytes).toLong).toInt
-      gridSelfJoin(df, k, metric, vecCol, b)
+      gridSelfJoin(df, k, metric, vecCol, b,
+        keys = math.min(n, Int.MaxValue).toInt)
     }
   }
 
@@ -702,62 +702,144 @@ object Knn {
       vecs, vecs.map(sumSq))
   }
 
+  /** The `item` field a scored frame carries into its top-k: the frame's
+    * own, nullable, when it has one. */
+  private def carriedItem(rows: DataFrame): Option[StructField] =
+    if (rows.columns.contains("item"))
+      Some(rows.schema("item").copy(nullable = true))
+    else None
+
+  /** a merged top-k: (query_id, id, dist, rank), then the carried item */
+  private def rankedSchema(keyType: DataType,
+      item: Option[StructField]): StructType =
+    StructType(Seq(StructField("query_id", keyType),
+      StructField("id", LongType, nullable = false),
+      StructField("dist", DoubleType, nullable = false),
+      StructField("rank", IntegerType, nullable = false)) ++ item)
+
+  /** A kernel partition's survivors: (query key, id, dist) for each row
+    * a query's heap holds, plus the row's item from `kept` when `kept`
+    * is not null. */
+  private def survivors(keys: Array[Any], heaps: Array[TopKHeap],
+      kept: java.util.HashMap[Long, Any]): Iterator[Row] =
+    heaps.indices.iterator.flatMap(qi => heaps(qi).sorted.iterator.map(n =>
+      if (kept == null) Row(keys(qi), n.id, n.dist)
+      else Row(keys(qi), n.id, n.dist, kept.get(n.id))))
+
+  /** The one survivor merge of the top-k kernels, run on each partition
+    * of their survivors hashed on `query_id`: one bounded heap per
+    * `query_id` VALUE (duplicate keys merge into one heap and null keys
+    * into another, as a grouped aggregate merges them) and, with
+    * `carry`, the item of each row a heap admitted. Rows
+    * (query_id, id, dist[, item]) in; (query_id, id, dist, rank[, item])
+    * out, rank 1-based by (dist, id). */
+  private def mergeSurvivors(k: Int, carry: Boolean)(
+      it: Iterator[Row]): Iterator[Row] = {
+    val merged = new java.util.LinkedHashMap[Any,
+      (TopKHeap, java.util.HashMap[Long, Any])]()
+    it.foreach { r =>
+      val acc = merged.computeIfAbsent(r.get(0),
+        _ => (new TopKHeap(k), new java.util.HashMap[Long, Any]()))
+      if (acc._1.add(r.getLong(1), r.getDouble(2)) && carry)
+        acc._2.put(r.getLong(1), r.get(3))
+    }
+    merged.entrySet.iterator.asScala.flatMap { e =>
+      val (h, items) = e.getValue
+      h.sorted.iterator.zipWithIndex.map { case (n, i) =>
+        if (carry) Row(e.getKey, n.id, n.dist, i + 1, items.get(n.id))
+        else Row(e.getKey, n.id, n.dist, i + 1)
+      }
+    }
+  }
+
+  /** [[mergeSurvivors]] inside the lineage of a kernel's `partials`: the
+    * rows hash on their `query_id` value into at most `keys` partitions
+    * (and no more than the shuffle partitions), so ONE Spark job runs
+    * the kernel as its map stage and the merge as its result stage, and
+    * AQE plans neither. The merged RDD is named `topk_neighbors`, which
+    * the scan of the executed plan shows. The frame states its bound of
+    * `keys` × k rows, so a join downstream is sized from it as it was
+    * from the grouped aggregate's runtime size. */
+  private def mergeInJob(spark: SparkSession, partials: RDD[Row], k: Int,
+      keys: Int, schema: StructType): DataFrame = {
+    val carry = schema.fieldNames.contains("item")
+    val parts = math.max(1, math.min(keys,
+      spark.conf.get("spark.sql.shuffle.partitions").toInt))
+    val merged = partials.map(r => (r.get(0), r))
+      .partitionBy(new HashPartitioner(parts))
+      .mapPartitions { it =>
+        val toRow = CatalystTypeConverters.createToCatalystConverter(schema)
+        mergeSurvivors(k, carry)(it.map(_._2))
+          .map(r => toRow(r).asInstanceOf[InternalRow])
+      }
+      .setName("topk_neighbors")
+    val rows = BigInt(keys) * k
+    GraftShims.sizedRddFrame(spark, merged, schema, rows,
+      rows * schema.defaultSize)
+  }
+
   /** Exact top-k by the blocked kernel — the reference's batched BLAS
     * kernel (`basic.py:190-207`) on Spark terms, and the one exact top-k
     * body behind [[query]], [[selfJoin]], [[mmrRerank]]'s pool,
-    * `graft.index.ExactStrategy` and the LSH exhaustive disk read:
+    * `graft.index.ExactStrategy` and the LSH exhaustive disk read. One
+    * Spark job with two stages answers it:
     *  - the query side (`query_id`, `qvecCol`) is collected ONCE to
     *    primitive arrays and broadcast; a query frame that is a local
     *    relation (the facade's) costs no job;
     *  - each store partition reads its rows as `InternalRow`s and scores
     *    every row against [[Tile]] queries per pass, keeping one bounded
     *    heap per query — no per-pair row, no join;
-    *  - each partition emits its q × k survivors, which
-    *    [[TopK.topKPerGroup]] merges (shuffle volume q × k × partitions,
-    *    independent of the store size).
+    *  - each partition emits its q × k survivors, which [[mergeSurvivors]]
+    *    merges per `query_id` value in the same job ([[mergeInJob]];
+    *    shuffle volume q × k × partitions, independent of the store size).
     *
-    * Distances are `kernel`'s expression bits, and with `clip` they are
-    * clipped at 0 BEFORE selection (`greatest(raw, 0)`, fp-noise
-    * canonicalization for the metrics that are ≥ 0); without it the RAW
-    * signed value ranks (InnerProduct). Returns (query_id, id, dist, rank)
-    * with the output clip left to the caller. A null store vector scores
-    * nothing; a null query vector gets no rows; unequal lengths fail with
-    * the expressions' "vector dimension mismatch"; `excludeSelf` drops
+    * When `store` has an `item` column, the item of each row a heap
+    * admitted lands in the output as a last column, so the caller needs
+    * no store join for it; other rows never retain it. Distances are
+    * `kernel`'s expression bits, and with `clip` they are clipped at 0
+    * BEFORE selection (`greatest(raw, 0)`, fp-noise canonicalization for
+    * the metrics that are ≥ 0); without it the RAW signed value ranks
+    * (InnerProduct). Returns (query_id, id, dist, rank[, item]) with the
+    * output clip left to the caller. A null store vector scores nothing;
+    * a null query vector gets no rows; unequal lengths fail with the
+    * expressions' "vector dimension mismatch"; `excludeSelf` drops
     * candidate id == query id. */
   private[graft] def blockedTopK(store: DataFrame, queries: DataFrame,
       k: Int, kernel: Metric, clip: Boolean, vecCol: String = "vector",
       qvecCol: String = "qvector", excludeSelf: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     val spark = store.sparkSession
-    val bc = spark.sparkContext.broadcast(
-      collectBatch(queries, qvecCol, excludeSelf))
+    val batch = collectBatch(queries, qvecCol, excludeSelf)
+    val bc = spark.sparkContext.broadcast(batch)
+    val item = carriedItem(store)
+    val itemType = item.map(_.dataType)
     // widening to double is exact, as in the expressions' accessors
-    val src = store.select(col("id").cast("long"),
-      col(vecCol).cast("array<double>"))
+    val src = store.select(Seq(col("id").cast("long"),
+      col(vecCol).cast("array<double>")) ++ item.map(f => col(f.name)): _*)
     val m = kernel
     val partials = src.queryExecution.toRdd.mapPartitions { rows =>
       val b = bc.value
       val nq = b.vecs.length
       val heaps = Array.fill(nq)(new TopKHeap(k))
+      // a kept item leaves its InternalRow as its external value
+      val toItem = itemType.map(CatalystTypeConverters.createToScalaConverter)
+      val kept = if (toItem.isDefined) new java.util.HashMap[Long, Any]()
+        else null
       val out = new Array[Double](Tile)
       val exclude = if (excludeSelf) b.selfIds else null
       var v = new Array[Double](0)
       if (nq > 0) rows.foreach { r =>
         if (!r.isNullAt(0) && !r.isNullAt(1)) {
           v = readVector(r.getArray(1), v)
-          scoreRow(m, clip, r.getLong(0), v, b.vecs, b.norms, exclude,
-            heaps, out)
+          val id = r.getLong(0)
+          if (scoreRow(m, clip, id, v, b.vecs, b.norms, exclude, heaps, out))
+            toItem.foreach(f => kept.put(id, f(r.get(2, itemType.get))))
         }
       }
-      Iterator.range(0, nq).flatMap(qi =>
-        heaps(qi).sorted.iterator.map(n => Row(b.keys(qi), n.id, n.dist)))
+      survivors(b.keys, heaps, kept)
     }
-    val schema = StructType(Seq(
-      StructField("query_id", queries.schema("query_id").dataType),
-      StructField("id", LongType, nullable = false),
-      StructField("dist", DoubleType, nullable = false)))
-    TopK.topKPerGroup(spark.createDataFrame(partials, schema),
-      Seq("query_id"), "id", "dist", k)
+    mergeInJob(spark, partials, k, batch.vecs.length,
+      rankedSchema(queries.schema("query_id").dataType, item))
   }
 
   /** Exact top-k of each query over the rows of only the cells it probes:
@@ -769,15 +851,15 @@ object Knn {
     *    through [[scoreRow]] against only the queries that probe its
     *    cell, into per-query bounded heaps.
     *  - Each partition emits its survivors; an exchange on `query_id`
-    *    merges them into (query_id, id, dist, rank), rank 1-based by
-    *    (dist, id).
+    *    feeds them to [[mergeSurvivors]], giving (query_id, id, dist,
+    *    rank), rank 1-based by (dist, id).
     *
-    * The kernel runs inside the Dataset plan, so the executed plan keeps
-    * the pruned scan. `rows` holds (`id`, `vector`, `_centroid`); when it
-    * also has an `item` column, the item of each row a heap admitted
-    * lands in the output as a last column, and other rows never retain
-    * it. Distances are `kernel`'s expression bits, clipped at 0 before
-    * selection; a null vector scores nothing. */
+    * The kernel and the merge run inside the Dataset plan, so the
+    * executed plan keeps the pruned scan. `rows` holds (`id`, `vector`,
+    * `_centroid`); when it also has an `item` column, the item of each
+    * row a heap admitted lands in the output as a last column, and other
+    * rows never retain it. Distances are `kernel`'s expression bits,
+    * clipped at 0 before selection; a null vector scores nothing. */
   private[graft] def cellTopK(rows: DataFrame, queries: DataFrame, k: Int,
       kernel: Metric, probe: Array[Double] => Array[Int]): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -786,16 +868,13 @@ object Knn {
     val byCell: Map[Int, Array[Int]] = batch.vecs.indices
       .flatMap(qi => probe(batch.vecs(qi)).map(_ -> qi))
       .groupBy(_._1).map { case (c, qs) => c -> qs.map(_._2).toArray }
-    val hasCarry = rows.columns.contains("item")
-    val carried =
-      if (hasCarry) Seq(rows.schema("item").copy(nullable = true)) else Nil
+    val item = carriedItem(rows)
+    val carry = item.isDefined
     val src = rows
       .where(col("_centroid").isInCollection(byCell.keys.toSeq.sorted))
       .select(Seq(col("id").cast("long"), col("vector").cast("array<double>"),
-        col("_centroid").cast("int")) ++ carried.map(f => col(f.name)): _*)
-    val key = StructField("query_id", queries.schema("query_id").dataType)
-    val idDist = Seq(StructField("id", LongType, nullable = false),
-      StructField("dist", DoubleType, nullable = false))
+        col("_centroid").cast("int")) ++ item.map(f => col(f.name)): _*)
+    val keyType = queries.schema("query_id").dataType
     val bc = rows.sparkSession.sparkContext.broadcast((batch, byCell))
     val m = kernel
     val partials = src.mapPartitions { (it: Iterator[Row]) =>
@@ -804,7 +883,7 @@ object Knn {
       // a cell's sub-batch: its queries' vectors, Σq² and (shared) heaps
       val subs = scala.collection.mutable.HashMap.empty[Int,
         (Array[Array[Double]], Array[Double], Array[TopKHeap])]
-      val kept = new java.util.HashMap[Long, Any]()
+      val kept = if (carry) new java.util.HashMap[Long, Any]() else null
       val out = new Array[Double](Tile)
       it.foreach { r =>
         if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
@@ -813,31 +892,14 @@ object Knn {
               (qs.map(b.vecs), qs.map(b.norms), qs.map(heaps)))
             val id = r.getLong(0)
             if (scoreRow(m, clip = true, id, r.getSeq[Double](1).toArray, vs,
-                qq, null, hs, out) && hasCarry) kept.put(id, r.get(3))
+                qq, null, hs, out) && carry) kept.put(id, r.get(3))
           }
       }
-      heaps.indices.iterator.flatMap(qi => heaps(qi).sorted.iterator.map(n =>
-        Row.fromSeq(Seq(b.keys(qi), n.id, n.dist) ++
-          (if (hasCarry) Seq(kept.get(n.id)) else Nil))))
-    }(Encoders.row(StructType(key +: (idDist ++ carried))))
-    val ranked = StructType((key +: idDist) ++
-      (StructField("rank", IntegerType, nullable = false) +: carried))
-    partials.repartition(col("query_id")).mapPartitions { (it: Iterator[Row]) =>
-      val merged = new java.util.LinkedHashMap[Any,
-        (TopKHeap, java.util.HashMap[Long, Any])]()
-      it.foreach { r =>
-        val acc = merged.computeIfAbsent(r.get(0),
-          _ => (new TopKHeap(k), new java.util.HashMap[Long, Any]()))
-        if (acc._1.add(r.getLong(1), r.getDouble(2)) && hasCarry)
-          acc._2.put(r.getLong(1), r.get(3))
-      }
-      merged.entrySet.iterator.asScala.flatMap { e =>
-        val (h, items) = e.getValue
-        h.sorted.iterator.zipWithIndex.map { case (n, i) =>
-          Row.fromSeq(Seq(e.getKey, n.id, n.dist, i + 1) ++
-            (if (hasCarry) Seq(items.get(n.id)) else Nil))
-        }
-      }
-    }(Encoders.row(ranked))
+      survivors(b.keys, heaps, kept)
+    }(Encoders.row(StructType(rankedSchema(keyType, item).fields
+      .filter(_.name != "rank"))))
+    partials.repartition(col("query_id")).mapPartitions(
+      (it: Iterator[Row]) => mergeSurvivors(k, carry)(it))(
+      Encoders.row(rankedSchema(keyType, item)))
   }
 }

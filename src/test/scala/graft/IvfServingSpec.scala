@@ -1,11 +1,7 @@
 package graft
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.types._
 
 import graft.api.Vicinity
@@ -37,24 +33,6 @@ class IvfServingSpec extends SparkSpec {
 
   private def layoutDir(prefix: String): String =
     VerifyIO.scratchDir(prefix).resolve("index").toString
-
-  /** the short call sites of the jobs `body` runs */
-  private def jobSites[A](body: => A): (A, Seq[String]) = {
-    val sc = spark.sparkContext
-    GraftShims.drainListenerBus(sc)
-    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        sites.add(Option(e.properties)
-          .map(_.getProperty("callSite.short", "")).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      val r = body
-      GraftShims.drainListenerBus(sc)
-      (r, sites.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
 
   private def sidecar(dir: String) =
     java.nio.file.Paths.get(dir, "_ivf_serving_meta.json")

@@ -4,9 +4,10 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.core.Metric
+import graft.api.Vicinity
+import graft.core.{Backend, BackendArgs, Metric}
 import graft.functions.{TopK, VectorFunctions}
-import graft.index.ExactStrategy
+import graft.index.{ExactStrategy, IvfStrategy, LshStrategy}
 import graft.operators.Knn
 
 class KnnBlockedSpec extends SparkSpec {
@@ -313,5 +314,131 @@ class KnnBlockedSpec extends SparkSpec {
         .orderBy("rank").collect().map(_.getLong(2)).toSeq
     assert(picks(1.0) == Seq(10L, 11L, 12L))  // pure relevance keeps the dup
     assert(picks(0.5) == Seq(10L, 12L, 13L))  // diversified: dup demoted out
+  }
+
+  // ---- one job, item carried, one survivor merge ----
+
+  /** (query_id, qvector) as a local relation, ids 0.. */
+  private def localQueries(vs: Seq[Array[Double]]): DataFrame =
+    spark.createDataFrame(
+      java.util.Arrays.asList(vs.zipWithIndex.map { case (v, i) =>
+        Row(i.toLong, v.toSeq) }: _*),
+      StructType(Seq(StructField("query_id", LongType, nullable = false),
+        StructField("qvector", ArrayType(DoubleType, containsNull = false)))))
+
+  private lazy val itemNames = rows.indices.map(i => s"item$i")
+
+  test("a BASIC top-k read runs one Spark job with no join and no exchange") {
+    val vic = Vicinity.fromVectorsAndItems(spark, itemNames,
+      rows.map(_._2.toSeq))
+    val batch = localQueries(rows.take(24).map(_._2))
+    vic.queryDf(batch, 10).collect() // the prepared frame is cached
+    val (served, built) = jobSites(vic.queryDf(batch, 10))
+    assert(built.isEmpty, s"building the read ran jobs: $built")
+    val (got, ran) = jobSites(served.collect())
+    assert(ran.size === 1, s"a top-k read ran ${ran.size} jobs: $ran")
+    val plan = served.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join"), plan)
+    assert(!plan.contains("Exchange"), plan)
+    assert(got.length === 24 * 10)
+    assert(got.forall(r => r.getAs[String]("item") ==
+      itemNames(r.getAs[Long]("id").toInt)))
+  }
+
+  test("BASIC and FAISS flat serve the store-join items after insert and delete") {
+    val base = rows.take(160)
+    val more = rows.slice(160, 200)
+    val q = localQueries(rows.slice(150, 170).map(_._2))
+    val backends = Seq[(String, Backend, Option[BackendArgs])](
+      ("basic", Backend.Basic, None),
+      ("faiss-flat", Backend.Faiss,
+        Some(BackendArgs.FaissArgs(Metric.Euclidean, indexType = "flat"))))
+    for ((label, backend, args) <- backends) {
+      var vic = Vicinity.fromVectorsAndItems(spark, itemNames.take(160),
+        base.map(_._2.toSeq), backend, args)
+      def check(stage: String): Unit = {
+        val served = vic.queryDf(q, 7)
+        val joined = served.drop("item")
+          .join(vic.store.select("id", "item"), Seq("id"), "left")
+          .select("query_id", "id", "item", "dist", "rank").collect()
+        val got = served.collect()
+        assert(got.length === 20 * 7, s"$label $stage")
+        assert(got.toSet === joined.toSet, s"$label $stage")
+        assert(got.forall(_.getAs[String]("item") != null), s"$label $stage")
+      }
+      check("built")
+      vic = vic.insert(itemNames.slice(160, 200), more.map(_._2.toSeq))
+      check("inserted")
+      if (backend == Backend.Basic) {
+        // ids re-derive: every row past a deleted one moves down
+        vic = vic.delete(Seq("item3", "item155", "item170"))
+        check("deleted")
+        assert(!vic.queryDf(q, 7).collect()
+          .exists(r => Set("item3", "item155", "item170")
+            .contains(r.getAs[String]("item"))))
+      }
+    }
+  }
+
+  test("duplicate and null query_ids merge as the topKPerGroup reference merges them") {
+    val rnd = new scala.util.Random(23)
+    val ids = Seq(Some(0L), Some(1L), Some(1L), None, Some(2L), None, Some(1L))
+    val queries = spark.createDataFrame(java.util.Arrays.asList(
+        ids.map(i => Row(i.map(Long.box(_)).orNull,
+          Seq.fill(dim)(rnd.nextGaussian()))): _*),
+      StructType(Seq(StructField("query_id", LongType),
+        StructField("qvector", ArrayType(DoubleType)))))
+    val store = storeOf(DoubleType).where($"vector".isNotNull)
+    /** (query_id, id, dist bits, rank), null query_id as None */
+    def keyed(df: DataFrame) =
+      df.select("query_id", "id", "dist", "rank").collect()
+        .map(r => (Option(r.get(0)).map(_.asInstanceOf[Long]), r.getLong(1),
+          java.lang.Double.doubleToRawLongBits(r.getDouble(2)), r.getInt(3)))
+        .sortBy(r => (r._1.getOrElse(-1L), r._4)).toSeq
+    for (metric <- Seq(Metric.Cosine, Metric.InnerProduct, Metric.Euclidean)) {
+      val got = keyed(Knn.query(store, queries, 6, metric))
+      assert(got === keyed(crossJoinQuery(store, queries, 6, metric)),
+        metric.name)
+      assert(got.map(_._1).distinct.size === 4, "0, 1, 2 and null")
+      assert(got.count(_._1.isEmpty) === 6, "both null keys in one top-6")
+      val strat = ExactStrategy(metric)
+      val prepared = strat.prepare(store)
+      assert(keyed(strat.query(prepared, queries, 6)) ===
+        keyed(clipOut(joinReference(metric, prepared, queries, 6))),
+        s"ExactStrategy ${metric.name}")
+    }
+    // the IVF cell kernel merges through the same function: probing every
+    // cell makes it exact
+    val ivf = IvfStrategy(Metric.Euclidean, nlist = 4, nprobe = 4)
+    val prepared = ivf.prepare(store)
+    assert(keyed(ivf.query(prepared, queries, 6)) ===
+      keyed(crossJoinTopK(prepared, queries, 6, Metric.Euclidean,
+        clip = true)), "IvfStrategy")
+  }
+
+  test("Knn.query, selfJoin, mmrRerank and the LSH exhaustive read keep their columns when the store carries item") {
+    val withItem = storeOf(DoubleType).where($"vector".isNotNull)
+      .select($"id", concat(lit("item"), $"id").as("item"), $"vector")
+    val queries = localQueries(rows.take(5).map(_._2))
+    val selfQueries = withItem.where($"id" < 5)
+      .select($"id".as("query_id"), $"vector".as("qvector"))
+    val lsh = LshStrategy(Metric.Cosine, nTables = 4, nBits = 4)
+    val path = VerifyIO.scratchDir("graft_knn_lsh_cols")
+      .resolve("index").toString
+    lsh.writeServingIndex(lsh.prepare(withItem), path)
+    val ranked = Seq("query_id", "id", "dist", "rank")
+    Seq(
+      "Knn.query" -> (Knn.query(withItem, queries, 5, Metric.Cosine), ranked),
+      "Knn.selfJoin" -> (Knn.selfJoin(withItem, 3, Metric.Cosine), ranked),
+      "Knn.selfJoin grid" -> (Knn.selfJoin(withItem, 3, Metric.Cosine,
+        broadcastBytes = 1024), ranked),
+      "Knn.mmrRerank" -> (Knn.mmrRerank(withItem, selfQueries, pool = 10,
+        k = 3), Seq("query_id", "rank", "id", "score")),
+      "LshStrategy.queryExhaustiveFromDisk" ->
+        (lsh.queryExhaustiveFromDisk(spark, path, queries, 5), ranked)
+    ).foreach { case (name, (df, cols)) =>
+      assert(df.columns.toSeq === cols, name)
+      assert(df.collect().nonEmpty, name)
+    }
   }
 }

@@ -85,28 +85,15 @@ class ScaleFixesSpec extends SparkSpec {
   test("self-join driver actions stay constant at any block count (r2 #7/r3 #5)") {
     val df = vecDf(240, 8).cache()
     df.count()
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      // 240·8·8 B at a 1 KB budget => 16 blocks; the r2 slice loop ran
-      // ~2 driver actions per slice, the grid runs a constant 2 total
-      // (count/dim gate + the result action) at ANY block count
+    // 240·8·8 B at a 1 KB budget => 16 blocks; the r2 slice loop ran
+    // ~2 driver actions per slice, the grid runs a constant 2 total
+    // (count/dim gate + the result action) at ANY block count
+    val (_, jobs) = jobSites {
       val res = Knn.selfJoin(df, 2, Metric.Cosine, broadcastBytes = 1024)
       res.queryExecution.toRdd.foreach(_ => ())
-      // the listener bus is async: wait until the count is stable
-      var last = -1
-      var spins = 0
-      while (jobs.get != last && spins < 20) {
-        last = jobs.get; Thread.sleep(100); spins += 1
-      }
-      assert(jobs.get <= 4,
-        s"driver actions should be constant in block count, saw ${jobs.get}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(jobs.size <= 4,
+      s"driver actions should be constant in block count, saw $jobs")
   }
 
   test("selfJoinAuto: exact routes equal selfJoin; ANN route keeps recall") {

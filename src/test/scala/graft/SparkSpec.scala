@@ -1,6 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftshim.GraftShims
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites. */
@@ -17,4 +21,24 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf(name: String, dir: String = "/root/testdata/sf0.001"): org.apache.spark.sql.DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
+
+  /** `body`'s result and the short call sites of the Spark jobs it ran
+    * ("collect at X.scala:12"), one per job, in start order. A job's call
+    * site is the name of its result stage, the last stage it creates;
+    * job properties hold one only when the caller set it. */
+  def jobSites[A](body: => A): (A, Seq[String]) = {
+    val sc = spark.sparkContext
+    GraftShims.drainListenerBus(sc)
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        sites.add(e.stageInfos.maxBy(_.stageId).name)
+    }
+    sc.addSparkListener(listener)
+    try {
+      val r = body
+      GraftShims.drainListenerBus(sc)
+      (r, sites.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
 }
