@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -1112,12 +1113,19 @@ object Vicinity {
   private[api] lazy val jsonValidator = new ObjectMapper()
 
   /** Contiguous 0..n-1 id assignment — materializes the reference's
-    * positional index at ingest (SURVEY.md §1.4). */
+    * positional index at ingest (SURVEY.md §1.4): row i of `df`, in
+    * partition order, gets id i. The ids are assigned over `df`
+    * re-rooted on its own one-to-one shuffle ([[GraftShims.reroot]]),
+    * so the store's lineage is cut here, once per build: the first job
+    * (`zipWithIndex`'s count) writes `df`'s rows to shuffle files, the
+    * cache job and every later read task read them from there, and a
+    * read task carries a partition index, never the rows of a
+    * `parallelize`d source. */
   private[graft] def zipWithId(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val schema = StructType(
       StructField("id", LongType, nullable = false) +: df.schema.fields)
-    val rows = df.rdd.zipWithIndex.map { case (r, i) =>
+    val rows = GraftShims.reroot(df).rdd.zipWithIndex.map { case (r, i) =>
       Row.fromSeq(i +: r.toSeq)
     }
     spark.createDataFrame(rows, schema)
@@ -1222,6 +1230,13 @@ object Vicinity {
     }
   }
 
+  /** The one builder behind [[fromVectorsAndItems]], [[fromDataFrame]]
+    * and [[delete]]: `store` is (id, item, vector) from [[zipWithId]],
+    * so its lineage is rooted on a shuffle and the driver rows of a
+    * `parallelize`d source ship once per build. `store` and the
+    * strategy's prepared frame are cached; a read task over either
+    * carries only a partition index, and a cache that is evicted or
+    * cleared recomputes from the store's shuffle files. */
   private[api] def build(spark: SparkSession, store: DataFrame,
       backend: Backend, args: BackendArgs, metadata: Map[String, String],
       storeVectors: Boolean, strategy: IndexStrategy): Vicinity = {
@@ -1235,7 +1250,11 @@ object Vicinity {
   }
 
   /** ≙ `Vicinity.from_vectors_and_items` (`vicinity.py:74-102`). Items and
-    * vectors must be aligned (`vicinity.py:49-52`). */
+    * vectors must be aligned (`vicinity.py:49-52`). The pairs are
+    * parallelized, one partition per 10 000 of them, and take their
+    * positions as ids through [[zipWithId]], the path every build takes:
+    * the rows ship to the executors once, and a later read task carries
+    * none of them. */
   def fromVectorsAndItems(spark: SparkSession, items: Seq[String],
       vectors: Seq[Seq[Double]], backend: Backend = Backend.Basic,
       args: Option[BackendArgs] = None,
@@ -1244,17 +1263,15 @@ object Vicinity {
     if (items.length != vectors.length) throw new IllegalArgumentException(
       s"Your items and vectors must have the same length. " +
         s"Your items have length ${items.length}, and your vectors have length ${vectors.length}.")
-    val rows = items.zip(vectors).zipWithIndex.map { case ((it, v), i) =>
-      Row(i.toLong, it, v)
-    }
+    val rows = items.zip(vectors).map { case (it, v) => Row(it, v) }
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows, math.max(1, items.length / 10000)),
       StructType(Seq(
-        StructField("id", LongType, nullable = false),
         StructField("item", StringType, nullable = false),
         StructField("vector", ArrayType(DoubleType, containsNull = false)))))
     val a = args.getOrElse(BackendArgs.defaultFor(backend))
-    build(spark, df, backend, a, metadata, storeVectors, strategyFor(backend, a))
+    build(spark, zipWithId(df), backend, a, metadata, storeVectors,
+      strategyFor(backend, a))
   }
 
   /** DataFrame-first builder for at-scale ingest: any (item, vector) frame. */

@@ -2,10 +2,12 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.HashPartitioner
+import org.apache.spark.Partitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
+import org.apache.spark.sql.catalyst.expressions.BoundReference
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.graftshim.GraftShims
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -759,14 +761,25 @@ object Knn {
     * AQE plans neither. The merged RDD is named `topk_neighbors`, which
     * the scan of the executed plan shows. The frame states its bound of
     * `keys` × k rows, so a join downstream is sized from it as it was
-    * from the grouped aggregate's runtime size. */
+    * from the grouped aggregate's runtime size.
+    *
+    * A survivor goes to the partition Spark's own
+    * `HashPartitioning(query_id, n)` gives its row, pmod(murmur3(key,
+    * 42), n) over the key's catalyst value ([[QueryIdPartitioner]]), and
+    * the frame declares that partitioning: an aggregate or join on
+    * `query_id` over the answer reuses the merge's placement instead of
+    * adding an exchange, as it did over the grouped aggregate's. */
   private def mergeInJob(spark: SparkSession, partials: RDD[Row], k: Int,
       keys: Int, schema: StructType): DataFrame = {
     val carry = schema.fieldNames.contains("item")
     val parts = math.max(1, math.min(keys,
       spark.conf.get("spark.sql.shuffle.partitions").toInt))
-    val merged = partials.map(r => (r.get(0), r))
-      .partitionBy(new HashPartitioner(parts))
+    val keyType = schema("query_id").dataType
+    val merged = partials.mapPartitions { it =>
+        val toKey = CatalystTypeConverters.createToCatalystConverter(keyType)
+        it.map(r => (toKey(r.get(0)), r))
+      }
+      .partitionBy(new QueryIdPartitioner(keyType, parts))
       .mapPartitions { it =>
         val toRow = CatalystTypeConverters.createToCatalystConverter(schema)
         mergeSurvivors(k, carry)(it.map(_._2))
@@ -775,7 +788,19 @@ object Knn {
       .setName("topk_neighbors")
     val rows = BigInt(keys) * k
     GraftShims.sizedRddFrame(spark, merged, schema, rows,
-      rows * schema.defaultSize)
+      rows * schema.defaultSize, hashedOn = "query_id")
+  }
+
+  /** Places a catalyst value of `keyType` in the partition where
+    * `HashPartitioning(key, n)` places its row: pmod(murmur3(key, 42),
+    * n), a null key at pmod(42, n). */
+  private final class QueryIdPartitioner(keyType: DataType, n: Int)
+      extends Partitioner {
+    private val partitionId = HashPartitioning(
+      Seq(BoundReference(0, keyType, nullable = true)), n).partitionIdExpression
+    def numPartitions: Int = n
+    def getPartition(key: Any): Int =
+      partitionId.eval(InternalRow(key)).asInstanceOf[Int]
   }
 
   /** Exact top-k by the blocked kernel — the reference's batched BLAS

@@ -416,6 +416,30 @@ class KnnBlockedSpec extends SparkSpec {
         clip = true)), "IvfStrategy")
   }
 
+  test("the merged top-k sits where HashPartitioning(query_id) puts it and says so") {
+    val rnd = new scala.util.Random(5)
+    val keys = Seq("a", "b", null, "c", "d", "e", "f", "a")
+    val queries = spark.createDataFrame(java.util.Arrays.asList(
+        keys.map(key => Row(key, Seq.fill(dim)(rnd.nextGaussian()))): _*),
+      StructType(Seq(StructField("query_id", StringType),
+        StructField("qvector", ArrayType(DoubleType)))))
+    val store = storeOf(DoubleType).where($"vector".isNotNull)
+    val ranked = Knn.query(store, queries, 4, Metric.Euclidean)
+    val n = ranked.rdd.getNumPartitions
+    assert(n > 1)
+    // hash() is Murmur3 with seed 42, as HashPartitioning's
+    val misplaced = ranked.select(spark_partition_id().as("p"),
+        pmod(hash($"query_id"), lit(n)).as("want"))
+      .where($"p" =!= $"want").count()
+    assert(misplaced === 0)
+    val counted = ranked.groupBy("query_id").count()
+    val plan = counted.queryExecution.executedPlan.toString
+    assert(!plan.contains("Exchange"), plan)
+    assert(counted.collect().map(r => (Option(r.getString(0)), r.getLong(1)))
+      .toMap === Map(Some("a") -> 4L, Some("b") -> 4L, None -> 4L,
+        Some("c") -> 4L, Some("d") -> 4L, Some("e") -> 4L, Some("f") -> 4L))
+  }
+
   test("Knn.query, selfJoin, mmrRerank and the LSH exhaustive read keep their columns when the store carries item") {
     val withItem = storeOf(DoubleType).where($"vector".isNotNull)
       .select($"id", concat(lit("item"), $"id").as("item"), $"vector")
