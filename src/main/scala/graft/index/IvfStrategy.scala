@@ -528,9 +528,10 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
     * partition pruning, spec-asserted on the physical plan). A query
     * batch therefore reads ~nprobe/nlist of the index from storage:
     * FAISS's inverted-list pruning, with no resident index and no
-    * warm-up scan. A single-query read runs two Spark jobs, the pruned
-    * scan with its scoring and the survivor merge; the layout's `item`
-    * column rides out with the survivors. */
+    * warm-up scan. A single-query read runs one Spark job: the pruned
+    * scan with its scoring is the map stage of the `KnnTopK` node and the
+    * survivor merge its result stage; the layout's `item` column rides
+    * out with the survivors. */
   override def queryFromDisk(spark: org.apache.spark.sql.SparkSession,
       path: String, queries: DataFrame, k: Int): DataFrame =
     query(servingRows(spark, path, name), queries, k)
@@ -670,9 +671,12 @@ case class IvfStrategy(metric: Metric, nlist: Int = 100, nprobe: Int = 4,
     * when the rows carry one. Each query's nprobe nearest cells are
     * computed on the driver; the rows are pruned to their union and each
     * row is scored only against the queries that probe its cell, through
-    * `Knn`'s per-row step ([[graft.operators.Knn.cellTopK]]). Cosine is
-    * inner product over the pre-normalized vectors; distances clip at 0
-    * before selection. */
+    * `Knn`'s per-row step ([[graft.operators.Knn.cellTopK]]), in the map
+    * stage of one `KnnTopK` node whose merge runs in the same Spark job.
+    * The executed plan keeps the pruned scan beneath that node, and the
+    * node reports rows and pairs scored as SQL metrics. Cosine is inner
+    * product over the pre-normalized vectors; distances clip at 0 before
+    * selection. */
   def query(prepared: DataFrame, queries: DataFrame, k: Int): DataFrame =
     Knn.cellTopK(prepared, maybeNormalize(queries, "qvector"), k,
       if (metric == Metric.Cosine) Metric.InnerProduct else metric,

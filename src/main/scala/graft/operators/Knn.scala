@@ -1,14 +1,13 @@
 package graft.operators
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.Partitioner
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
-import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.BoundReference
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
-import org.apache.spark.sql.graftshim.GraftShims
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.execution.metric.SQLMetric
+import org.apache.spark.sql.graftshim.{GraftShims, KnnTopKStrategy, TopKKernel}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -21,16 +20,21 @@ import graft.functions.{TopK, TopKHeap, VectorFunctions}
   * (`/root/reference/vicinity/vicinity.py:114-165`).
   *
   * Physical shape (designed for a large store, small-to-medium query batch):
-  * top-k runs through one blocked kernel ([[blockedTopK]]): the query batch
-  * is collected once and broadcast as primitive arrays, each store
+  * every top-k is one logical node, `KnnTopK`
+  * (`org.apache.spark.sql.graftshim`), over the rows it scores; its
+  * strategy plans it into one exec that runs a map-side kernel over the
+  * child's partitions and merges the survivors in the same Spark job.
+  * Three kernels feed it: the blocked kernel ([[blockedTopK]]: the query
+  * batch is collected once and broadcast as primitive arrays, each store
   * partition scores its rows against the whole batch into per-query
-  * bounded heaps (see [[graft.functions.TopKHeap]]), and the store never
-  * shuffles — the only shuffled rows are `k × partitions` per query,
-  * which [[mergeSurvivors]] merges inside the kernel's own job. The IVF
-  * family's cell-scoped top-k ([[cellTopK]]) scores through the same
-  * per-row step and merges through the same function. Radius queries
-  * output every pair under the bound, so they keep the broadcast pair
-  * plan ([[radiusPairs]]).
+  * bounded heaps, see [[graft.functions.TopKHeap]]), the IVF family's
+  * cell-scoped kernel ([[cellTopK]]) and the grid self-join
+  * ([[gridSelfJoin]]). The store never shuffles: the only shuffled rows
+  * are `k × partitions` per query, sent to the partition
+  * `HashPartitioning(query_id)` gives them, which the answer declares.
+  * The exec counts rows scored, pairs scored and survivors shuffled as
+  * SQL metrics. Radius queries output every pair under the bound, so they
+  * keep the broadcast pair plan ([[radiusPairs]]).
   */
 object Knn {
 
@@ -263,10 +267,8 @@ object Knn {
 
   /** cells → a bounded partition count; multiple cells per partition are
     * fine (rows arrive sorted by cell, the kernels flush on cell change) */
-  private def gridPartitioner(spark: org.apache.spark.sql.SparkSession,
-      cells: Int) = {
-    val p = math.min(cells,
-      math.max(spark.sparkContext.defaultParallelism * 4, 64))
+  private def gridPartitioner(sc: SparkContext, cells: Int) = {
+    val p = math.min(cells, math.max(sc.defaultParallelism * 4, 64))
     new org.apache.spark.Partitioner {
       def numPartitions: Int = p
       def getPartition(key: Any): Int =
@@ -279,82 +281,20 @@ object Knn {
     * the slice iterator serialized thousands of collect+broadcast round
     * trips through the driver at scale). Rows hash into `b` id-blocks
     * whose vector payload fits the broadcast budget; the (query block,
-    * candidate block) grid is a b²-cell shuffle; within a cell the query
-    * block is buffered (≤ budget) and the candidate block STREAMS through
-    * the primitive kernel into one bounded heap per query; in the same
-    * job [[mergeSurvivors]] merges the b partial sets of the `keys`
-    * queries. Shuffle volume 2·n·b rows; task memory one block + heaps;
-    * driver actions CONSTANT in b. Compute
+    * candidate block) grid is a b²-cell shuffle ([[GridKernel]]); within
+    * a cell the query block is buffered (≤ budget) and the candidate
+    * block STREAMS through the primitive kernel into one bounded heap per
+    * query; the `KnnTopK` over it merges the b partial sets of the
+    * `keys` queries in the same job. Shuffle volume 2·n·b rows; task
+    * memory one block + heaps; driver actions CONSTANT in b. Compute
     * is still O(n²) by definition — the 100 TB similarity path is
     * `IvfStrategy.selfJoin` (see [[selfJoinAuto]]).
     */
   private def gridSelfJoin(df: DataFrame, k: Int, metric: Metric,
-      vecCol: String, b: Int, keys: Int): DataFrame = {
-    val spark = df.sparkSession
-    val m = metric
-    val nb = b
-    val data = df.select(col("id").cast("long"),
-        col(vecCol).cast("array<double>"))
-      .queryExecution.toRdd.flatMap { r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) None
-        else Some((r.getLong(0), r.getArray(1).toDoubleArray()))
-      }
-    // tag 0 = query copy (buffered), tag 1 = candidate copy (streamed);
-    // sort key (cell, tag, id) delivers a cell's queries before candidates
-    val keyed = data.flatMap { case (id, v) =>
-      val blk = blockOf(id, nb)
-      val asQ = Iterator.range(0, nb)
-        .map(cb => ((blk * nb + cb, 0: Byte, id), v))
-      val asC = Iterator.range(0, nb)
-        .map(qb => ((qb * nb + blk, 1: Byte, id), v))
-      asQ ++ asC
-    }
-    val partials = keyed
-      .repartitionAndSortWithinPartitions(gridPartitioner(spark, nb * nb))
-      .mapPartitions { it =>
-        // lazily stream one CELL at a time: peak task memory is one query
-        // block + its heaps, never the whole partition's output rows
-        new Iterator[Row] {
-          private val src = it.buffered
-          private var pending: Iterator[Row] = Iterator.empty
-          private val out = new Array[Double](Tile)
-          private def nextCell(): Unit = {
-            if (!src.hasNext) return
-            val cell = src.head._1._1
-            val qIds = scala.collection.mutable.ArrayBuffer.empty[java.lang.Long]
-            val qVecs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
-            while (src.hasNext && src.head._1._1 == cell && src.head._1._2 == 0) {
-              val ((_, _, id), v) = src.next()
-              qIds += id; qVecs += v
-            }
-            val ids = qIds.toArray
-            val vecs = qVecs.toArray
-            val norms = vecs.map(sumSq)
-            val heaps = Array.fill(vecs.length)(new TopKHeap(k))
-            while (src.hasNext && src.head._1._1 == cell) {
-              val ((_, _, id), v) = src.next()
-              // self-join: each query excludes the row itself
-              scoreRow(m, m != Metric.InnerProduct, id, v, vecs, norms, ids,
-                heaps, out)
-            }
-            pending = heaps.indices.iterator.flatMap { qi =>
-              heaps(qi).sorted.iterator.map(nbr =>
-                Row(ids(qi).longValue, nbr.id, nbr.dist))
-            }
-          }
-          def hasNext: Boolean = {
-            while (!pending.hasNext && src.hasNext) nextCell()
-            pending.hasNext
-          }
-          def next(): Row = {
-            if (!hasNext) throw new NoSuchElementException
-            pending.next()
-          }
-        }
-      }
-    clipOut(mergeInJob(spark, partials, k, keys,
-      rankedSchema(LongType, None)))
-  }
+      vecCol: String, b: Int, keys: Int): DataFrame =
+    clipOut(KnnTopKStrategy.frame(
+      df.select(col("id").cast("long"), col(vecCol).cast("array<double>")),
+      new GridKernel(k, metric, b), k, keys, rankedSchema(LongType, None)))
 
   /** k-NN self-join: for every row of `df`, its k nearest *other* rows.
     * The all-pairs similarity-join workhorse (dedup, graph building).
@@ -492,7 +432,8 @@ object Knn {
       }
       val t = threshold
       val matches = keyed
-        .repartitionAndSortWithinPartitions(gridPartitioner(spark, nb * nb))
+        .repartitionAndSortWithinPartitions(
+          gridPartitioner(spark.sparkContext, nb * nb))
         .mapPartitions { it =>
           var cell = -1
           var diagonal = false
@@ -681,9 +622,9 @@ object Knn {
   }
 
   /** The query batch of [[blockedTopK]] and [[cellTopK]], collected once:
-    * group keys as the frame holds them, their long view for
-    * `excludeSelf` (all null without it, and for a null key), vectors
-    * widened to double after any normalization, and each vector's Σq². */
+    * group keys as catalyst values, their long view for `excludeSelf`
+    * (all null without it, and for a null key), vectors widened to double
+    * after any normalization, and each vector's Σq². */
   private final case class QueryBatch(keys: Array[Any],
       selfIds: Array[java.lang.Long], vecs: Array[Array[Double]],
       norms: Array[Double])
@@ -694,12 +635,13 @@ object Knn {
       excludeSelf: Boolean): QueryBatch = {
     // the long view only for excludeSelf: any query_id type ranks
     val selfId = if (excludeSelf) col("query_id") else lit(null)
-    val qRows = queries
-      .select(col("query_id"), selfId.cast("long"),
-        col(qvecCol).cast("array<double>"))
-      .collect().filterNot(_.isNullAt(2))
-    val vecs = qRows.map(_.getSeq[Double](2).toArray)
-    QueryBatch(qRows.map(_.get(0)),
+    val keyType = queries.schema("query_id").dataType
+    val qRows = GraftShims.collectInternal(queries
+        .select(col("query_id"), selfId.cast("long"),
+          col(qvecCol).cast("array<double>")))
+      .filterNot(_.isNullAt(2))
+    val vecs = qRows.map(_.getArray(2).toDoubleArray())
+    QueryBatch(qRows.map(_.get(0, keyType)),
       qRows.map(r => if (r.isNullAt(1)) null else java.lang.Long.valueOf(r.getLong(1))),
       vecs, vecs.map(sumSq))
   }
@@ -723,147 +665,184 @@ object Knn {
     * a query's heap holds, plus the row's item from `kept` when `kept`
     * is not null. */
   private def survivors(keys: Array[Any], heaps: Array[TopKHeap],
-      kept: java.util.HashMap[Long, Any]): Iterator[Row] =
-    heaps.indices.iterator.flatMap(qi => heaps(qi).sorted.iterator.map(n =>
-      if (kept == null) Row(keys(qi), n.id, n.dist)
-      else Row(keys(qi), n.id, n.dist, kept.get(n.id))))
-
-  /** The one survivor merge of the top-k kernels, run on each partition
-    * of their survivors hashed on `query_id`: one bounded heap per
-    * `query_id` VALUE (duplicate keys merge into one heap and null keys
-    * into another, as a grouped aggregate merges them) and, with
-    * `carry`, the item of each row a heap admitted. Rows
-    * (query_id, id, dist[, item]) in; (query_id, id, dist, rank[, item])
-    * out, rank 1-based by (dist, id). */
-  private def mergeSurvivors(k: Int, carry: Boolean)(
-      it: Iterator[Row]): Iterator[Row] = {
-    val merged = new java.util.LinkedHashMap[Any,
-      (TopKHeap, java.util.HashMap[Long, Any])]()
-    it.foreach { r =>
-      val acc = merged.computeIfAbsent(r.get(0),
-        _ => (new TopKHeap(k), new java.util.HashMap[Long, Any]()))
-      if (acc._1.add(r.getLong(1), r.getDouble(2)) && carry)
-        acc._2.put(r.getLong(1), r.get(3))
-    }
-    merged.entrySet.iterator.asScala.flatMap { e =>
-      val (h, items) = e.getValue
-      h.sorted.iterator.zipWithIndex.map { case (n, i) =>
-        if (carry) Row(e.getKey, n.id, n.dist, i + 1, items.get(n.id))
-        else Row(e.getKey, n.id, n.dist, i + 1)
+      kept: java.util.HashMap[Long, Any]): Iterator[InternalRow] =
+    heaps.indices.iterator.flatMap { qi =>
+      val h = heaps(qi)
+      Iterator.range(0, h.size).map { i =>
+        val id = h.ids(i)
+        new GenericInternalRow(
+          if (kept == null) Array[Any](keys(qi), id, h.dists(i))
+          else Array[Any](keys(qi), id, h.dists(i), kept.get(id)))
       }
     }
+
+  /** [[blockedTopK]]'s map side: every row (id, vector[, item]) of a
+    * partition scored against the whole broadcast batch. */
+  private final class BlockedKernel(bc: Broadcast[QueryBatch], k: Int,
+      m: Metric, clip: Boolean, excludeSelf: Boolean,
+      itemType: Option[DataType]) extends TopKKernel {
+    override def toString: String = s"blocked ${m.name}"
+    def survivors(rows: RDD[InternalRow], rowsScored: SQLMetric,
+        pairsScored: SQLMetric): RDD[InternalRow] =
+      GraftShims.mapPartitionsInternal(rows) { it =>
+        val b = bc.value
+        val nq = b.vecs.length
+        val heaps = Array.fill(nq)(new TopKHeap(k))
+        val kept = if (itemType.isDefined) new java.util.HashMap[Long, Any]()
+          else null
+        val out = new Array[Double](Tile)
+        val exclude = if (excludeSelf) b.selfIds else null
+        var v = new Array[Double](0)
+        var scored = 0L
+        if (nq > 0) it.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1)) {
+            v = readVector(r.getArray(1), v)
+            val id = r.getLong(0)
+            scored += 1
+            if (scoreRow(m, clip, id, v, b.vecs, b.norms, exclude, heaps, out))
+              itemType.foreach(t =>
+                kept.put(id, InternalRow.copyValue(r.get(2, t))))
+          }
+        }
+        rowsScored.add(scored); pairsScored.add(scored * nq)
+        Knn.survivors(b.keys, heaps, kept)
+      }
   }
 
-  /** [[mergeSurvivors]] inside the lineage of a kernel's `partials`: the
-    * rows hash on their `query_id` value into at most `keys` partitions
-    * (and no more than the shuffle partitions), so ONE Spark job runs
-    * the kernel as its map stage and the merge as its result stage, and
-    * AQE plans neither. The merged RDD is named `topk_neighbors`, which
-    * the scan of the executed plan shows. The frame states its bound of
-    * `keys` × k rows, so a join downstream is sized from it as it was
-    * from the grouped aggregate's runtime size.
-    *
-    * A survivor goes to the partition Spark's own
-    * `HashPartitioning(query_id, n)` gives its row, pmod(murmur3(key,
-    * 42), n) over the key's catalyst value ([[QueryIdPartitioner]]), and
-    * the frame declares that partitioning: an aggregate or join on
-    * `query_id` over the answer reuses the merge's placement instead of
-    * adding an exchange, as it did over the grouped aggregate's. */
-  private def mergeInJob(spark: SparkSession, partials: RDD[Row], k: Int,
-      keys: Int, schema: StructType): DataFrame = {
-    val carry = schema.fieldNames.contains("item")
-    val parts = math.max(1, math.min(keys,
-      spark.conf.get("spark.sql.shuffle.partitions").toInt))
-    val keyType = schema("query_id").dataType
-    val merged = partials.mapPartitions { it =>
-        val toKey = CatalystTypeConverters.createToCatalystConverter(keyType)
-        it.map(r => (toKey(r.get(0)), r))
+  /** [[cellTopK]]'s map side: each row (id, vector, cell[, item]) scored
+    * against only the queries that probe its cell. */
+  private final class CellKernel(
+      bc: Broadcast[(QueryBatch, Map[Int, Array[Int]])], k: Int, m: Metric,
+      itemType: Option[DataType]) extends TopKKernel {
+    override def toString: String = s"cell ${m.name}"
+    def survivors(rows: RDD[InternalRow], rowsScored: SQLMetric,
+        pairsScored: SQLMetric): RDD[InternalRow] =
+      GraftShims.mapPartitionsInternal(rows) { it =>
+        val (b, cells) = bc.value
+        val heaps = Array.fill(b.vecs.length)(new TopKHeap(k))
+        // a cell's sub-batch: its queries' vectors, Σq² and (shared) heaps
+        val subs = scala.collection.mutable.HashMap.empty[Int,
+          (Array[Array[Double]], Array[Double], Array[TopKHeap])]
+        val kept = if (itemType.isDefined) new java.util.HashMap[Long, Any]()
+          else null
+        val out = new Array[Double](Tile)
+        var v = new Array[Double](0)
+        var scored = 0L
+        var pairs = 0L
+        it.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
+            cells.get(r.getInt(2)).foreach { qs =>
+              val (vs, qq, hs) = subs.getOrElseUpdate(r.getInt(2),
+                (qs.map(b.vecs), qs.map(b.norms), qs.map(heaps)))
+              v = readVector(r.getArray(1), v)
+              val id = r.getLong(0)
+              scored += 1; pairs += qs.length
+              if (scoreRow(m, clip = true, id, v, vs, qq, null, hs, out))
+                itemType.foreach(t =>
+                  kept.put(id, InternalRow.copyValue(r.get(3, t))))
+            }
+        }
+        rowsScored.add(scored); pairsScored.add(pairs)
+        Knn.survivors(b.keys, heaps, kept)
       }
-      .partitionBy(new QueryIdPartitioner(keyType, parts))
-      .mapPartitions { it =>
-        val toRow = CatalystTypeConverters.createToCatalystConverter(schema)
-        mergeSurvivors(k, carry)(it.map(_._2))
-          .map(r => toRow(r).asInstanceOf[InternalRow])
-      }
-      .setName("topk_neighbors")
-    val rows = BigInt(keys) * k
-    GraftShims.sizedRddFrame(spark, merged, schema, rows,
-      rows * schema.defaultSize, hashedOn = "query_id")
   }
 
-  /** Places a catalyst value of `keyType` in the partition where
-    * `HashPartitioning(key, n)` places its row: pmod(murmur3(key, 42),
-    * n), a null key at pmod(42, n). */
-  private final class QueryIdPartitioner(keyType: DataType, n: Int)
-      extends Partitioner {
-    private val partitionId = HashPartitioning(
-      Seq(BoundReference(0, keyType, nullable = true)), n).partitionIdExpression
-    def numPartitions: Int = n
-    def getPartition(key: Any): Int =
-      partitionId.eval(InternalRow(key)).asInstanceOf[Int]
+  /** [[gridSelfJoin]]'s map side over rows (id, vector): each row goes to
+    * its block's `b` cells as a query copy (tag 0, buffered) and to `b`
+    * cells as a candidate copy (tag 1, streamed); the sort key (cell,
+    * tag, id) delivers a cell's queries before its candidates. */
+  private final class GridKernel(k: Int, m: Metric, b: Int)
+      extends TopKKernel {
+    override def toString: String = s"grid ${m.name}, $b blocks"
+    def survivors(rows: RDD[InternalRow], rowsScored: SQLMetric,
+        pairsScored: SQLMetric): RDD[InternalRow] = {
+      val (nb, kk, mm) = (b, k, m)
+      val keyed = GraftShims.mapPartitionsInternal(rows)(_.flatMap { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) Iterator.empty
+        else {
+          val id = r.getLong(0)
+          val v = r.getArray(1).toDoubleArray()
+          val blk = blockOf(id, nb)
+          Iterator.range(0, nb).map(cb => ((blk * nb + cb, 0: Byte, id), v)) ++
+            Iterator.range(0, nb).map(qb => ((qb * nb + blk, 1: Byte, id), v))
+        }
+      })
+      val sorted = keyed.repartitionAndSortWithinPartitions(
+        gridPartitioner(rows.sparkContext, nb * nb))
+      // lazily stream one CELL at a time: peak task memory is one query
+      // block + its heaps, never the whole partition's output rows
+      GraftShims.mapPartitionsInternal(sorted) { it =>
+        val src = it.buffered
+        val out = new Array[Double](Tile)
+        Iterator.continually(src.hasNext).takeWhile(identity).flatMap { _ =>
+          val cell = src.head._1._1
+          val qIds = scala.collection.mutable.ArrayBuffer.empty[java.lang.Long]
+          val qVecs = scala.collection.mutable.ArrayBuffer.empty[Array[Double]]
+          while (src.hasNext && src.head._1._1 == cell && src.head._1._2 == 0) {
+            val ((_, _, id), v) = src.next()
+            qIds += id; qVecs += v
+          }
+          val ids = qIds.toArray
+          val vecs = qVecs.toArray
+          val norms = vecs.map(sumSq)
+          val heaps = Array.fill(vecs.length)(new TopKHeap(kk))
+          var scored = 0L
+          while (src.hasNext && src.head._1._1 == cell) {
+            val ((_, _, id), v) = src.next()
+            scored += 1
+            // self-join: each query excludes the row itself
+            scoreRow(mm, mm != Metric.InnerProduct, id, v, vecs, norms, ids,
+              heaps, out)
+          }
+          rowsScored.add(scored); pairsScored.add(scored * vecs.length)
+          Knn.survivors(ids.map(_.longValue: Any), heaps, null)
+        }
+      }
+    }
   }
 
   /** Exact top-k by the blocked kernel — the reference's batched BLAS
     * kernel (`basic.py:190-207`) on Spark terms, and the one exact top-k
     * body behind [[query]], [[selfJoin]], [[mmrRerank]]'s pool,
-    * `graft.index.ExactStrategy` and the LSH exhaustive disk read. One
-    * Spark job with two stages answers it:
+    * `graft.index.ExactStrategy` and the LSH exhaustive disk read. A
+    * `KnnTopK` over the store answers it in one Spark job with two
+    * stages:
     *  - the query side (`query_id`, `qvecCol`) is collected ONCE to
     *    primitive arrays and broadcast; a query frame that is a local
     *    relation (the facade's) costs no job;
     *  - each store partition reads its rows as `InternalRow`s and scores
     *    every row against [[Tile]] queries per pass, keeping one bounded
-    *    heap per query — no per-pair row, no join;
-    *  - each partition emits its q × k survivors, which [[mergeSurvivors]]
-    *    merges per `query_id` value in the same job ([[mergeInJob]];
-    *    shuffle volume q × k × partitions, independent of the store size).
+    *    heap per query — no per-pair row, no join ([[BlockedKernel]]);
+    *  - each partition ships its q × k survivors to the partition
+    *    `HashPartitioning(query_id)` gives them, where one heap per
+    *    `query_id` value merges them (shuffle volume q × k × partitions,
+    *    independent of the store size). The answer declares that
+    *    partitioning, so an aggregate or join on `query_id` over it adds
+    *    no exchange.
     *
     * When `store` has an `item` column, the item of each row a heap
     * admitted lands in the output as a last column, so the caller needs
-    * no store join for it; other rows never retain it. Distances are
-    * `kernel`'s expression bits, and with `clip` they are clipped at 0
-    * BEFORE selection (`greatest(raw, 0)`, fp-noise canonicalization for
-    * the metrics that are ≥ 0); without it the RAW signed value ranks
-    * (InnerProduct). Returns (query_id, id, dist, rank[, item]) with the
-    * output clip left to the caller. A null store vector scores nothing;
-    * a null query vector gets no rows; unequal lengths fail with the
-    * expressions' "vector dimension mismatch"; `excludeSelf` drops
-    * candidate id == query id. */
+    * no store join for it. Distances are `kernel`'s expression bits, and
+    * with `clip` they are clipped at 0 BEFORE selection (`greatest(raw,
+    * 0)`, fp-noise canonicalization for the metrics that are ≥ 0);
+    * without it the RAW signed value ranks (InnerProduct). Returns
+    * (query_id, id, dist, rank[, item]) with the output clip left to the
+    * caller. A null store vector scores nothing; a null query vector gets
+    * no rows; unequal lengths fail with the expressions' "vector
+    * dimension mismatch"; `excludeSelf` drops candidate id == query id. */
   private[graft] def blockedTopK(store: DataFrame, queries: DataFrame,
       k: Int, kernel: Metric, clip: Boolean, vecCol: String = "vector",
       qvecCol: String = "qvector", excludeSelf: Boolean = false): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    val spark = store.sparkSession
     val batch = collectBatch(queries, qvecCol, excludeSelf)
-    val bc = spark.sparkContext.broadcast(batch)
     val item = carriedItem(store)
-    val itemType = item.map(_.dataType)
     // widening to double is exact, as in the expressions' accessors
     val src = store.select(Seq(col("id").cast("long"),
       col(vecCol).cast("array<double>")) ++ item.map(f => col(f.name)): _*)
-    val m = kernel
-    val partials = src.queryExecution.toRdd.mapPartitions { rows =>
-      val b = bc.value
-      val nq = b.vecs.length
-      val heaps = Array.fill(nq)(new TopKHeap(k))
-      // a kept item leaves its InternalRow as its external value
-      val toItem = itemType.map(CatalystTypeConverters.createToScalaConverter)
-      val kept = if (toItem.isDefined) new java.util.HashMap[Long, Any]()
-        else null
-      val out = new Array[Double](Tile)
-      val exclude = if (excludeSelf) b.selfIds else null
-      var v = new Array[Double](0)
-      if (nq > 0) rows.foreach { r =>
-        if (!r.isNullAt(0) && !r.isNullAt(1)) {
-          v = readVector(r.getArray(1), v)
-          val id = r.getLong(0)
-          if (scoreRow(m, clip, id, v, b.vecs, b.norms, exclude, heaps, out))
-            toItem.foreach(f => kept.put(id, f(r.get(2, itemType.get))))
-        }
-      }
-      survivors(b.keys, heaps, kept)
-    }
-    mergeInJob(spark, partials, k, batch.vecs.length,
+    KnnTopKStrategy.frame(src,
+      new BlockedKernel(store.sparkSession.sparkContext.broadcast(batch), k,
+        kernel, clip, excludeSelf, item.map(_.dataType)),
+      k, batch.vecs.length,
       rankedSchema(queries.schema("query_id").dataType, item))
   }
 
@@ -874,17 +853,17 @@ object Knn {
     *  - `rows` is filtered to the union of the probed cells, which on a
     *    cell-partitioned layout is partition pruning. Each row is scored
     *    through [[scoreRow]] against only the queries that probe its
-    *    cell, into per-query bounded heaps.
-    *  - Each partition emits its survivors; an exchange on `query_id`
-    *    feeds them to [[mergeSurvivors]], giving (query_id, id, dist,
-    *    rank), rank 1-based by (dist, id).
+    *    cell, into per-query bounded heaps ([[CellKernel]]).
+    *  - A `KnnTopK` over the pruned rows merges the survivors per
+    *    `query_id` in the same Spark job, as [[blockedTopK]]'s do, giving
+    *    (query_id, id, dist, rank), rank 1-based by (dist, id).
     *
-    * The kernel and the merge run inside the Dataset plan, so the
-    * executed plan keeps the pruned scan. `rows` holds (`id`, `vector`,
-    * `_centroid`); when it also has an `item` column, the item of each
-    * row a heap admitted lands in the output as a last column, and other
-    * rows never retain it. Distances are `kernel`'s expression bits,
-    * clipped at 0 before selection; a null vector scores nothing. */
+    * The executed plan keeps the pruned scan under the `KnnTopK` node, and
+    * a single-query read runs one Spark job. `rows` holds (`id`,
+    * `vector`, `_centroid`); when it also has an `item` column, the item
+    * of each row a heap admitted lands in the output as a last column.
+    * Distances are `kernel`'s expression bits, clipped at 0 before
+    * selection; a null vector scores nothing. */
   private[graft] def cellTopK(rows: DataFrame, queries: DataFrame, k: Int,
       kernel: Metric, probe: Array[Double] => Array[Int]): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
@@ -894,37 +873,14 @@ object Knn {
       .flatMap(qi => probe(batch.vecs(qi)).map(_ -> qi))
       .groupBy(_._1).map { case (c, qs) => c -> qs.map(_._2).toArray }
     val item = carriedItem(rows)
-    val carry = item.isDefined
     val src = rows
       .where(col("_centroid").isInCollection(byCell.keys.toSeq.sorted))
       .select(Seq(col("id").cast("long"), col("vector").cast("array<double>"),
         col("_centroid").cast("int")) ++ item.map(f => col(f.name)): _*)
-    val keyType = queries.schema("query_id").dataType
-    val bc = rows.sparkSession.sparkContext.broadcast((batch, byCell))
-    val m = kernel
-    val partials = src.mapPartitions { (it: Iterator[Row]) =>
-      val (b, cells) = bc.value
-      val heaps = Array.fill(b.vecs.length)(new TopKHeap(k))
-      // a cell's sub-batch: its queries' vectors, Σq² and (shared) heaps
-      val subs = scala.collection.mutable.HashMap.empty[Int,
-        (Array[Array[Double]], Array[Double], Array[TopKHeap])]
-      val kept = if (carry) new java.util.HashMap[Long, Any]() else null
-      val out = new Array[Double](Tile)
-      it.foreach { r =>
-        if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2))
-          cells.get(r.getInt(2)).foreach { qs =>
-            val (vs, qq, hs) = subs.getOrElseUpdate(r.getInt(2),
-              (qs.map(b.vecs), qs.map(b.norms), qs.map(heaps)))
-            val id = r.getLong(0)
-            if (scoreRow(m, clip = true, id, r.getSeq[Double](1).toArray, vs,
-                qq, null, hs, out) && carry) kept.put(id, r.get(3))
-          }
-      }
-      survivors(b.keys, heaps, kept)
-    }(Encoders.row(StructType(rankedSchema(keyType, item).fields
-      .filter(_.name != "rank"))))
-    partials.repartition(col("query_id")).mapPartitions(
-      (it: Iterator[Row]) => mergeSurvivors(k, carry)(it))(
-      Encoders.row(rankedSchema(keyType, item)))
+    KnnTopKStrategy.frame(src,
+      new CellKernel(rows.sparkSession.sparkContext.broadcast((batch, byCell)),
+        k, kernel, item.map(_.dataType)),
+      k, batch.vecs.length,
+      rankedSchema(queries.schema("query_id").dataType, item))
   }
 }

@@ -1,24 +1,24 @@
 package org.apache.spark.sql.graftshim
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.{PartitionIdPassthrough, ShuffleDependency, SparkContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection}
-import org.apache.spark.sql.catalyst.plans.logical.Statistics
-import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
-import org.apache.spark.sql.execution.{LogicalRDD, ShuffledRowRDD, UnsafeRowSerializer}
-import org.apache.spark.sql.execution.metric.SQLShuffleReadMetricsReporter
+import org.apache.spark.sql.execution.{LogicalRDD, SQLExecution, ShuffledRowRDD, UnsafeRowSerializer}
+import org.apache.spark.sql.execution.metric.{SQLMetric, SQLShuffleReadMetricsReporter}
 import org.apache.spark.sql.types.StructType
 
 /** Minimal bridge to `private[sql]` Spark internals — the standard pattern
   * for Spark extension libraries that define custom Catalyst expressions
   * (Column <-> Expression conversion and session function registration are
-  * not exposed publicly in Spark 4.x) — to the `private[sql]` RDD-backed
-  * plan node that carries statistics, and to the `private[spark]`
-  * listener bus.
+  * not exposed publicly in Spark 4.x) — to the `private[spark]` shuffle
+  * and RDD pieces the top-k exec ([[KnnTopKExec]]) and [[reroot]] run on,
+  * and to the `private[spark]` listener bus.
   */
 object GraftShims {
   def column(e: Expression): Column = ExpressionUtils.column(e)
@@ -28,24 +28,6 @@ object GraftShims {
       builder: Seq[Expression] => Expression): Unit = {
     spark.sessionState.functionRegistry
       .createOrReplaceTempFunction(name, builder, "scala_udf")
-  }
-
-  /** A frame over `rows` (of `schema`) whose plan states at most
-    * `rowCount` rows of `sizeInBytes`, so the planner can size a join
-    * on it; an RDD-backed frame otherwise reports
-    * `spark.sql.defaultSizeInBytes`. The plan also states that `rows`
-    * is `HashPartitioning(hashedOn, partitions)`: row r sits in
-    * partition pmod(murmur3(r.hashedOn, 42), partitions), so an
-    * aggregate or join clustered on that column needs no exchange. The
-    * caller guarantees the placement. */
-  def sizedRddFrame(spark: SparkSession, rows: RDD[InternalRow],
-      schema: StructType, rowCount: BigInt, sizeInBytes: BigInt,
-      hashedOn: String): DataFrame = {
-    val session = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val attrs = DataTypeUtils.toAttributes(schema)
-    Dataset.ofRows(session, LogicalRDD(attrs, rows,
-      HashPartitioning(attrs.filter(_.name == hashedOn), rows.getNumPartitions))(
-      session, Some(Statistics(sizeInBytes, Some(rowCount)))))
   }
 
   /** `df` re-rooted on a one-to-one shuffle: map partition i writes its
@@ -69,14 +51,31 @@ object GraftShims {
       val toUnsafe = UnsafeProjection.create(schema)
       it.map(r => (i, toUnsafe(r): InternalRow))
     }
-    val dep = new ShuffleDependency[Int, InternalRow, InternalRow](keyed,
-      new PartitionIdPassthrough(rows.getNumPartitions),
-      new UnsafeRowSerializer(schema.length))
-    val shuffled = new ShuffledRowRDD(dep,
-      SQLShuffleReadMetricsReporter.createShuffleReadMetrics(
+    val shuffled = passthroughShuffle(keyed, rows.getNumPartitions,
+      schema.length, SQLShuffleReadMetricsReporter.createShuffleReadMetrics(
         session.sparkContext))
     Dataset.ofRows(session,
       LogicalRDD(DataTypeUtils.toAttributes(schema), shuffled)(session))
+  }
+
+  /** `rows` shuffled to `n` partitions: each (p, row) pair, its row an
+    * `UnsafeRow` of `fields` fields, goes to partition p. */
+  def passthroughShuffle(rows: RDD[(Int, InternalRow)], n: Int, fields: Int,
+      readMetrics: Map[String, SQLMetric]): ShuffledRowRDD =
+    new ShuffledRowRDD(new ShuffleDependency[Int, InternalRow, InternalRow](
+      rows, new PartitionIdPassthrough(n), new UnsafeRowSerializer(fields)),
+      readMetrics)
+
+  /** `rdd.mapPartitionsInternal(f)`: no closure cleaner runs on `f` */
+  def mapPartitionsInternal[T, U: ClassTag](rdd: RDD[T])(
+      f: Iterator[T] => Iterator[U]): RDD[U] = rdd.mapPartitionsInternal(f)
+
+  /** `df`'s rows as `InternalRow`s, collected as `Dataset.collect` collects
+    * them (one SQL execution), without the conversion to `Row`s. */
+  def collectInternal(df: DataFrame): Array[InternalRow] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("collect"))(
+      qe.executedPlan.executeCollect())
   }
 
   /** Blocks until every listener has seen every event posted so far. */

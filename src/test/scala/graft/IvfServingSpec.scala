@@ -37,7 +37,7 @@ class IvfServingSpec extends SparkSpec {
   private def sidecar(dir: String) =
     java.nio.file.Paths.get(dir, "_ivf_serving_meta.json")
 
-  test("a single-query IVF disk read runs at most two jobs and no schema inference") {
+  test("a single-query IVF disk read runs one job and no schema inference") {
     val dir = layoutDir("graft_ivf_jobs")
     val vic = ivfFacade()
     vic.writeServingIndex(dir)
@@ -48,8 +48,15 @@ class IvfServingSpec extends SparkSpec {
     val (served, built) = jobSites(grown.queryFromDiskDf(dir, q, k))
     assert(built.isEmpty, s"building the read ran jobs: $built")
     val (rows, ran) = jobSites(served.collect())
-    assert(ran.size <= 2, s"a single-query read ran ${ran.size} jobs: $ran")
+    assert(ran.size === 1, s"a single-query read ran ${ran.size} jobs: $ran")
     assert(!ran.exists(_.startsWith("parquet at")), s"schema inference: $ran")
+    // the cell-pruned layout scan runs beneath the top-k node
+    val topK = served.queryExecution.executedPlan.collectFirst {
+      case t: org.apache.spark.sql.graftshim.KnnTopKExec => t }
+    assert(topK.isDefined, served.queryExecution.executedPlan)
+    val cellScans = fileScans(topK.get).filter(_.partitionFilters
+      .exists(_.references.exists(_.name == "_centroid")))
+    assert(cellScans.nonEmpty, s"no _centroid-filtered scan under ${topK.get}")
     assert(rows.length === k)
     assert(rows.head.getAs[Long]("id") === 3L)
     assert(rows.forall(r => r.getAs[String]("item") ==

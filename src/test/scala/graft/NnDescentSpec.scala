@@ -185,8 +185,6 @@ class NnDescentSpec extends SparkSpec {
 
   test("disk serving (verdict r13 #2): disk walk == memory walk; reader " +
       "adopts writer config; hop reads prune and push; filtered/exact") {
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val labeled = sf("embeddings")
       .select(col("vec_id").as("id"),
         col("embedding").cast("array<double>").as("vector"), col("label"))
@@ -226,14 +224,6 @@ class NnDescentSpec extends SparkSpec {
     val flDskDf = strat.queryFilteredFromDisk(spark, path, q, 10, pred)
     assert(flDskDf.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       === flMem, "disk filtered != in-memory filtered")
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        fileScans(qs.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(fileScans) ++
-        other.subqueries.flatMap(fileScans)
-    }
     assert(fileScans(flDskDf.queryExecution.executedPlan)
         .exists(s => s.metadata.get("PushedFilters")
           .exists(_.contains("label"))),

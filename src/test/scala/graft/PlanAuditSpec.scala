@@ -120,7 +120,7 @@ class PlanAuditSpec extends SparkSpec {
   private def unboundedHintedBroadcasts(plan: String): Seq[String] = {
     val limiter = Seq(
       "keys=\\[\\]",                       // scalar agg -> 1 row
-      "topk",                              // bounded-heap top-k agg
+      "topk|KnnTopK",                      // bounded-heap top-k agg or node
       "GlobalLimit|LocalLimit|CollectLimit|TakeOrderedAndProject",
       // literal comparison on a KNOWN key/selective column (doc_id/vec_id
       // point or range selections; term = the 3-word query-term selection
@@ -160,16 +160,21 @@ class PlanAuditSpec extends SparkSpec {
     // through a per-query rank Window. They all rank through the TopK
     // bounded-heap aggregate now (TopK.topNByScore or Knn.query, map-side
     // partial), so the physical plan must contain ZERO Window operators
-    // of any kind.
+    // of any kind. Each query names the top-k operators it ranks through:
+    // the TopK aggregate (`topk_neighbors`) and/or Knn's `KnnTopK` node.
     val dir = "/root/testdata/sf0.001"
-    Seq("q_bm25", "q_rrf_fusion", "q_retrieval_overlap", "q_hybrid_fusion",
-        "q_hash_embed_knn", "q_maxsim", "q_maxsim_pruned").foreach { name =>
+    val agg = "topk_neighbors"
+    val knn = "KnnTopK"
+    Seq("q_bm25" -> Seq(agg), "q_rrf_fusion" -> Seq(agg, knn),
+        "q_retrieval_overlap" -> Seq(agg, knn), "q_hybrid_fusion" -> Seq(agg),
+        "q_hash_embed_knn" -> Seq(knn), "q_maxsim" -> Seq(agg),
+        "q_maxsim_pruned" -> Seq(agg, knn)).foreach { case (name, ops) =>
       val plan = Queries.queryMap(name)(spark, dir)
         .queryExecution.executedPlan.toString
       assert(!plan.contains("Window"),
         s"$name plans a Window operator again")
-      assert(plan.contains("topk_neighbors"),
-        s"$name no longer ranks through the TopK aggregate")
+      ops.foreach(op => assert(plan.contains(op),
+        s"$name no longer ranks through $op"))
     }
   }
 

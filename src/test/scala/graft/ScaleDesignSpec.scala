@@ -197,8 +197,6 @@ class ScaleDesignSpec extends SparkSpec {
 
   test("disk-resident IVF serving prunes unprobed cell partitions") {
     import graft.index.IvfStrategy
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val store = sf("embeddings")
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("vector"))
     val strat = IvfStrategy(graft.core.Metric.Cosine, nlist = 16, nprobe = 4)
@@ -215,16 +213,6 @@ class ScaleDesignSpec extends SparkSpec {
     // and the scan only touched the probed cell DIRECTORIES: the probe
     // set arrives as a partition filter, so the partitioned scan's
     // selected partitions are the probed cells, not all nlist of them
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      // AQE materializes stages as LEAF nodes (children = Nil): the real
-      // subtree hangs off .plan
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        fileScans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(fileScans) ++
-        other.subqueries.flatMap(fileScans)
-    }
     val indexScans = fileScans(fromDisk.queryExecution.executedPlan)
       .filter(_.relation.partitionSchema.fieldNames.contains("_centroid"))
     assert(indexScans.nonEmpty, "no partitioned scan of the disk index found")
@@ -240,8 +228,6 @@ class ScaleDesignSpec extends SparkSpec {
 
   test("filtered IVF disk serving: predicate pushed to the scan, cells pruned, pre-filter exact") {
     import graft.index.IvfStrategy
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val store = sf("embeddings")
       .select($"vec_id".as("id"),
         $"embedding".cast("array<double>").as("vector"), $"label")
@@ -259,14 +245,6 @@ class ScaleDesignSpec extends SparkSpec {
     // frame BEFORE the kernel at the same nprobe
     val mem = strat.query(prepared.where(pred), queries, 10).collect().toSet
     assert(fromDisk.collect().toSet === mem)
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        fileScans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(fileScans) ++
-        other.subqueries.flatMap(fileScans)
-    }
     val indexScans = fileScans(fromDisk.queryExecution.executedPlan)
       .filter(_.relation.partitionSchema.fieldNames.contains("_centroid"))
     assert(indexScans.nonEmpty, "no partitioned scan of the disk index found")
@@ -285,8 +263,6 @@ class ScaleDesignSpec extends SparkSpec {
   test("disk-resident LSH serving: probe keys prune postings partitions, " +
       "disk == memory decision for decision (verdict r12 #4)") {
     import graft.index.LshStrategy
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val store = sf("embeddings")
       .select($"vec_id".as("id"),
         $"embedding".cast("array<double>").as("vector"), $"label")
@@ -303,14 +279,6 @@ class ScaleDesignSpec extends SparkSpec {
     val mem = strat.query(prepared, queries, 10).collect().toSet
     assert(fromDisk.collect().toSet === mem,
       "LSH disk serving != in-memory LSH")
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        fileScans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(fileScans) ++
-        other.subqueries.flatMap(fileScans)
-    }
     val postScans = fileScans(fromDisk.queryExecution.executedPlan)
       .filter(_.relation.partitionSchema.fieldNames.contains("_pk"))
     assert(postScans.nonEmpty, "no partitioned scan of the postings found")
@@ -876,8 +844,6 @@ class ScaleDesignSpec extends SparkSpec {
 
   test("quantized disk serving scans probed cells only, and never the raw vectors") {
     import graft.index.IvfSq8Strategy
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val store = sf("embeddings")
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("vector"))
     val strat = IvfSq8Strategy(graft.core.Metric.Euclidean, nlist = 16,
@@ -892,14 +858,6 @@ class ScaleDesignSpec extends SparkSpec {
     val fromDisk = strat.queryFromDisk(spark, path, queries, 10)
     val mem = strat.query(prepared, queries, 10).collect().toSet
     assert(fromDisk.collect().toSet === mem)
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        fileScans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(fileScans) ++
-        other.subqueries.flatMap(fileScans)
-    }
     val indexScans = fileScans(fromDisk.queryExecution.executedPlan)
       .filter(_.relation.partitionSchema.fieldNames.contains("_centroid"))
     assert(indexScans.nonEmpty, "no partitioned scan of the disk index found")
@@ -954,8 +912,6 @@ class ScaleDesignSpec extends SparkSpec {
       "directory level with _gen nested above _centroid; appends only " +
       "widen the probed cells") {
     import graft.index.IvfStrategy
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val store = sf("embeddings")
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("vector"))
     val strat = IvfStrategy(graft.core.Metric.Cosine, nlist = 16, nprobe = 4)
@@ -970,14 +926,6 @@ class ScaleDesignSpec extends SparkSpec {
       .select($"id".as("query_id"), $"vector".as("qvector"))
     val served = strat.queryFromDisk(spark, path, queries, 5)
     served.collect()
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        fileScans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(fileScans) ++
-        other.subqueries.flatMap(fileScans)
-    }
     val scans = fileScans(served.queryExecution.executedPlan)
       .filter(_.relation.partitionSchema.fieldNames.contains("_centroid"))
     assert(scans.nonEmpty, "no cell-partitioned scan found")
@@ -1075,8 +1023,6 @@ class ScaleDesignSpec extends SparkSpec {
   test("flat-codes disk serving (r16): the coarse scan reads codes, never " +
       "the raw vectors; the layout scans as a (_gen, _nb)-partitioned table") {
     import graft.index.{CodesLayout, Sq8Strategy}
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val store = sf("embeddings")
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("vector"))
       .where($"id" < 200)
@@ -1092,14 +1038,6 @@ class ScaleDesignSpec extends SparkSpec {
     val served = strat.queryFromDisk(spark, path, queries, 5)
     assert(served.collect().toSet
       === strat.query(prepared, queries, 5).collect().toSet)
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        fileScans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(fileScans) ++
-        other.subqueries.flatMap(fileScans)
-    }
     val scans = fileScans(served.queryExecution.executedPlan)
       .filter(_.relation.partitionSchema.fieldNames.contains("_nb"))
     assert(scans.nonEmpty, "no bucketed scan of the codes layout found")
@@ -1138,8 +1076,6 @@ class ScaleDesignSpec extends SparkSpec {
   test("MIH disk serving: probe buckets prune partitions, values push into the scan") {
     import graft.core.Metric
     import graft.index.BqStrategy
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val store = sf("embeddings")
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("vector"))
     val strat = BqStrategy(Metric.Cosine, rerank = false)
@@ -1156,14 +1092,6 @@ class ScaleDesignSpec extends SparkSpec {
     val mem = strat.mihRadius(prepared, queries, 23, 50, chunkBits = 8)
       .collect().toSet
     assert(fromDisk.collect().toSet === mem.map(r => r))
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        fileScans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(fileScans) ++
-        other.subqueries.flatMap(fileScans)
-    }
     val idxScans = fileScans(fromDisk.queryExecution.executedPlan)
       .filter(_.relation.location.rootPaths.exists(
         _.toString.contains("graft_mihdisk")))
@@ -1186,8 +1114,6 @@ class ScaleDesignSpec extends SparkSpec {
 
   test("matryoshka disk serving: coarse scan never reads the full vectors") {
     import graft.operators.Knn
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val store = sf("embeddings")
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("vector"))
     val queries = store.where($"id" < 3)
@@ -1201,14 +1127,6 @@ class ScaleDesignSpec extends SparkSpec {
     val mem = Knn.matryoshkaRerank(store, queries, 16, 40, 10)
       .collect().toSet
     assert(fromDisk.collect().toSet === mem)
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        fileScans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(fileScans) ++
-        other.subqueries.flatMap(fileScans)
-    }
     val idxScans = fileScans(fromDisk.queryExecution.executedPlan)
       .filter(_.relation.location.rootPaths.exists(_.toString.contains("graft_mrldisk")))
     assert(idxScans.nonEmpty, "no scan of the matryoshka layout found")
@@ -1227,8 +1145,6 @@ class ScaleDesignSpec extends SparkSpec {
 
   test("HNSW disk serving: disk walk == memory walk; hop reads prune and push") {
     import graft.index.HnswStrategy
-    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
-    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
     val store = sf("embeddings")
       .select($"vec_id".as("id"), $"embedding".cast("array<double>").as("vector"))
     val queries = store.where($"id" < 5)
@@ -1259,14 +1175,6 @@ class ScaleDesignSpec extends SparkSpec {
     val narrow = graft.index.GraphLayout.prunedRead(spark, path, "vectors",
       "id", Array(1L, 17L), 16, Seq("id", "vector"))
     assert(narrow.count() == 2)
-    def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-        fileScans(q.plan)
-      case f: FileSourceScanExec => Seq(f)
-      case other => other.children.flatMap(fileScans) ++
-        other.subqueries.flatMap(fileScans)
-    }
     val scans = fileScans(narrow.queryExecution.executedPlan)
       .filter(_.relation.location.rootPaths.exists(
         _.toString.contains("graft_hnswdisk")))

@@ -4,6 +4,8 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.graftshim.GraftShims
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -21,6 +23,18 @@ abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.spark
   def sf(name: String, dir: String = "/root/testdata/sf0.001"): org.apache.spark.sql.DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
+
+  /** The file scans of an executed plan: through adaptive plans, their
+    * query stages (AQE materializes a stage as a LEAF node; its subtree
+    * hangs off `.plan`), subqueries and every operator's children, the
+    * `KnnTopK` exec's pruned scan included. */
+  def fileScans(p: SparkPlan): Seq[FileSourceScanExec] = p match {
+    case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
+    case q: QueryStageExec => fileScans(q.plan)
+    case f: FileSourceScanExec => Seq(f)
+    case other => other.children.flatMap(fileScans) ++
+      other.subqueries.flatMap(fileScans)
+  }
 
   /** `body`'s result and the short call sites of the Spark jobs it ran
     * ("collect at X.scala:12"), one per job, in start order. A job's call
